@@ -44,8 +44,6 @@ import math
 import os
 import shutil
 import time
-from collections import Counter
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -53,8 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import spread_input
-from ..tokenizer import tokenize_py, tokens_col
+from ..tokenizer import tokens_col
 from .codec import varbyte_encode, varbyte_encode_with_lengths
 
 BLOCK = 128
@@ -108,22 +105,9 @@ def corpus_stats(doclen: DataFrame) -> tuple[int, float]:
     return int(row["n"]), float(row["avgdl"] or 0.0)
 
 
-def term_stats(postings: DataFrame) -> DataFrame:
-    """(term, df) global document frequency — small (vocabulary-sized)."""
-    return postings.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-
-
 # --------------------------------------------------------------------------
 # BM25 impact math shared by build / merge / query
 # --------------------------------------------------------------------------
-
-def _impact(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
-    """Per-posting BM25 impact (idf excluded — applied at query time):
-    tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)). Monotone increasing in tf,
-    decreasing in dl, exact float64."""
-    tf = tf.astype(np.float64)
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-
 
 def block_upper_bound(max_tf, min_dl, avgdl: float):
     """Safe block score upper bound (idf excluded), computed at QUERY time
@@ -309,144 +293,25 @@ def _assemble_segment(seg_id: int, doc_ids_sorted: np.ndarray,
     return pd.DataFrame(out_rows, columns=_SEG_COLS)
 
 
-def _pairs_segment_frame(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Encoding kernel (applyInPandas, grouped by the segment ROUTE key —
-    seg_id rides as a column): input is the COMPACT pair stream —
-    (seg_id, term, doc_id, cnt) where term rows carry tf and term-NULL rows
-    mark doc membership (one zero row per doc, so empty docs still exist).
-    Tokenization and counting already happened JVM-side (whole-stage codegen
-    explode + hash agg with map-side combine), so the Python bridge moves
-    index-sized data — never the corpus text. Doc lengths are Σtf per doc
-    (the same tokenizer counted both, so the sums ARE the token counts —
-    byte-identical segments, pinned by the kernel differential test), which
-    lets the pair stream skip a second corpus-wide tokenize pass for
-    lengths. At 10^12 docs this is the difference between shipping ~PBs vs
-    ~TBs into Python workers — and tokenizing the corpus once, not twice."""
-    t0 = time.monotonic()
-    dl_rows = pdf[pdf["term"].isna()]
-    seg_id = int(dl_rows["seg_id"].iloc[0]) if len(dl_rows) else int(
-        pdf["seg_id"].iloc[0])
-    term_rows = pdf[pdf["term"].notna()]
-    docs_sorted = np.sort(dl_rows["doc_id"].to_numpy(dtype=np.int64))
-    fmask = term_rows["term"].str.contains(":", regex=False)  # "f:tok" rows
-    field_sidecars = {}
-    if fmask.any():
-        frows = term_rows[fmask]
-        fkey = frows["term"].str.split(":", n=1).str[0] + ":"
-        for fterm, grp in frows.groupby(fkey, sort=True):
-            s = grp.groupby("doc_id")["cnt"].sum().sort_index()
-            field_sidecars[str(fterm)] = (
-                s.index.to_numpy(dtype=np.int64),
-                s.to_numpy(dtype=np.int64))
-        main_rows = term_rows[~fmask]
-    else:
-        main_rows = term_rows
-    dls_sorted = (
-        main_rows.groupby("doc_id")["cnt"].sum()
-        .reindex(docs_sorted, fill_value=0)
-        .to_numpy(dtype=np.int64))
-    cols = ["term", "doc_id", "cnt"] + (["poss"] if "poss" in pdf.columns else [])
-    tf = (
-        term_rows[cols]
-        .rename(columns={"cnt": "tf"})
-        .sort_values(["term", "doc_id"], kind="stable")
-    )
-    return segment_frame(seg_id, docs_sorted, dls_sorted, tf,
-                         time.monotonic() - t0,
-                         field_sidecars=field_sidecars or None)
-
-
-def _pair_stream(base: DataFrame, num_segments: int,
-                 positions: bool = False,
-                 analyzed_fields: tuple[str, ...] = ()) -> DataFrame:
-    """(seg_id, term, doc_id, cnt[, poss]): per-(term,doc) tf rows + one
-    term-NULL membership row per doc — all JVM-side (tokenize via codegen
-    split/filter; one shuffle with partial aggregation collapsing duplicate
-    tokens map-side). Doc LENGTHS are not computed here: the encoding kernel
-    derives dl = Σtf per doc from the tf rows it already holds (same
-    tokenizer ⇒ same counts), so the corpus text is tokenized exactly ONCE —
-    the membership rows only exist so zero-token docs still enter the doc
-    table (3 ints/doc, negligible next to the pair stream).
-
-    With ``positions=True`` the explode keeps each token's array index
-    (posexplode) and the agg carries ``sort_array(collect_list(pos))`` — the
-    shuffle grows from O(distinct (term,doc) pairs) to O(total tokens), which
-    is inherent to a positional index (positions ARE O(tokens) of payload;
-    Lucene pays the same in .prx). Non-positional indexes keep the compact
-    shuffle, so builds that never serve phrase queries pay nothing.
-
-    ``analyzed_fields`` adds Lucene-style PER-FIELD terms: each extra text
-    column is analyzed with the same tokenizer and its terms land in the
-    same dictionary as ``field:token`` entries (the ':' cannot collide with
-    main-text terms, which are [a-z0-9]+). Positions are the field's own
-    token offsets, so per-field phrases intersect exactly like main-text
-    phrases. Per-field terms do NOT contribute to the MAIN doclen — each
-    field gets its own norm sidecar (dl = Σ field-tf in the kernel), Lucene's
-    per-field .nvd length normalization."""
-    # a single-row-group source otherwise tokenizes + partial-aggregates the
-    # whole corpus on ONE task before the first exchange (guide §2/§6);
-    # no-op whenever the scan already has ≥cores splits
-    base = spread_input(base)
-    seg = (F.col("doc_id") % num_segments).cast("int").alias("seg_id")
-    dl = base.select(
-        seg, F.lit(None).cast("string").alias("term"), F.col("doc_id"),
-        F.lit(0).cast("long").alias("cnt"),
-    )
-
-    def tf_of(col: str, prefix: str) -> DataFrame:
-        if positions:
-            toks = base.select(
-                seg, F.col("doc_id"),
-                F.posexplode(tokens_col(col)).alias("pos", "tok"),
-            )
-            grouped = toks.groupBy("seg_id", "tok", "doc_id").agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sort_array(
-                    F.collect_list(F.col("pos").cast("int"))).alias("poss"),
-            )
-        else:
-            toks = base.select(seg, F.col("doc_id"),
-                               F.explode(tokens_col(col)).alias("tok"))
-            grouped = toks.groupBy("seg_id", "tok", "doc_id").agg(
-                F.count("*").cast("long").alias("cnt"))
-        term = (F.concat(F.lit(prefix), F.col("tok")) if prefix
-                else F.col("tok")).alias("term")
-        cols = ["seg_id", term, "doc_id", "cnt"] + (
-            ["poss"] if positions else [])
-        return grouped.select(*cols)
-
-    tf = tf_of("text", "")
-    for f in analyzed_fields:
-        # per-field doclens (Lucene's .nvd norms) also come from Σtf in the
-        # kernel: a doc has a field-norm row iff it has ≥1 "f:tok" tf row —
-        # exactly the old `.where(cnt > 0)` stream, without re-tokenizing
-        tf = tf.unionByName(tf_of(f.lower(), f.lower() + ":"))
-    if positions:
-        dl = dl.withColumn("poss", F.lit(None).cast("array<int>"))
-        return tf.unionByName(dl)
-    return tf.unionByName(dl)
-
-
 def _text_segment_kernel(analyzed_fields: tuple[str, ...] = (),
                          positions: bool = True):
-    """applyInPandas kernel (grouped by seg_id) over raw (seg_id, doc_id,
-    text[, fields...]) rows: tokenize, invert (with positions when
-    ``positions``), and encode entirely inside the worker — the production
-    build path for both index shapes.
+    """applyInPandas kernel (grouped by the segment route key) over raw
+    (seg_id, doc_id, text[, fields...]) rows: tokenize, invert (with
+    positions when ``positions``), and encode entirely inside the worker —
+    the build path for both index shapes.
 
-    Scale rationale (measured round 5, BENCH.md): a positional index's
-    payload is O(total tokens). Shipping that through a shuffle as
-    (term, doc, positions) rows costs ~4× the corpus bytes (term strings
-    re-shipped per posting + sort spill), while shipping the TEXT once in
-    the doc→segment repartition costs ~1× corpus bytes — the Lucene shape
-    (documents route to a shard; the shard's writer tokenizes and builds
-    its own .prx). Non-positional builds keep the opposite trade
-    (_pair_stream: compact JVM-aggregated pairs ≪ text — perf lesson from
-    round 1). Inside the kernel everything is C-path: vectorized findall,
-    one np.unique for the dictionary, one stable lexsort by (term, doc)
-    that inherits ascending positions, then the one-pass batch encoder
-    (_assemble_segment) — byte-identical segments to the pair-stream path
-    (pinned by a differential test)."""
+    Scale rationale (BENCH.md): shipping the TEXT once in the doc→segment
+    repartition costs ~1× corpus bytes — the Lucene shape (documents route
+    to a shard; the shard's writer tokenizes and builds its own postings).
+    Shuffling JVM-tokenized (term, doc[, positions]) pairs instead
+    re-ships term strings per posting: ~4× corpus bytes for a positional
+    index, and slower for a non-positional one as well (interleaved A/Bs,
+    round 7: 6M docs 25-28 s text vs 38-45 s pairs; 600k positional
+    10.4 s vs 12.9 s). Inside the kernel everything is C-path: an RE2
+    split, Arrow dictionary encoding, one stable argsort by term that
+    keeps docs and positions ascending, then the one-pass batch encoder
+    (_assemble_segment). tests/test_index_bm25.py pins the output bytes
+    against a plain-Python inversion fed to ``segment_frame``."""
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
         import pyarrow as pa
@@ -572,22 +437,6 @@ def _text_segment_kernel(analyzed_fields: tuple[str, ...] = (),
     return run
 
 
-#: positional-build kernel choice. "text" (default since round 6):
-#: repartition the RAW TEXT to segments and tokenize/invert in-worker —
-#: ~1× corpus bytes moved instead of ~4× (term strings re-shipped per
-#: posting + sort spill); the Lucene shape (docs route to a shard, the
-#: shard's writer builds its own .prx), and the right default on a real
-#: cluster where network shuffle dominates. Round-6 interleaved same-JVM
-#: A/B at 600k/32 cores: text 10.4 s vs pairs 12.9 s median (BENCH.md) —
-#: the round-5 "indistinguishable" call was host noise. "pairs": JVM
-#: tokenize + O(tokens) (term,doc,positions) shuffle + collect_list.
-#: NON-positional builds always default to the compact aggregated pair
-#: shuffle (pairs ≪ text — round-1 lesson, re-confirmed round 6: text
-#: 74.7 s vs pairs 47.6 s at 1.2M/16 cores). Both kernels build
-#: byte-identical segments for both shapes (differential test).
-POSITIONAL_KERNEL = os.environ.get("SPARK_GRAFT_POS_KERNEL", "text")
-
-
 _M32 = (1 << 32) - 1
 
 
@@ -629,36 +478,6 @@ def _route_keys(n: int) -> list[int]:
             found += 1
         x += 1
     return routes  # type: ignore[return-value]
-
-
-def _with_route(df: DataFrame, num_segments: int,
-                seg_offset: int = 0) -> DataFrame:
-    """Attach the one-partition-per-segment ``_route`` key (see
-    ``_route_keys``). Out-of-contract seg_ids route to a distinct negative
-    key (their own group) instead of silently aliasing another segment's
-    route via element_at's negative/end-relative indexing — a contract
-    violation then surfaces as an extra group, never as silent index
-    corruption."""
-    routes = _route_keys(num_segments)
-    route_arr = F.array(*[F.lit(int(r)) for r in routes])
-    idx = (F.col("seg_id") - int(seg_offset) + 1).cast("int")
-    return df.withColumn(
-        "_route",
-        F.when((idx >= 1) & (idx <= int(num_segments)),
-               F.element_at(route_arr, idx))
-        .otherwise((-F.col("seg_id") - 1).cast("int")))
-
-
-def _routed_by_segment(df: DataFrame, num_segments: int,
-                       seg_offset: int = 0):
-    """Exchange ``df`` so each segment occupies its own partition (1 task =
-    1 segment), then group by the routing key. Wave counts are exact
-    (num_segments is wave-aligned by auto_num_segments) and no reducer ever
-    packs 2+ segments while another sits idle — on a 1000-executor cluster
-    this is segment→reducer placement, the thing HashPartitioning alone
-    cannot guarantee."""
-    return (_with_route(df, num_segments, seg_offset)
-            .repartition(num_segments, "_route").groupBy("_route"))
 
 
 def live_seg_ids(stats: dict) -> list[int] | None:
@@ -703,8 +522,9 @@ class _PackedSegmentGroupBy:
 def routed_segment_groupby(df: DataFrame, seg_ids: list[int] | None,
                            col: str = "seg_id", pack: bool = True):
     """``df.groupBy("seg_id")`` with guaranteed one-segment-per-reduce-
-    partition placement (see ``_route_keys``): the per-segment query kernels
-    (WAND, phrase intersection, filter set-algebra, posting decode) each
+    partition placement (see ``_route_keys``): the per-segment kernels
+    (build inversion, LSM merge, WAND, phrase intersection, filter
+    set-algebra, posting decode) each
     process one segment per task instead of however many segments Spark's
     hash happens to pack into ``shuffle.partitions`` buckets — on 128 live
     segments over 32 shuffle partitions the busiest reducer otherwise packs
@@ -743,173 +563,25 @@ def routed_segment_groupby(df: DataFrame, seg_ids: list[int] | None,
     return routed.repartition(len(ids), "_route").groupBy("_route")
 
 
-#: Non-positional pair-stream shape. "agg" (two exchanges): explode →
-#: groupBy(seg,term,doc) with map-side combine → route repartition →
-#: kernel. Selects the stream used WHEN a pairs-shaped path is chosen
-#: (NONPOS_KERNEL below defaults non-positional builds to the text kernel
-#: instead; this stream remains the JVM-tokenize alternative).
-#: "textroute" (ONE exchange): route the
-#: RAW TEXT by segment first (1× corpus bytes — the Lucene doc→shard
-#: shape), then tokenize + explode + aggregate POST-shuffle: the grouping
-#: keys include the route key, so Catalyst elides the aggregation
-#: exchange and partial+final hash aggregation runs inside the route
-#: partitions, feeding FlatMapGroupsInPandas without any further
-#: exchange. Tokenization and counting both stay JVM codegen either way;
-#: kernel input rows are value-identical, so segments stay byte-identical
-#: (differential test). Interleaved same-JVM A/B at 6M docs / 32 cores
-#: (bench_evidence/pair_stream_r7/): textroute 53.1/54.8/57.1 s vs agg
-#: 76.2/76.9/114.4 s — textroute won every round in both orders (0.71×).
-#: A third shape — raw exploded tokens through one exchange ("fused") —
-#: measured WORSE than agg (95.6 vs 68.1 s medians, same evidence dir):
-#: token rows outweigh the text they came from once map-side combine is
-#: lost; routing the text keeps the exchange at 1× corpus bytes.
-PAIR_STREAM = os.environ.get("SPARK_GRAFT_PAIR_STREAM", "textroute")
-
-#: NON-positional build kernel. "text" (default since the round-7
-#: continuation): route the raw text and tokenize+invert+encode in-worker —
-#: the same shape as the positional default, now that the Arrow-native
-#: kernel tokenizer (RE2 split + dictionary_encode, no per-token Python
-#: objects) removed the Python-tokenize penalty that made round 1 prefer
-#: JVM pair streams. Interleaved same-JVM A/Bs, non-positional builds:
-#: 6M docs text 25.2/27.4/27.6 s vs textroute 37.8/40.9/45.1 s (0.67×);
-#: 600k text 4.82 vs 6.93 s; sf-level warm 1.1 vs 1.2-1.5 s — the JVM
-#: tokenize+explode+aggregate stage (33 s of the 6M textroute build's
-#: 44 s) costs more than shipping text once and tokenizing in the C-path
-#: kernel. "textroute"/"agg" keep the JVM pair streams (PAIR_STREAM).
-NONPOS_KERNEL = os.environ.get("SPARK_GRAFT_NONPOS_KERNEL", "text")
-
-
-def _textroute_pair_groupby(base: DataFrame, num_segments: int,
-                            analyzed_fields: tuple[str, ...] = (),
-                            seg_offset: int = 0,
-                            todo: list[int] | None = None):
-    """Single-exchange NON-positional pair stream (see PAIR_STREAM note).
-    The per-doc membership row (term NULL — zero-token docs must still
-    enter the doc table) comes from a NULL sentinel appended to each doc's
-    token array, so the whole stream is ONE explode+aggregate branch — a
-    Union here would erase the route partitioning and reintroduce the
-    exchange. The kernel ignores the membership row's cnt, so its value
-    (1 here, 0 in the "agg" stream) cannot affect segment bytes.
-
-    A POSITIONAL variant (post-shuffle ``sort_array(collect_list(pos))``
-    of (term,pos)-struct explodes) was built and measured 2.5× SLOWER than
-    the text kernel at 6M docs (244 s vs 96 s, bench_evidence/
-    pair_stream_r7/posab_round0.jsonl): collect_list aggregation over
-    ~10^6 groups per partition abandons hash aggregation for the
-    sort-based ObjectHashAggregate fallback — the same pathology that
-    makes the two-exchange positional "pairs" stream 344 s. Positional
-    builds stay on the text kernel (Python in-worker inversion)."""
-    seg = ((F.col("doc_id") % num_segments).cast("int")
-           + F.lit(int(seg_offset))).cast("int").alias("seg_id")
-    src = base.select(seg, "*")
-    if todo is not None:
-        src = src.where(F.col("seg_id").isin(
-            [int(s) + int(seg_offset) for s in todo]))
-    routed = _with_route(src, num_segments, seg_offset).repartition(
-        num_segments, "_route")
-    toks = tokens_col("text")
-    for f in analyzed_fields:
-        pf = f.lower() + ":"
-        toks = F.concat(toks, F.transform(
-            tokens_col(f.lower()), lambda x: F.concat(F.lit(pf), x)))
-    toks = F.concat(toks, F.array(F.lit(None).cast("string")))
-    pairs = (routed.select("_route", "seg_id", F.col("doc_id"),
-                           F.explode(toks).alias("term"))
-             .groupBy("_route", "seg_id", "term", "doc_id")
-             .agg(F.count("*").cast("long").alias("cnt")))
-    return pairs.groupBy("_route")
-
-
 def segment_frames_df(base: DataFrame, num_segments: int, positions: bool,
                       analyzed_fields: tuple[str, ...] = (),
                       seg_offset: int = 0,
-                      todo: list[int] | None = None,
-                      via_text: bool | None = None) -> DataFrame:
-    """SEGMENT_SCHEMA DataFrame for ``base`` (doc_id, text[, fields]).
-    Non-positional builds default to compact JVM-aggregated (term, doc,
-    tf) pairs (_pair_stream — pairs ≪ text); positional builds default to
-    text-shipping in-worker inversion (_text_segment_kernel — text ≪
-    positional pairs). See the POSITIONAL_KERNEL note for the measured
-    trade-off; ``via_text`` overrides either way. ``todo`` prunes to
-    unfinished seg_ids (resume)."""
-    if via_text is None:
-        via_text = (positions and POSITIONAL_KERNEL == "text") or (
-            not positions and NONPOS_KERNEL == "text")
-    if not via_text and not positions and PAIR_STREAM == "textroute":
-        return _textroute_pair_groupby(
-            base, num_segments, tuple(analyzed_fields), seg_offset, todo,
-        ).applyInPandas(_pairs_segment_frame, schema=SEGMENT_SCHEMA)
-    if via_text:
-        seg = ((F.col("doc_id") % num_segments).cast("int")
-               + F.lit(int(seg_offset))).cast("int").alias("seg_id")
-        src = base.select(seg, "*")
-        if todo is not None:
-            src = src.where(F.col("seg_id").isin(
-                [int(s) + int(seg_offset) for s in todo]))
-        return _routed_by_segment(src, num_segments, seg_offset).applyInPandas(
-            _text_segment_kernel(tuple(analyzed_fields), positions=positions),
-            schema=SEGMENT_SCHEMA)
-    pairs = _pair_stream(base, num_segments, positions=positions,
-                         analyzed_fields=tuple(analyzed_fields))
-    if seg_offset:
-        pairs = pairs.withColumn(
-            "seg_id", (F.col("seg_id") + int(seg_offset)).cast("int"))
+                      todo: list[int] | None = None) -> DataFrame:
+    """SEGMENT_SCHEMA DataFrame for ``base`` (doc_id, text[, fields]): each
+    doc's raw text routes to segment ``seg_offset + doc_id % num_segments``
+    (one reduce task per segment, ``routed_segment_groupby``) and is
+    tokenized, inverted and encoded there by ``_text_segment_kernel``.
+    ``todo`` prunes to unfinished segments (resume)."""
+    seg = ((F.col("doc_id") % num_segments).cast("int")
+           + F.lit(int(seg_offset))).cast("int").alias("seg_id")
+    src = base.select(seg, "*")
+    ids = [int(seg_offset) + int(s)
+           for s in (range(num_segments) if todo is None else todo)]
     if todo is not None:
-        pairs = pairs.where(F.col("seg_id").isin(
-            [int(s) + int(seg_offset) for s in todo]))
-    return _routed_by_segment(pairs, num_segments, seg_offset).applyInPandas(
-        _pairs_segment_frame, schema=SEGMENT_SCHEMA)
-
-
-def _segment_rows(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Pure-Python SPIMI kernel (tokenizes in the worker): kept as the
-    differential implementation for kernel-level tests; the production build
-    path is _pair_stream + _pairs_segment_frame (JVM tokenization).
-    A partition may carry multiple seg_ids (hash partitioning gives no 1:1
-    guarantee), so the kernel groups by seg_id — correctness never depends
-    on the physical partitioning."""
-    frames = [p for p in pdfs if len(p)]
-    if not frames:
-        return
-    part = pd.concat(frames, ignore_index=True)
-    for seg_id_val, seg_part in part.groupby("seg_id", sort=True):
-        t0 = time.monotonic()
-        seg_id = int(seg_id_val)
-        # sort docs once: positional index then equals docID rank, so the
-        # np.unique pass below yields (term asc, docID asc) postings directly
-        seg_part = seg_part.sort_values("doc_id")
-        docs_sorted = seg_part["doc_id"].to_numpy(dtype=np.int64)
-        # vectorized tokenize (same regex/lowering as tokenize_py — the
-        # per-url token identity the oracle tests pin): C-path pandas ops,
-        # no per-doc Python loop
-        tok_lists = seg_part["text"].fillna("").str.lower().str.findall("[a-z0-9]+")
-        dls_sorted = tok_lists.str.len().to_numpy(dtype=np.int64)
-        n_seg_docs = len(docs_sorted)
-        total = int(dls_sorted.sum())
-        if total == 0:
-            yield segment_frame(
-                seg_id, docs_sorted, dls_sorted,
-                pd.DataFrame({"term": [], "doc_id": [], "tf": []}),
-                time.monotonic() - t0,
-            )
-            continue
-        # count per doc with Counter (C fast path); Python touches only the
-        # DISTINCT (term, doc) pairs — ≪ total tokens on real text
-        terms_out: list[str] = []
-        pos_out: list[int] = []
-        tf_out: list[int] = []
-        for pos, lst in enumerate(tok_lists):
-            c = Counter(lst)
-            terms_out.extend(c.keys())
-            pos_out.extend([pos] * len(c))
-            tf_out.extend(c.values())
-        tf = pd.DataFrame({
-            "term": pd.Series(terms_out, dtype="object"),
-            "doc_id": docs_sorted[np.asarray(pos_out, dtype=np.int64)],
-            "tf": np.asarray(tf_out, dtype=np.int64),
-        }).sort_values(["term", "doc_id"], kind="stable")
-        yield segment_frame(seg_id, docs_sorted, dls_sorted, tf,
-                            time.monotonic() - t0)
+        src = src.where(F.col("seg_id").isin(ids))
+    return routed_segment_groupby(src, ids, pack=False).applyInPandas(
+        _text_segment_kernel(tuple(analyzed_fields), positions=positions),
+        schema=SEGMENT_SCHEMA)
 
 
 @dataclass
@@ -1275,14 +947,14 @@ def build_segments(
     resume: bool = True,
     positions: bool = False,
     analyzed_fields: list[str] | None = None,
-    via_text: bool | None = None,
 ) -> IndexPaths:
     """Single-pass SPIMI index build with checkpointed, resumable segments.
 
     Lineage + postings/sec per segment land in ``manifest.jsonl``
     (north_rule: per-partition checkpoints, lineage, metrics).
     ``positions=True`` stores per-posting token positions (pos_blob) so
-    phrase queries run off the index — see ``_pair_stream`` for the cost.
+    phrase queries run off the index; the payload is O(total tokens), as
+    Lucene's .prx.
     ``analyzed_fields`` indexes extra text columns as ``field:token``
     per-field dictionary terms (ES analyzes every text field; `field:value`
     then resolves index-backed — see queryparser.FieldText).
@@ -1315,8 +987,7 @@ def build_segments(
         t0 = time.monotonic()
         seg_df = segment_frames_df(
             base, num_segments, positions,
-            analyzed_fields=tuple(analyzed_fields), todo=todo,
-            via_text=via_text)
+            analyzed_fields=tuple(analyzed_fields), todo=todo)
         mode = "append" if done else "overwrite"
         # persist the segment frame so manifest + stats + termstats reuse the
         # already-computed blobs in memory instead of re-listing and

@@ -22,10 +22,10 @@ def spread_input(df: DataFrame) -> DataFrame:
     aggregation before the first exchange) runs single-threaded. Measured
     round 7: the whole sf-level bench corpus (50k docs, 1M events) is one
     row group per table, which serialized the pre-shuffle stage of minhash
-    (13 s), sudden-appearance (10 s) and the index pair stream. The
-    repartition costs one pass over the (already column-pruned) input — at
-    real scale inputs have many splits and the condition makes this a no-op,
-    so no extra shuffle ever appears on the 100 TB path (guide §2.4/§6).
+    (13 s) and sudden-appearance (10 s). The repartition costs one pass
+    over the (already column-pruned) input — at real scale inputs have
+    many splits and the condition makes this a no-op, so no extra shuffle
+    ever appears on the 100 TB path (guide §2.4/§6).
     Round-robin repartition is deterministic under retries (Spark sorts
     before repartitioning, SPARK-23207) and every caller is either row-wise
     or an exact-integer aggregation, so results are partition-independent."""
@@ -69,15 +69,14 @@ def get_spark(
         # Scale-adaptive reducer counts (guide §2.2): start every AQE
         # shuffle at 8× the core count and let coalescing shrink small
         # exchanges to the advisory size. With a flat reducer count = cores,
-        # a corpus-sized aggregation (the index pair stream at 6M docs:
-        # ~780M rows) packs ~24M groups into each reducer's hash table and
+        # a corpus-sized aggregation (measured: ~780M token-pair rows from
+        # 6M docs) packs ~24M groups into each reducer's hash table and
         # spills; 8× caps per-reducer state at ~64 MB-class partitions
         # while AQE still collapses tiny query shuffles to a handful of
         # tasks. Explicit repartition(n, col) exchanges (segment routing)
         # are REPARTITION_BY_NUM and stay untouched by AQE.
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                os.environ.get("SPARK_GRAFT_INIT_PARTS",
-                               str(shuffle_partitions * 8)))
+                str(shuffle_partitions * 8))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

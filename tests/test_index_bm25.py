@@ -504,58 +504,94 @@ def test_phrase_seg_match_vectorized_vs_perdoc(docs_dict):
     assert any_hits > 0
 
 
-def test_text_kernel_matches_pair_stream_segments(spark, documents):
-    """Round 5: positional builds route the RAW TEXT to segments and invert
-    in-worker (_text_segment_kernel) instead of shuffling O(tokens)
-    (term, doc, positions) pairs. The two paths must build BYTE-IDENTICAL
-    segments — same dictionary order, doc/tf/pos blobs, block metadata,
-    sidecars — including per-field analyzed terms."""
-    from pyspark.sql import functions as SF
+def test_text_kernel_matches_python_oracle_segments(spark, documents):
+    """The build kernel (segment_frames_df → _text_segment_kernel) must
+    write the same segment bytes as a plain-Python inversion of the same
+    docs encoded by ``segment_frame`` — dictionary order, doc/tf/pos blobs,
+    block metadata and sidecars, every column but build_secs — for both
+    index shapes, with and without a per-field analyzed column. The oracle
+    shares only the encoder with the kernel (test_codec decodes that).
+    Zero-token docs (NULL, "", punctuation-only) ride along, and one
+    segment holds nothing else, so the kernel's no-token branch runs."""
+    import numpy as np
+    import pandas as pd
 
-    from ee_outliers_spark.index.build import (
-        SEGMENT_SCHEMA, _pair_stream, _pairs_segment_frame,
-        segment_frames_df,
-    )
-    from ee_outliers_spark.tokenizer import tokens_col
+    from ee_outliers_spark.index.build import segment_frame, segment_frames_df
+    from ee_outliers_spark.tokenizer import tokenize_py
 
-    base = documents.select(
-        SF.col("doc_id").cast("long").alias("doc_id"), "text",
-    ).withColumn(
-        "title", SF.array_join(SF.slice(tokens_col("text"), 1, 5), " "))
+    n_seg = 5
+    docs = [(int(r["doc_id"]), r["text"], (r["text"] or "")[:40])
+            for r in documents.select("doc_id", "text").collect()
+            if int(r["doc_id"]) % n_seg != n_seg - 1]
+    top = max(d for d, _, _ in docs) + 1
+    top += n_seg - top % n_seg  # top ≡ 0 (mod n_seg)
+    empties = [None, "", " ,.;-- !! "]
+    # segment n_seg-1 holds only zero-token docs (text and title)
+    docs += [(top + n_seg * i + n_seg - 1, t, empties[(i + 1) % 3])
+             for i, t in enumerate(empties)]
+    # zero-token docs among real ones, one with a non-empty title
+    docs += [(top + n_seg * 10 + i, t, None) for i, t in enumerate(empties)]
+    docs.append((top + n_seg * 11, "", "Title Only, title!"))
+    base = spark.createDataFrame(docs, "doc_id long, text string, title string")
 
-    def key_rows(rows):
-        out = {}
-        for r in rows:
-            k = (int(r["seg_id"]), r["term"])
-            out[k] = (
-                bytes(r["doc_blob"] or b""), bytes(r["tf_blob"] or b""),
-                bytes(r["pos_blob"] or b""), r["block_last_doc"],
-                r["block_max_tf"], r["block_min_dl"], r["df_local"],
-                r["n_postings"], r["n_docs"], r["sum_dl"],
-            )
-        return out
+    def oracle(positional, fields):
+        out = []
+        for seg in range(n_seg):
+            seg_docs = sorted(d for d in docs if d[0] % n_seg == seg)
+            doc_ids = np.array([d[0] for d in seg_docs], np.int64)
+            dls = np.array([len(tokenize_py(d[1])) for d in seg_docs],
+                           np.int64)
+            poss: dict = {}
+            sidecars = {}
+            for col, prefix in [(1, "")] + [(2, f + ":") for f in fields]:
+                flen = []
+                for d in seg_docs:
+                    toks = tokenize_py(d[col])
+                    flen.append(len(toks))
+                    for i, t in enumerate(toks):
+                        poss.setdefault((prefix + t, d[0]), []).append(i)
+                if prefix:
+                    flen = np.array(flen, np.int64)
+                    if flen.any():
+                        sidecars[prefix] = (doc_ids[flen > 0], flen[flen > 0])
+            keys = sorted(poss)
+            tf = pd.DataFrame({
+                "term": pd.Series([k[0] for k in keys], dtype=object),
+                "doc_id": np.array([k[1] for k in keys], np.int64),
+                "tf": np.array([len(poss[k]) for k in keys], np.int64),
+            })
+            if positional:
+                tf["poss"] = pd.Series(
+                    [np.array(poss[k], np.int64) for k in keys], dtype=object)
+            out.append(segment_frame(seg, doc_ids, dls, tf, 0.0,
+                                     field_sidecars=sidecars or None))
+        return pd.concat(out, ignore_index=True)
 
-    from ee_outliers_spark.index.build import _textroute_pair_groupby
+    def norm(v):
+        if isinstance(v, (bytes, bytearray)):
+            return bytes(v)
+        if isinstance(v, (list, np.ndarray)):
+            return [int(x) for x in v]
+        if v is None or (isinstance(v, float) and np.isnan(v)):
+            return None
+        return int(v) if isinstance(v, (float, np.integer)) else v
+
+    def key_rows(pdf):
+        cols = [c for c in pdf.columns if c != "build_secs"]
+        return {(int(r["seg_id"]), r["term"]): tuple(norm(r[c]) for c in cols)
+                for _, r in pdf.iterrows()}
 
     for positional in (True, False):
         for fields in ((), ("title",)):
             got = key_rows(segment_frames_df(
-                base, 4, positional, analyzed_fields=fields,
-                via_text=True).collect())
-            pairs = _pair_stream(base, 4, positions=positional,
-                                 analyzed_fields=fields)
-            want = key_rows(pairs.groupBy("seg_id").applyInPandas(
-                _pairs_segment_frame, schema=SEGMENT_SCHEMA).collect())
+                base, n_seg, positional, analyzed_fields=fields).toPandas())
+            want = key_rows(oracle(positional, fields))
             assert set(got) == set(want), (positional, fields)
             for k in want:
                 assert got[k] == want[k], (positional, fields, k)
-            if not positional:
-                # third stream shape: single-exchange routed text with
-                # post-shuffle JVM aggregation (the non-positional default)
-                tr = key_rows(_textroute_pair_groupby(
-                    base, 4, fields).applyInPandas(
-                    _pairs_segment_frame, schema=SEGMENT_SCHEMA).collect())
-                assert tr == want, ("textroute", fields)
+            # the zero-token segment: only its doclen sidecar row
+            assert [k for k in got if k[0] == n_seg - 1] == [
+                (n_seg - 1, None)]
 
 
 def test_segment_routing_is_one_task_per_segment(spark, documents):
@@ -568,7 +604,7 @@ def test_segment_routing_is_one_task_per_segment(spark, documents):
     from pyspark.sql import functions as SF
 
     from ee_outliers_spark.index.build import (
-        _mm3_int32, _route_keys, _routed_by_segment)
+        _mm3_int32, _route_keys, routed_segment_groupby)
 
     # 1. the python murmur3 IS Spark's F.hash on int32
     vals = list(range(-5, 200)) + [2**31 - 1, -2**31, 123456789]
@@ -608,7 +644,8 @@ def test_segment_routing_is_one_task_per_segment(spark, documents):
         return pd.DataFrame({"seg_id": [int(pdf["seg_id"].iloc[0])],
                              "uniq": [int(pdf["seg_id"].nunique())]})
 
-    rows = _routed_by_segment(src, n_seg).applyInPandas(
+    rows = routed_segment_groupby(src, list(range(n_seg)),
+                                  pack=False).applyInPandas(
         seg_of, "seg_id int, uniq int").collect()
     assert sorted(r["seg_id"] for r in rows) == list(range(n_seg))
     assert all(r["uniq"] == 1 for r in rows)
