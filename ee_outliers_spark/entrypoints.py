@@ -24,6 +24,7 @@ from .queryparser import (
     dsl_to_ast, parse_query_string, resolve_analyzed, to_duckdb_sql,
     to_spark_predicate,
 )
+from .session import materialize
 from .tokenizer import tokenize_py, tokens_col, tokens_sql
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1243,18 +1244,12 @@ def word2vec_prob_model_q(spark, sf_dir):
     )
 
     docs = load(spark, sf_dir, "documents")
-    # toks feeds the vocabulary aggregation AND the vocab join; tv feeds
-    # BOTH sides of the skip-gram self-join — without materialization the
-    # executed plan re-ran the scan+tokenize+posexplode subtree 8 times
-    # (plans/r07/word2vec_prob_model_before.txt). One eager localCheckpoint
-    # each runs it once (same fix as the dedup pair generators).
-    toks = tokens_positions(docs, ["lang"], "doc_id", "text").withColumn(
-        "pos", F.col("pos") + 1  # 1-based like the SQL twin
-    ).localCheckpoint(eager=True)
+    # toks: vocabulary + vocab join; tv: both skip-gram self-join sides
+    toks = materialize(tokens_positions(docs, ["lang"], "doc_id", "text")
+                       .withColumn("pos", F.col("pos") + 1))  # 1-based like SQL
     voc = vocabulary(toks, _W2V_V, _W2V_MINOCC)
-    tv = toks.join(voc, ["aggregator", "word"]).select(
-        "aggregator", "text_id", "pos", "voc_word"
-    ).localCheckpoint(eager=True)
+    tv = materialize(toks.join(voc, ["aggregator", "word"]).select(
+        "aggregator", "text_id", "pos", "voc_word"))
     model = prob_model(skipgram_pairs(tv, _W2V_WINDOW))
     return model.orderBy("aggregator", "center", "ctx")
 

@@ -598,6 +598,27 @@ class IndexPaths:
     def manifest(self) -> str: return os.path.join(self.root, "manifest.jsonl")
 
 
+def segment_dir_ids(paths: IndexPaths) -> list[int]:
+    """seg_ids of every segment directory on disk, live or dead (``seg_id``
+    is the partition column) — no Spark job, unlike a distinct scan."""
+    return sorted(int(p.split("=", 1)[1]) for p in os.listdir(paths.segments)
+                  if p.startswith("seg_id="))
+
+
+def read_manifest(paths: IndexPaths) -> list[dict]:
+    """manifest.jsonl records in append order ([] before the first write)."""
+    if not os.path.exists(paths.manifest):
+        return []
+    with open(paths.manifest) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def termstats_files(paths: IndexPaths) -> list[str]:
+    """The termstats table's parquet files, sorted."""
+    return sorted(os.path.join(dp, f) for dp, _, fs in os.walk(paths.termstats)
+                  for f in fs if f.endswith(".parquet"))
+
+
 def load_stats(paths: IndexPaths) -> dict:
     if not os.path.exists(paths.stats):
         return {}
@@ -864,9 +885,7 @@ def incremental_append_refresh(spark: SparkSession, paths: IndexPaths,
         adds: dict[str, int] = {}
         for r in new_ts.collect():
             adds[r["term"]] = adds.get(r["term"], 0) + int(r["df"])
-        files = sorted(
-            os.path.join(dp, f) for dp, _, fs in os.walk(paths.termstats)
-            for f in fs if f.endswith(".parquet"))
+        files = termstats_files(paths)
         olddf = (pd.concat([pq.read_table(f).to_pandas() for f in files],
                            ignore_index=True)
                  if files else pd.DataFrame({"term": [], "df": []}))
@@ -976,10 +995,7 @@ def build_segments(
     if num_segments is None:
         num_segments = auto_num_segments(spark, base.count())
 
-    done: set[int] = set()
-    if resume and os.path.exists(paths.manifest):
-        with open(paths.manifest) as fh:
-            done = {json.loads(line)["seg_id"] for line in fh if line.strip()}
+    done = {r["seg_id"] for r in read_manifest(paths)} if resume else set()
 
     todo = [s for s in range(num_segments) if s not in done]
     live = sorted(set(range(num_segments)) | done)

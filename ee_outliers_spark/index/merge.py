@@ -34,7 +34,6 @@ keep the segment count logarithmic in corpus size, exactly like an LSM tree.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -46,8 +45,8 @@ from pyspark.sql import functions as F
 
 from .build import (
     SEGMENT_SCHEMA, IndexPaths, commit_stats, load_stats,
-    read_live_segments, refresh_stats_and_termstats, routed_segment_groupby,
-    segment_frame, write_manifest,
+    read_live_segments, read_manifest, refresh_stats_and_termstats,
+    routed_segment_groupby, segment_dir_ids, segment_frame, write_manifest,
 )
 from .codec import decode_position_stream, varbyte_decode
 
@@ -124,15 +123,7 @@ def _gc_segments(paths: IndexPaths, dead: list[int]) -> None:
 
 def _manifest_seg_sizes(paths: IndexPaths) -> dict[int, int]:
     """seg_id → postings from the manifest (last entry per seg wins)."""
-    sizes: dict[int, int] = {}
-    if not os.path.exists(paths.manifest):
-        return sizes
-    with open(paths.manifest) as fh:
-        for line in fh:
-            if line.strip():
-                rec = json.loads(line)
-                sizes[int(rec["seg_id"])] = int(rec["postings"])
-    return sizes
+    return {int(r["seg_id"]): int(r["postings"]) for r in read_manifest(paths)}
 
 
 def merge_tier(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> int | None:
@@ -152,9 +143,7 @@ def merge_tier(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> int | 
         return None
     sizes = _manifest_seg_sizes(paths)
     tier = sorted(live, key=lambda s: (sizes.get(s, 0), s))[:fanin]
-    all_ids = {int(p.split("=", 1)[1]) for p in os.listdir(paths.segments)
-               if p.startswith("seg_id=")}
-    new_seg = max(all_ids | set(live)) + 1
+    new_seg = max(segment_dir_ids(paths) + list(live)) + 1
 
     segs = spark.read.parquet(paths.segments).where(
         F.col("seg_id").isin([int(s) for s in tier]))
@@ -220,11 +209,7 @@ def merge_segments(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> No
             int(r["seg_id"]) for r in
             segs.select("seg_id").distinct().collect())
     # fresh ids above every existing directory: append + flip, not rmtree+rename
-    base = max(
-        ({int(p.split("=", 1)[1]) for p in os.listdir(paths.segments)
-          if p.startswith("seg_id=")} | set(old_live)),
-        default=-1,
-    ) + 1
+    base = max(segment_dir_ids(paths) + list(old_live), default=-1) + 1
     rank = {s: i for i, s in enumerate(sorted(old_live))}
     group_of = {s: base + rank[s] // fanin for s in old_live}
     new_ids = sorted(set(group_of.values()))

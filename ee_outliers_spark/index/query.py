@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import heapq
 import math
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -35,10 +34,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tokenizer import tokenize_py, tokens_col
+from ..session import materialize
+from ..tokenizer import tokenize_py
 from .build import (
     B, K1, IndexPaths, block_upper_bound, live_seg_ids, load_stats,
-    read_live_segments, routed_segment_groupby,
+    read_live_segments, routed_segment_groupby, termstats_files,
 )
 from .codec import decode_position_stream, varbyte_decode
 
@@ -58,13 +58,11 @@ def _termstats_lookup(paths: IndexPaths, terms: list[str]) -> dict[str, int]:
     the same stats.json/local-read pattern load_stats already uses. Pattern
     predicates (wildcard/regexp/fuzzy expansion) still go through the
     distributed scan — only exact term lists take this path."""
-    import glob
-
     import pyarrow.parquet as pq
 
     out: dict[str, int] = {}
     flt = [("term", "in", list(terms))]
-    for f in glob.glob(os.path.join(paths.termstats, "*.parquet")):
+    for f in termstats_files(paths):
         t = pq.read_table(f, columns=["term", "df"], filters=flt)
         for term, d in zip(t.column("term").to_pylist(),
                            t.column("df").to_pylist()):
@@ -170,68 +168,6 @@ def bm25_topk_df(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-
-
-def phrase_topk_df(
-    df: DataFrame,
-    doc_col: str,
-    text_col: str,
-    doclen: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    phrase: str,
-    k: int,
-) -> DataFrame:
-    """Phrase query: tf = token-position phrase frequency (Lucene PhraseQuery
-    semantics, occurrences may overlap); df = docs containing the phrase;
-    scored BM25. The scan stays JVM-side — array HOFs (split/filter/sequence)
-    inside whole-stage codegen, no Python UDF."""
-    toks = tokenize_py(phrase)
-    m = len(toks)
-    # tokens materialize JVM-side (codegen split/filter); the positional
-    # phrase count is a vectorized Arrow UDF over the token arrays — array
-    # HOF lambdas evaluate interpreted per element in Spark and were ~20x
-    # slower here, and embedding the tokenizer expr in the lambda re-ran the
-    # split per element_at (O(tokens²)/row)
-    phrase_arr = np.asarray(toks, dtype=object)
-
-    @F.pandas_udf("long")
-    def _phrase_tf(tok_arrays: pd.Series) -> pd.Series:
-        def cnt(lst):
-            if lst is None or len(lst) < m:
-                return 0
-            a = np.asarray(lst, dtype=object)
-            mask = a[: len(a) - m + 1] == phrase_arr[0]
-            for j in range(1, m):
-                mask = mask & (a[j : len(a) - m + 1 + j] == phrase_arr[j])
-            return int(mask.sum())
-        return tok_arrays.map(cnt)
-
-    # eager localCheckpoint (not cache): the hits feed both the df count
-    # and the score join; a cache() with no unpersist() accumulates pinned
-    # partitions across long-lived sessions (the leak pattern fixed in the
-    # indexed path at _text_scores) — checkpoint materializes once and the
-    # blocks are GC-managed with the session
-    hits = (
-        df.select(F.col(doc_col).alias("doc_id"),
-                  tokens_col(F.col(text_col)).alias("_toks"))
-        .select("doc_id", _phrase_tf("_toks").alias("tf"))
-        .where(F.col("tf") > 0)
-        .localCheckpoint(eager=True)
-    )
-    dfp = hits.agg(F.count("*")).collect()[0][0]
-    if dfp == 0:
-        return hits.select("doc_id", F.lit(0.0).alias("score")).limit(0)
-    idf = _idf(n_docs, int(dfp))
-    scored = hits.join(doclen, "doc_id").select(
-        "doc_id",
-        (
-            F.lit(idf)
-            * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl))))
-        ).alias("score"),
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def _sloppy_tf(plists: dict, phrase_terms: list[str], doc: int,
@@ -573,8 +509,7 @@ def phrase_topk_wand(
     intersecting the per-term position lists stored in the segments (Lucene
     PhraseQuery over .prx), BM25-scored with the phrase's own df/idf.
 
-    This is the scale fix for the one query shape that used to re-tokenize
-    the whole corpus per query (``phrase_topk_df``): the plan here reads ONLY
+    The corpus is never re-tokenized per query: the plan reads ONLY
     segments.parquet rows for the phrase's distinct terms (term IN (...)
     pushed to the scan) plus the doclen sidecars — at 10^12 docs a phrase
     query touches |q| posting lists per segment, never the documents table.
@@ -585,12 +520,9 @@ def phrase_topk_wand(
         return spark.createDataFrame([], TOPK_SCHEMA)
     stats = load_stats(paths)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    # one materialization (eager localCheckpoint — lineage truncated, blocks
-    # GC'd with the query's DataFrames), one tiny count over it, literal idf:
-    # a broadcast-join of the count would recompute the positional
-    # intersection (measured 4x slower at 600k), a bare cache would pin
-    # partitions until eviction
-    hits = hits.localCheckpoint(eager=True)
+    # hits feed the df count and the scores; a broadcast-join of the count
+    # would recompute the positional intersection (measured 4x slower at 600k)
+    hits = materialize(hits)
     dfp = hits.count()
     if dfp == 0:
         return spark.createDataFrame([], TOPK_SCHEMA)
@@ -845,11 +777,9 @@ def _text_scores(spark: SparkSession, paths: IndexPaths,
     # driver-side count per phrase costs one synchronized job each (P+1
     # jobs for P phrases), and a broadcast-join of the count recomputes the
     # positional intersection (measured 4x slower at 600k). Instead ALL
-    # phrase hits union into one tagged frame materialized ONCE by an eager
-    # localCheckpoint (truncates lineage; blocks are freed when the query's
-    # DataFrames are GC'd — nothing pinned in the cache manager), then one
+    # phrase hits union into one tagged frame materialized ONCE, then one
     # tiny collect yields every phrase's df and the contribution uses
-    # literal idfs over the checkpointed rows: 2 jobs and 1x compute for
+    # literal idfs over the materialized rows: 2 jobs and 1x compute for
     # any number of phrases.
     ph_parts = []
     ph_boosts: dict[int, float] = {}
@@ -866,7 +796,7 @@ def _text_scores(spark: SparkSession, paths: IndexPaths,
         tagged = ph_parts[0]
         for x in ph_parts[1:]:
             tagged = tagged.unionByName(x)
-        tagged = tagged.localCheckpoint(eager=True)
+        tagged = materialize(tagged)
         dfs = {int(r["__pk"]): int(r["n"]) for r in
                tagged.groupBy("__pk").agg(F.count("*").alias("n")).collect()}
         idf_map = F.create_map(*[

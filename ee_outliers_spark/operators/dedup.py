@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..session import spread_input
+from ..session import materialize, spread_input
 from ..tokenizer import tokens_col
 
 
@@ -115,17 +115,13 @@ def ngram_jaccard_pairs(
     ``max_shingle_df`` docs. Pass None to disable (exact raw-set Jaccard,
     quadratic risk accepted).
     """
-    # The shingle frame feeds the df-cap aggregation, the capped join, the
-    # per-doc sizes AND both self-join sides; without materialization each
-    # reference re-runs the corpus-sized tokenize+shingle Arrow pass (the
-    # executed plan held EIGHT copies of it — 16 EvalPython nodes). Two
-    # eager localCheckpoints (raw, then capped) run the pass exactly once.
-    inv = _shingle_rows(df, id_col, text_col, k).localCheckpoint(eager=True)
+    # the shingles feed the df cap, the sizes and both self-join sides
+    inv = materialize(_shingle_rows(df, id_col, text_col, k))
     if max_shingle_df is not None:
         good = inv.groupBy("g").agg(F.count("*").alias("df_")).where(
             F.col("df_") <= max_shingle_df
         )
-        inv = inv.join(good.select("g"), "g").localCheckpoint(eager=True)
+        inv = materialize(inv.join(good.select("g"), "g"))
     # sizes AFTER the cap: |filtered set|, consistent with the intersection
     sizes = inv.groupBy("_id").agg(F.count("*").alias("n"))
     a = inv.alias("a")
@@ -249,15 +245,8 @@ def minhash_lsh_pairs(
     assert num_perm % bands == 0
     rows = num_perm // bands
     sig = minhash_signatures(df, id_col, text_col, k, num_perm, seed)
-    # The band self-join references `sig` on BOTH sides, and the broadcast
-    # build side cannot reuse the probe side's exchange, so the signature
-    # Arrow pass — the expensive corpus-sized stage — would run twice.
-    # Materialize it once (eager localCheckpoint, the repo's standard
-    # intra-query materialization): (id, 64×long) is ~520 B/doc, far
-    # smaller than the text it came from. Interleaved fresh-JVM A/Bs
-    # (bench_evidence/segfloor_r7/): warm pairs 1.3-1.7 s → 1.0-1.4 s at
-    # 5k docs, first call 14.5 → 10.8 s on the 50k dup-heavy replica.
-    sig = sig.localCheckpoint(eager=True)
+    # `sig` is read by both band self-join sides (~520 B/doc, far below the text)
+    sig = materialize(sig)
     band_arr = F.array(
         *[
             F.concat_ws(
@@ -350,10 +339,8 @@ def simhash_neardup_pairs(
     fps = simhash(df, id_col, text_col).select(
         F.col(id_col).alias("_id"), "simhash"
     )
-    # Both self-join sides reference fps; materialize the (id, long)
-    # fingerprint frame once so the corpus-sized tokenize+simhash Arrow
-    # pass is not evaluated per side (same fix as minhash_lsh_pairs).
-    fps = fps.localCheckpoint(eager=True)
+    # `fps` is read by both self-join sides
+    fps = materialize(fps)
     chunks = fps.select(
         "_id", "simhash",
         F.posexplode(
@@ -470,14 +457,10 @@ def embedding_neardup_lsh(
     )
     norm = F.sqrt(F.aggregate("_v", F.lit(0.0), lambda acc, x: acc + x * x))
     v = v.withColumn("_n", norm).where(F.col("_n") > 0)
-    # Compute the per-table codes ONCE and materialize (1× vectors + 8
-    # longs per row): both self-join sides previously re-ran the Arrow
-    # matmul UDF over the whole corpus; after the checkpoint only the
-    # cheap JVM posexplode is duplicated per side.
-    v = v.withColumn(
+    # the codes are read by both self-join sides; only the posexplode repeats
+    v = materialize(v.withColumn(
         "_codes", lsh_codes_col("_v", dim=None, n_bits=n_bits,
-                                n_tables=n_tables, seed=seed)
-    ).localCheckpoint(eager=True)
+                                n_tables=n_tables, seed=seed)))
     coded = v.select(
         "_id", "_v", "_n",
         F.posexplode("_codes").alias("_t", "_code"),
@@ -519,22 +502,21 @@ def duplicate_clusters(
     rounds, not 2^k. Each round is two doc_id-keyed shuffles (neighbor agg
     + label self-join); no driver-side graph state.
 
-    Every round ends in ``localCheckpoint(eager=True)``: an iterative
-    DataFrame that references its previous round in three places grows its
-    logical plan exponentially, and cache() only short-circuits EXECUTION —
-    Catalyst still re-analyzes the whole lineage each round (measured: the
-    chain fixpoint went 2s → 63s per round by iteration 4 without
-    truncation). Checkpointing resets the plan to a scan of materialized
-    partitions, keeping every round O(current data). On a real cluster use
-    a reliable checkpoint dir if executor loss matters mid-job."""
+    Every round ends in ``materialize``: an iterative DataFrame that
+    references its previous round in three places grows its logical plan
+    exponentially, and cache() only short-circuits EXECUTION — Catalyst
+    still re-analyzes the whole lineage each round (measured: the chain
+    fixpoint went 2s → 63s per round by iteration 4 without truncation).
+    Truncating lineage resets the plan to a scan of materialized
+    partitions, keeping every round O(current data). Executor loss after a
+    round fails the job: see ``session.materialize``."""
     e = pairs.select(F.col(a_col).cast("long").alias("a"),
                      F.col(b_col).cast("long").alias("b"))
-    edges = e.unionByName(
+    edges = materialize(e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct().localCheckpoint(eager=True)
-    labels = (edges.select("a").distinct()
-              .select(F.col("a").alias("id"), F.col("a").alias("cid"))
-              .localCheckpoint(eager=True))
+    ).distinct())
+    labels = materialize(edges.select("a").distinct().select(
+        F.col("a").alias("id"), F.col("a").alias("cid")))
     for _ in range(max_iter):
         nbr = (
             edges.join(labels.select(F.col("id").alias("b"),
@@ -549,7 +531,7 @@ def duplicate_clusters(
                               F.col("cid").alias("jcid"))
         new = stepped.join(jump, "cid", "left").select(
             "id", F.least("cid", F.coalesce("jcid", "cid")).alias("cid"))
-        new = new.localCheckpoint(eager=True)
+        new = materialize(new)
         changed = (
             new.select(F.col("id").alias("_i"), F.col("cid").alias("_n"))
             .join(labels.select(F.col("id").alias("_i"),

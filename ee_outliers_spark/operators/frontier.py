@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 TRIGGER_METHODS = {
     "percentile", "pct_of_max_value", "pct_of_median_value", "pct_of_avg_value",
     "mad", "madpos", "stdev", "float", "coeff_of_variation",
@@ -121,12 +123,8 @@ def flag_outliers(
     sensitivity (the whole-group semantics of terms.py:383-396)."""
     fr = frontier_df(df, groups, value, method, sensitivity, trigger_on)
     if groups:
-        # one decision_frontier row per group: materialize it (it is read
-        # once but its size is opaque to the planner) and broadcast it
-        # back onto the rows when it provably fits — the row stream then
-        # crosses NO exchange for the frontier join (guide §3.1; the
-        # planner otherwise picks a full sort-merge shuffle of the rows)
-        fr = fr.localCheckpoint(eager=True)
+        # its row count picks the broadcast join: the rows cross no exchange
+        fr = materialize(fr)
         if fr.count() <= BROADCAST_GROUP_ROWS:
             fr = F.broadcast(fr)
     # empty groups = one global frontier (ref terms across_aggregators)

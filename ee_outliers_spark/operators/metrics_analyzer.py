@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..functions.metrics import metric_column
 from .frontier import flag_outliers
 from .terms import aggregator_col, expand_multivalued
-from .whitelist import value_set_col, whitelist_predicate
+from .whitelist import retract_fixpoint
 
 
 def metrics_values(
@@ -79,32 +79,5 @@ def metrics_outliers(
             trigger_method, trigger_sensitivity, trigger_on,
         )
 
-    if not (whitelist_literals or whitelist_regexps):
-        return one_pass(df).where("is_outlier")
-
-    work = df
-    wl = None
-    prev_cached = None
-    for _ in range(max_fixpoint_iters):
-        res = one_pass(work).cache()
-        if wl is None:
-            wl = whitelist_predicate(
-                value_set_col(res, df.columns), whitelist_literals, whitelist_regexps
-            )
-        n_retract = res.where(F.col("is_outlier") & wl).count()
-        if prev_cached is not None:
-            # the new iteration is materialized past its parent — drop the
-            # parent's cache so the loop never pins more than two copies
-            prev_cached.unpersist()
-        if n_retract == 0:
-            # materialize the answer, then release the cache — a long-lived
-            # session must not keep one pinned window per analyzer call
-            out = res.where("is_outlier").localCheckpoint(eager=True)
-            res.unpersist()
-            return out
-        work = res.where(~(F.col("is_outlier") & wl)).select(*df.columns)
-        prev_cached = res
-    out = one_pass(work).where("is_outlier").localCheckpoint(eager=True)
-    if prev_cached is not None:
-        prev_cached.unpersist()
-    return out
+    return retract_fixpoint(one_pass, df, whitelist_literals,
+                            whitelist_regexps, max_fixpoint_iters)

@@ -27,9 +27,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .frontier import (BROADCAST_GROUP_ROWS, flag_outliers, frontier_df,
-                       outlier_test)
-from .whitelist import value_set_col, whitelist_predicate
+from ..session import materialize
+from .frontier import BROADCAST_GROUP_ROWS, flag_outliers
+from .whitelist import retract_fixpoint
 
 AGG_SEP = " - "  # composite-key separator (ref es.py:796-803, utils.py:160-184)
 
@@ -158,17 +158,13 @@ def terms_within(
             F.count("*").alias("_nb")
         ).where(F.col("_nb") >= min_target_buckets).select("aggregator")
         counts = counts.join(ok, "aggregator", "left_semi")
-    # Materialize the GROUP-sized counts once: flag_outliers reads it twice
-    # (frontier aggregation + row side) and the samples/base joins read the
-    # flagged frame twice more — without a checkpoint the corpus-sized
-    # count aggregation re-ran once per branch (3× at 1M events, measured
-    # in the executed plan). Eager localCheckpoint is the repo's standard
-    # intra-query materialization (lineage truncated, blocks freed on GC).
-    counts = counts.localCheckpoint(eager=True)
-    flagged = flag_outliers(
+    # the group-sized counts are read twice by flag_outliers, and `flagged`
+    # by the samples and row joins
+    counts = materialize(counts)
+    flagged = materialize(flag_outliers(
         counts, ["aggregator"], "term_count",
         trigger_method, trigger_sensitivity, trigger_on,
-    ).localCheckpoint(eager=True)
+    ))
     n_groups = flagged.count()  # already materialized — metadata-cheap
     samples = _non_outlier_samples(flagged)
     flag_sel = flagged.select(
@@ -177,7 +173,7 @@ def terms_within(
     # guide §3.1: broadcast the group-sized side when it provably fits —
     # the row-level result then streams through two broadcast joins with
     # ZERO row-side shuffles (vs two full sort-merge exchanges of the
-    # corpus). Checkpointed frames carry no size stats, so the planner
+    # corpus). Materialized frames carry no size stats, so the planner
     # cannot make this call itself; the row-count guard keeps unbounded-
     # cardinality aggregators on the sort-merge path.
     if n_groups <= BROADCAST_GROUP_ROWS:
@@ -208,13 +204,12 @@ def terms_across(
     )
     counts = _cap_buckets(counts, max_num_aggregators, None,
                           "unique_target_count")
-    # same shape as terms_within: one materialization of the group-sized
-    # frame, broadcast join back to rows when it provably fits
-    counts = counts.localCheckpoint(eager=True)
-    flagged = flag_outliers(
+    # same shape as terms_within: broadcast back to rows when it fits
+    counts = materialize(counts)
+    flagged = materialize(flag_outliers(
         counts, [], "unique_target_count",
         trigger_method, trigger_sensitivity, trigger_on,
-    ).localCheckpoint(eager=True)
+    ))
     flag_sel = flagged.select(
         "aggregator", "unique_target_count", "decision_frontier",
         "is_outlier")
@@ -252,36 +247,5 @@ def terms_outliers(
                                 trigger_sensitivity, trigger_on)
         raise ValueError(f"unexpected target count method {target_count_method}")
 
-    work = df
-    if not (whitelist_literals or whitelist_regexps):
-        res = one_pass(work)
-        return res.where("is_outlier")
-
-    wl = None
-    prev_cached = None
-    for _ in range(max_fixpoint_iters):
-        res = one_pass(work).cache()
-        if wl is None:
-            wl = whitelist_predicate(
-                value_set_col(res, df.columns), whitelist_literals, whitelist_regexps
-            )
-        retract = res.where(F.col("is_outlier") & wl)
-        n_retract = retract.count()
-        if prev_cached is not None:
-            # the new iteration is materialized past its parent now — the
-            # parent's cache is dead weight (bounded either way, but no
-            # reason to hold max_fixpoint_iters copies of the window)
-            prev_cached.unpersist()
-        if n_retract == 0:
-            # materialize the answer, then release the cache — a long-lived
-            # session must not keep one pinned window per analyzer call
-            out = res.where("is_outlier").localCheckpoint(eager=True)
-            res.unpersist()
-            return out
-        # drop whitelisted flagged docs from the window and recompute
-        work = res.where(~(F.col("is_outlier") & wl)).select(*df.columns)
-        prev_cached = res
-    out = one_pass(work).where("is_outlier").localCheckpoint(eager=True)
-    if prev_cached is not None:
-        prev_cached.unpersist()
-    return out
+    return retract_fixpoint(one_pass, df, whitelist_literals,
+                            whitelist_regexps, max_fixpoint_iters)

@@ -17,8 +17,12 @@ literal expression tree, broadcast implicitly with the plan.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 
 def value_set_col(df: DataFrame, cols: list[str] | None = None) -> Column:
@@ -59,3 +63,46 @@ def whitelist_predicate(
             cond = cond & _rx_exists(f"(?i)^(?:{rx})$")
         pred = pred | cond
     return pred
+
+
+def retract_fixpoint(
+    one_pass: Callable[[DataFrame], DataFrame],
+    df: DataFrame,
+    literals: list[list[str]] | None,
+    regexps: list[list[str]] | None,
+    max_iters: int,
+) -> DataFrame:
+    """Outlier rows of ``one_pass`` after the whitelist-retract fixpoint:
+    whitelisted outliers are dropped from the window and the analyzer is
+    re-run until no flagged row is whitelisted (or ``max_iters`` passes).
+    ``one_pass`` maps a window to rows + ``is_outlier``; ``df``'s columns
+    are the window's and feed the whitelist value set."""
+    if not (literals or regexps):
+        return one_pass(df).where("is_outlier")
+
+    work = df
+    wl = None
+    prev_cached = None
+    for _ in range(max_iters):
+        res = one_pass(work).cache()
+        if wl is None:
+            wl = whitelist_predicate(
+                value_set_col(res, df.columns), literals, regexps)
+        n_retract = res.where(F.col("is_outlier") & wl).count()
+        if prev_cached is not None:
+            # the new iteration is materialized past its parent — drop the
+            # parent's cache so the loop never pins more than two copies
+            prev_cached.unpersist()
+        if n_retract == 0:
+            # materialize the answer, then release the cache — a long-lived
+            # session must not keep one pinned window per analyzer call
+            out = materialize(res.where("is_outlier"))
+            res.unpersist()
+            return out
+        # drop whitelisted flagged docs from the window and recompute
+        work = res.where(~(F.col("is_outlier") & wl)).select(*df.columns)
+        prev_cached = res
+    out = materialize(one_pass(work).where("is_outlier"))
+    if prev_cached is not None:
+        prev_cached.unpersist()
+    return out

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import materialize
 from ..tokenizer import tokens_col
 from .frontier import flag_outliers
 from .terms import aggregator_col
@@ -207,19 +208,13 @@ def _scored_pairs(
     window: int, max_voc_size: int, min_voc_occurrence: int,
     use_prob_model: bool = True, nn_params: dict | None = None,
 ) -> DataFrame:
-    # Every frame here is referenced more than once (toks: vocabulary +
-    # vocab join; toks_voc: both skip-gram self-join sides; pairs: the
-    # model aggregation AND the score join), so without materialization
-    # each reference re-expands the whole upstream subtree — the executed
-    # plan re-ran the corpus scan+tokenize 8+ times. Eager localCheckpoints
-    # run each stage exactly once (same fix as the dedup pair generators).
-    toks = tokens_positions(df, groups, text_id, text_col).localCheckpoint(
-        eager=True)
+    # toks: vocabulary + vocab join; toks_voc: both skip-gram self-join
+    # sides; pairs: the model aggregation AND the score join
+    toks = materialize(tokens_positions(df, groups, text_id, text_col))
     voc = vocabulary(toks, max_voc_size, min_voc_occurrence)
-    toks_voc = toks.join(voc, ["aggregator", "word"]).select(
-        "aggregator", "text_id", "pos", "voc_word"
-    ).localCheckpoint(eager=True)
-    pairs = skipgram_pairs(toks_voc, window).localCheckpoint(eager=True)
+    toks_voc = materialize(toks.join(voc, ["aggregator", "word"]).select(
+        "aggregator", "text_id", "pos", "voc_word"))
+    pairs = materialize(skipgram_pairs(toks_voc, window))
     model = (prob_model(pairs) if use_prob_model
              else nn_model(pairs, **(nn_params or {})))
     return pairs.join(model, ["aggregator", "center", "ctx"])

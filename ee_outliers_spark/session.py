@@ -39,6 +39,22 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and return a frame that reads the computed rows —
+    the one intra-query materialization policy for frames referenced more
+    than once (self-join sides, count + join, iterative rounds):
+
+    - the upstream plan runs exactly once (an eager action);
+    - lineage is truncated, which keeps iterative plans such as
+      ``duplicate_clusters`` O(current data) per round;
+    - blocks are NOT registered with the cache manager: nothing is pinned,
+      and Spark's ContextCleaner releases them after the returned DataFrame
+      is garbage-collected;
+    - blocks are unreplicated (``localCheckpoint``), so losing an executor
+      after this call fails the query that reads them."""
+    return df.localCheckpoint(eager=True)
+
+
 def get_spark(
     app_name: str = "ee-outliers-spark",
     master: str | None = None,

@@ -25,8 +25,6 @@ streaming). The Spark-native equivalents:
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +32,8 @@ from pyspark.sql import functions as F
 
 from ..index.build import (
     IndexPaths, collect_sidecar_rows, incremental_append_refresh, load_stats,
-    refresh_stats_and_termstats, segment_frames_df, write_manifest,
+    read_manifest, refresh_stats_and_termstats, segment_dir_ids,
+    segment_frames_df, write_manifest,
 )
 
 
@@ -61,14 +60,7 @@ def append_segments(
         return []
 
     positions = bool(stats.get("positions", False))  # match the base index
-    # max existing seg_id from the partition DIRECTORIES (seg_id is the
-    # partition column): the previous full-table max(seg_id) scanned every
-    # live segment's parquet per append — an O(index) Spark job for one int
-    base_seg = max(
-        (int(p.split("=", 1)[1]) for p in os.listdir(paths.segments)
-         if p.startswith("seg_id=")),
-        default=0,
-    ) + 1
+    base_seg = max(segment_dir_ids(paths), default=0) + 1
 
     t0 = time.monotonic()
     segment_frames_df(
@@ -96,8 +88,7 @@ def append_segments(
         new_live = (sorted(set(live) | set(new_ids))
                     if live is not None else None)
         refresh_stats_and_termstats(spark, paths, live=new_live)
-    with open(paths.manifest) as fh:
-        done = {json.loads(l)["seg_id"] for l in fh if l.strip()}
+    done = {r["seg_id"] for r in read_manifest(paths)}
     return sorted(s for s in new_ids if s in done)
 
 

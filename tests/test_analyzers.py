@@ -1,5 +1,5 @@
 """Analyzer layer vs hand-computed oracles on crafted micro-data:
-terms within/across (incl. whitelist-retract fixpoint), metrics,
+terms within/across and metrics (incl. whitelist-retract fixpoint),
 simplequery must_not, sudden_appearance window semantics."""
 
 import datetime as dt
@@ -46,6 +46,22 @@ def test_terms_whitelist_fixpoint(spark):
         whitelist_literals=[["z"]],
     )
     assert out.count() == 0
+
+
+def test_metrics_whitelist_fixpoint(spark):
+    # lengths 2×6, 5, 40; stdev 1.5 high (population σ): pass 1 frontier
+    # 25.8 flags only the 40-char row, which is whitelisted; pass 2 over the
+    # rest has frontier 4.0 and flags the 5-char row. A single pass followed
+    # by a whitelist filter would return nothing.
+    long_val = "x" * 40
+    rows = [("g", "aa")] * 6 + [("g", "ccccc"), ("g", long_val)]
+    df = spark.createDataFrame(rows, "grp string, val string")
+    out = metrics_outliers(
+        df, ["grp"], "val", "length", "stdev", 1.5, "high",
+        whitelist_literals=[[long_val]],
+    )
+    assert [(r["val"], r["metric_value"]) for r in out.collect()] == [
+        ("ccccc", 5.0)]
 
 
 def test_terms_min_target_buckets(spark):

@@ -9,9 +9,7 @@ import pytest
 from ee_outliers_spark.index.build import (
     build_doc_lengths, build_postings, build_segments, corpus_stats,
 )
-from ee_outliers_spark.index.query import (
-    bm25_topk_df, bm25_topk_wand, phrase_topk_df,
-)
+from ee_outliers_spark.index.query import bm25_topk_df, bm25_topk_wand
 from ee_outliers_spark.oracle import OracleIndex
 
 K = 20
@@ -65,14 +63,6 @@ def test_df_path_rank_identity(terms, mode, naive, oracle):
 def test_wand_path_rank_identity(terms, mode, spark, seg_paths, oracle):
     got = bm25_topk_wand(spark, seg_paths, terms, K, mode).collect()
     _check(got, oracle.topk(terms, K, mode))
-
-
-@pytest.mark.parametrize("phrase", ["key order", "batch batch", "no such phrase here"])
-def test_phrase_rank_identity(phrase, spark, documents, naive, oracle):
-    _, doclen, n, avgdl = naive
-    got = phrase_topk_df(documents, "doc_id", "text", doclen, n, avgdl, phrase, K).collect()
-    from ee_outliers_spark.tokenizer import tokenize_py
-    _check(got, oracle.phrase_topk(tokenize_py(phrase), K))
 
 
 @pytest.fixture(scope="module")

@@ -143,7 +143,7 @@ def test_pair_generators_arrow_pass_not_duplicated(spark, near_dup_docs):
     exchange — so without up-front materialization the pass is evaluated
     once PER REFERENCE (the ngram executed plan held EIGHT copies of the
     tokenize+shingle kernel). Each generator materializes the pass once
-    (eager localCheckpoint); the returned plans must therefore contain NO
+    (``session.materialize``); the returned plans must therefore contain NO
     Python evaluation node — a reappearing {Arrow,Batch}EvalPython means
     the duplication regressed."""
     from ee_outliers_spark.operators.dedup import (
