@@ -61,12 +61,8 @@ def worker(out_path: str | None) -> None:
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from ee_outliers_spark.index.build import (
-        build_doc_lengths, build_postings, build_segments, corpus_stats,
-    )
-    from ee_outliers_spark.index.query import (
-        bm25_topk_df, bm25_topk_wand, phrase_topk_wand,
-    )
+    from ee_outliers_spark.index.build import build_segments
+    from ee_outliers_spark.index.query import bm25_topk_wand, phrase_topk_wand
     from ee_outliers_spark.operators.dedup import minhash_lsh_pairs
     from ee_outliers_spark.operators.metrics_analyzer import metrics_outliers
     from ee_outliers_spark.operators.similarity import cosine_topk
@@ -143,15 +139,6 @@ def worker(out_path: str | None) -> None:
             spark, pos_paths, "key order", 10).collect())
     finally:
         shutil.rmtree(pos_dir, ignore_errors=True)
-
-    # --- BM25 DataFrame path (naive postings, built once, cached) ------------
-    postings = build_postings(docs, "doc_id", "text").cache()
-    doclen = build_doc_lengths(docs, "doc_id", "text").cache()
-    n, avgdl = corpus_stats(doclen)
-    postings.count()
-    timed("df_conj", lambda: bm25_topk_df(
-        postings, doclen, n, avgdl, ["customer", "window", "batch"], 10, "and"
-    ).collect())
 
     # --- filter context + text profiling (index-backed / codegen paths) ------
     from ee_outliers_spark.index.cache import corpus_index

@@ -12,7 +12,7 @@ DataFrame programs:
                      byte-identical html→text extraction invariant.
 - ``index``        — SPIMI per-partition posting-list build, varbyte+delta-gap
                      compression, block-max metadata, LSM merge, BM25 top-k
-                     (DataFrame path and block-max WAND path).
+                     (one per-segment block-max scoring kernel).
 - ``queryparser``  — Lucene-subset query_string grammar (ref: es.py:238-250).
 - ``operators``    — the analyzer layer: simplequery / terms / metrics /
                      sudden_appearance / word2vec-prob, decision frontiers,

@@ -679,10 +679,10 @@ FROM scores ORDER BY score DESC, doc_id ASC LIMIT {k}
 
 
 # Wildcard + regexp scored queries in one tagged gate: both expand against
-# the index's term dictionary (distributed segment scan, never a
-# driver-side list; Lucene MultiTermQuery scoring_boolean rewrite), each
-# expanded term scoring as its own BM25 clause. The SQL oracle runs the
-# same expansion over the corpus's own distinct-token dictionary.
+# the index's term dictionary (one pyarrow read of termstats on the driver;
+# Lucene MultiTermQuery scoring_boolean rewrite), each expanded term scoring
+# as its own BM25 clause. The SQL oracle runs the same expansion over the
+# corpus's own distinct-token dictionary.
 _PATTERN_TOPK = [
     ("wild", "cust* window", "cust[a-z0-9]*"),
     ("regexp", "/cust[oe]mer/ window", "cust[oe]mer"),

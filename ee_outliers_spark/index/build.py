@@ -1,28 +1,21 @@
-"""Index build: single-pass SPIMI per-partition segments + a naive
-exploded-postings path.
+"""Index build: single-pass SPIMI per-partition segments.
 
 Replaces the indexing work the reference delegates to Elasticsearch/Lucene
 (every query in /root/reference/app/helpers/es.py:664-710 walks an ES
 inverted index; here we build that index with Spark jobs).
 
-Two representations:
-
-1. **Naive postings** (``build_postings``): (term, doc_id, tf) rows via
-   explode + groupBy. Pure DataFrame, used as the differential oracle for the
-   compressed path and for the DataFrame BM25 scorer.
-
-2. **SPIMI segments** (``build_segments``): docs are assigned to segments by
-   ``doc_id % num_segments`` (deterministic → resumable), each segment built
-   *inside one task* with zero token shuffle (the SPIMI trick: partition-local
-   inversion). The kernel emits, per segment:
-   - one row per term: delta-gap + varbyte compressed docIDs, varbyte tfs,
-     and per-128-posting block metadata (last docID, max tf, min dl — the
-     avgdl-INDEPENDENT extremes from which ``block_upper_bound`` derives a
-     safe block-max WAND bound at query time, so incremental appends that
-     shift avgdl never invalidate old segments);
-   - one sidecar row (term = NULL) carrying the segment's compressed
-     doclen map (docIDs + lengths) and its (n_docs, sum_dl) for global stats.
-   ONE shuffle (doc→segment repartition), ONE pandas pass, ONE write.
+**SPIMI segments** (``build_segments``): docs are assigned to segments by
+``doc_id % num_segments`` (deterministic → resumable), each segment built
+*inside one task* with zero token shuffle (the SPIMI trick: partition-local
+inversion). The kernel emits, per segment:
+- one row per term: delta-gap + varbyte compressed docIDs, varbyte tfs,
+  and per-128-posting block metadata (last docID, max tf, min dl — the
+  avgdl-INDEPENDENT extremes from which ``block_upper_bound`` derives a
+  safe block-max WAND bound at query time, so incremental appends that
+  shift avgdl never invalidate old segments);
+- one sidecar row (term = NULL) carrying the segment's compressed
+  doclen map (docIDs + lengths) and its (n_docs, sum_dl) for global stats.
+ONE shuffle (doc→segment repartition), ONE pandas pass, ONE write.
 
 Scale design (10^12 docs):
 - token inversion never shuffles: the only data shuffle is the doc→segment
@@ -51,7 +44,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tokenizer import tokens_col
 from .codec import varbyte_encode, varbyte_encode_with_lengths
 
 BLOCK = 128
@@ -75,34 +67,6 @@ _SEG_COLS = [
     "block_last_doc", "block_max_tf", "block_min_dl", "block_pos_ends",
     "n_docs", "sum_dl", "build_secs",
 ]
-
-
-# --------------------------------------------------------------------------
-# naive path (differential oracle + DataFrame BM25 input)
-# --------------------------------------------------------------------------
-
-def build_postings(df: DataFrame, doc_col: str, text_col: str) -> DataFrame:
-    """(term, doc_id, tf) — map-side partial agg keeps the shuffle small."""
-    toks = df.select(
-        F.col(doc_col).alias("doc_id"),
-        F.explode(tokens_col(text_col)).alias("term"),
-    )
-    return toks.groupBy("term", "doc_id").agg(F.count("*").cast("long").alias("tf"))
-
-
-def build_doc_lengths(df: DataFrame, doc_col: str, text_col: str) -> DataFrame:
-    """(doc_id, dl) — narrow map, no shuffle."""
-    return df.select(
-        F.col(doc_col).alias("doc_id"),
-        F.size(tokens_col(text_col)).cast("long").alias("dl"),
-    )
-
-
-def corpus_stats(doclen: DataFrame) -> tuple[int, float]:
-    row = doclen.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    return int(row["n"]), float(row["avgdl"] or 0.0)
 
 
 # --------------------------------------------------------------------------

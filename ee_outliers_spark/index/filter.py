@@ -369,24 +369,54 @@ def text_only(node, positional: bool) -> bool:
     return walk(node)
 
 
-def _pattern_specs(node) -> dict[str, tuple | None]:
-    """marker key → picklable matcher spec over dictionary term strings:
-    ("re", regex_source) for wildcards, ("lev", token, max_edits) for
-    fuzzies, None when the atom can never match a token."""
+def wildcard_spec(pattern: str) -> tuple | None:
+    """Matcher spec of a wildcard atom (see ``spec_matcher``); None when the
+    pattern can never match a token."""
     from ..queryparser import wildcard_token_body
 
+    body = wildcard_token_body(pattern)
+    return None if body is None else ("re", f"({body})")
+
+
+def regexp_spec(pattern: str) -> tuple:
+    """Matcher spec of a `/regexp/` atom (see ``spec_matcher``)."""
+    from ..queryparser import regexp_token_body
+
+    return ("re", f"(?:{regexp_token_body(pattern)})")
+
+
+def spec_matcher(spec: tuple | None):
+    """term → bool: the Python twin of a pattern atom's dictionary
+    predicate (``query.wildcard_term_pred`` / ``regexp_term_pred`` /
+    ``fuzzy_term_pred``) for a picklable spec — ("re", regex_source) or
+    ("lev", token, max_edits); None matches nothing. ':'-containing terms
+    are field-qualified entries, which a main-text pattern never matches
+    even when '.' or a negated class in the dialect could (tokens have no
+    ':')."""
+    import re
+
+    from ..queryparser import levenshtein_py
+
+    if spec is None:
+        return lambda term: False
+    if spec[0] == "re":
+        rx = re.compile(spec[1])
+        return lambda term: ":" not in term and rx.fullmatch(term) is not None
+    _, tok, m = spec
+    return lambda term: (":" not in term and abs(len(term) - len(tok)) <= m
+                         and levenshtein_py(term, tok) <= m)
+
+
+def _pattern_specs(node) -> dict[str, tuple | None]:
+    """marker key → matcher spec (``spec_matcher``) of every Wildcard /
+    Regexp / Fuzzy atom in the AST."""
     out: dict[str, tuple | None] = {}
 
     def walk(n):
         if isinstance(n, Wildcard):
-            if wildcard_key(n.text) not in out:
-                body = wildcard_token_body(n.text)
-                out[wildcard_key(n.text)] = (
-                    None if body is None else ("re", f"({body})"))
+            out.setdefault(wildcard_key(n.text), wildcard_spec(n.text))
         elif isinstance(n, Regexp):
-            from ..queryparser import regexp_token_body
-            out.setdefault(regexp_key(n.pattern),
-                           ("re", f"(?:{regexp_token_body(n.pattern)})"))
+            out.setdefault(regexp_key(n.pattern), regexp_spec(n.pattern))
         elif isinstance(n, Fuzzy):
             toks = tokenize_py(n.text)
             k = fuzzy_key(n.text, n.max_edits)
@@ -529,31 +559,12 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
                 varbyte_decode(bytes(dblob))).astype(np.int64)
         nothing = np.empty(0, dtype=np.int64)
 
-        import re as _re
-
-        from ..queryparser import levenshtein_py
-
         pat_sets: dict[str, np.ndarray] = {}
         for k, spec in specs.items():
-            if spec is None:
-                pat_sets[k] = nothing
-            elif spec[0] == "re":
-                rx = _re.compile(spec[1])
-                # ':'-containing keys are field-qualified entries — a
-                # main-text pattern must not match them even when '.' or a
-                # negated class in the dialect could (tokens have no ':')
-                parts = [d for t, d in docsets.items()
-                         if ":" not in t and rx.fullmatch(t)]
-                pat_sets[k] = (np.unique(np.concatenate(parts))
-                               if parts else nothing)
-            else:
-                _, tok, m = spec
-                parts = [d for t, d in docsets.items()
-                         if ":" not in t
-                         and abs(len(t) - len(tok)) <= m
-                         and levenshtein_py(t, tok) <= m]
-                pat_sets[k] = (np.unique(np.concatenate(parts))
-                               if parts else nothing)
+            match = spec_matcher(spec)
+            parts = [d for t, d in docsets.items() if match(t)]
+            pat_sets[k] = (np.unique(np.concatenate(parts))
+                           if parts else nothing)
 
         # phrases: positions decode LAZILY per evaluation, restricted to the
         # current candidate set — under `A AND "x y"` only candidate blocks

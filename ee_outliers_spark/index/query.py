@@ -4,23 +4,25 @@ Replaces Elasticsearch query_string scoring (ref F2/T-BM25, SURVEY §2.2/§2.6;
 /root/reference/app/helpers/es.py:238-250 ships the query to ES — here the
 whole scoring pipeline is Spark).
 
-Two executors, rank-identical to each other and to the pure-Python oracle:
+One BM25 scoring kernel, ``_score_segments``, rank-identical to the
+pure-Python oracle. Segments are doc-disjoint, so one applyInPandas task per
+segment sums each doc's contributions and keeps a local top-k — block-max
+pruned over the compressed 128-posting blocks (Broder et al.; Ding & Suel) —
+and the global answer is one TakeOrdered over the local candidates:
 
-1. ``bm25_topk_df`` — declarative DataFrame plan over naive (term, doc_id, tf)
-   postings: pushdown filter on term IN (...), broadcast term-stats join,
-   hash-agg per doc, TakeOrderedAndProject for the global top-k. Catalyst
-   picks partial aggregation and the limit-pushdown automatically.
+- ``bm25_topk_wand`` scores a bag of terms at weight 1;
+- ``querystring_topk`` scores a query_string's positive atoms as one
+  disjunction (wildcard / regexp / fuzzy atoms expand against the term
+  dictionary on the driver, phrases match positions inside the task);
+- ``search_topk`` scores every doc the kernel reaches (k=None) and joins the
+  scores to the boolean's eligible ids.
 
-2. ``bm25_topk_wand`` — block-max WAND (Broder et al.; Ding & Suel block-max)
-   over compressed SPIMI segments: segments are doc-disjoint, so each task
-   runs an independent DAAT WAND over its segment's postings with a local
-   top-k heap; global answer = union of per-segment candidates → top-k. The
-   block-max metadata lets a segment skip whole 128-posting blocks whose
-   upper-bound score can't beat the local heap threshold.
+``phrase_topk_wand`` scores a multi-token phrase from its positional matches
+(``_phrase_hits``); a single-token phrase goes to the term kernel.
 
 Scale: query-term pushdown prunes the parquet scan to |q| rows per segment;
-per-segment WAND never materializes a full posting list on the driver;
-the final top-k is a tree reduction (orderBy+limit ⇒ TakeOrdered).
+no posting list is materialized on the driver and no per-term contribution
+is shuffled; the final top-k is a tree reduction (orderBy+limit ⇒ TakeOrdered).
 """
 
 from __future__ import annotations
@@ -49,24 +51,33 @@ def _idf(n_docs: int, df_: int) -> float:
     return math.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5))
 
 
-def _termstats_lookup(paths: IndexPaths, terms: list[str]) -> dict[str, int]:
-    """{term: df} for an explicit small term list, read DIRECTLY from the
-    termstats parquet with pyarrow on the driver (row-group statistics
-    pruning + an IN filter). Dictionary-metadata lookups are |q| rows out
-    of a vocabulary-sized table; launching a Spark job for them cost one
-    full scheduling round trip (~0.15-0.3 s) on EVERY top-k/phrase query —
-    the same stats.json/local-read pattern load_stats already uses. Pattern
-    predicates (wildcard/regexp/fuzzy expansion) still go through the
-    distributed scan — only exact term lists take this path."""
+def _term_weights(paths: IndexPaths, stats: dict, boosts: dict[str, float],
+                  patterns=()) -> dict[str, float]:
+    """{dictionary term: idf × weight} — Lucene's scoring_boolean rewrite,
+    on the driver. A term's weight is its literal boost in ``boosts`` plus
+    the boost of every ``(matcher, boost)`` in ``patterns`` whose matcher
+    (``filter.spec_matcher``) accepts it; zero-df terms are absent. The
+    termstats table is read directly with pyarrow — an IN filter on the row
+    groups for literal lookups, the (term, df) columns whole when there are
+    patterns — so no Spark job runs for it. Field-qualified terms take
+    their field's docCount for idf."""
     import pyarrow.parquet as pq
 
-    out: dict[str, int] = {}
-    flt = [("term", "in", list(terms))]
+    if not boosts and not patterns:
+        return {}
+    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
+    fnorms = _field_norms(stats)
+    flt = None if patterns else [("term", "in", list(boosts))]
+    out: dict[str, float] = {}
     for f in termstats_files(paths):
         t = pq.read_table(f, columns=["term", "df"], filters=flt)
         for term, d in zip(t.column("term").to_pylist(),
                            t.column("df").to_pylist()):
-            out[term] = int(d)
+            hits = [b for match, b in patterns if match(term)]
+            if term in boosts or hits:
+                w = boosts.get(term, 0.0) + sum(hits)
+                n = _term_norm(term, fnorms, n_docs, avgdl)[0]
+                out[term] = _idf(n, int(d)) * w
     return out
 
 
@@ -97,77 +108,6 @@ def _term_norm(term: str, fnorms: dict, n_docs: int, avgdl: float
     if fld is not None and fld in fnorms:
         return fnorms[fld]
     return n_docs, avgdl
-
-
-# --------------------------------------------------------------------------
-# DataFrame path (naive postings)
-# --------------------------------------------------------------------------
-
-def bm25_score_df(
-    postings: DataFrame,
-    doclen: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    terms: list[str],
-    mode: str = "or",
-) -> DataFrame:
-    """Per-doc BM25 scores for a bag of query terms → (doc_id, score).
-
-    mode='and' keeps only docs containing every distinct query term
-    (conjunctive filter context, ref F1 es.py:664-710).
-    """
-    terms = list(dict.fromkeys(terms))
-    p = postings.where(F.col("term").isin(terms))  # pushed to the scan
-    # df per term — vocabulary-sized, broadcast
-    tstats = p.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    # broadcast the doclen side when the corpus provably fits (n_docs is a
-    # parameter): the postings stream then reaches its doc_id aggregation
-    # through ONE exchange instead of a sort-merge shuffle of both sides
-    # (guide §3.1). Large corpora keep the shuffle join — doclen is
-    # corpus-sized and must never become an unbounded broadcast.
-    dl = F.broadcast(doclen) if n_docs <= 500_000 else doclen
-    scored = (
-        p.join(F.broadcast(tstats), "term")
-        .join(dl, "doc_id")
-        .select(
-            "doc_id",
-            "term",
-            (
-                idf
-                * (F.col("tf") * (K1 + 1.0))
-                / (
-                    F.col("tf")
-                    + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl)))
-                )
-            ).alias("contrib"),
-        )
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("contrib").alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    if mode == "and":
-        agg = agg.where(F.col("n_terms") == len(terms))
-    return agg.select("doc_id", "score")
-
-
-def bm25_topk_df(
-    postings: DataFrame,
-    doclen: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    terms: list[str],
-    k: int,
-    mode: str = "or",
-) -> DataFrame:
-    return (
-        bm25_score_df(postings, doclen, n_docs, avgdl, terms, mode)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
 
 
 def _sloppy_tf(plists: dict, phrase_terms: list[str], doc: int,
@@ -248,6 +188,16 @@ def _ragged_gather(flat: np.ndarray, bounds: np.ndarray,
     vals = flat[np.arange(total, dtype=np.int64) + shift]
     owner = np.repeat(np.arange(len(cand), dtype=np.int64), counts)
     return vals.astype(np.int64), owner
+
+
+def _raw_positional(doc_blob, tf_blob, pos_blob, block_pos_ends) -> tuple:
+    """One positional term row as a ``_lazy_plists`` ``raw`` entry: (docs,
+    tfs, pos_blob, block_pos_ends|None)."""
+    return (np.cumsum(varbyte_decode(bytes(doc_blob))).astype(np.int64),
+            varbyte_decode(bytes(tf_blob)).astype(np.int64),
+            bytes(pos_blob),
+            None if block_pos_ends is None
+            else np.asarray(block_pos_ends, np.int64))
 
 
 def _lazy_plists(raw: dict, distinct: list[str],
@@ -417,24 +367,21 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths,
     """(doc_id, tf, dl) for every doc containing the phrase (optionally with
     ``slop``, Lucene sloppy-phrase semantics — see ``_sloppy_tf``), off the
     index. None when the phrase trivially matches nothing (empty after
-    tokenize, or contains a zero-df term). Single-token 'phrases' degrade to
-    a plain posting-list read (no positions needed). A list argument is
+    tokenize, or contains a zero-df term). Callers pass multi-token phrases;
+    a single token is a term, scored by the term kernel. A list argument is
     taken as ALREADY-analyzed dictionary terms (the per-field path passes
     `field:token`-qualified terms)."""
     toks = list(phrase) if isinstance(phrase, list) else tokenize_py(phrase)
-    m = len(toks)
-    if m == 0:
+    if not toks:
         return None
     stats = load_stats(paths)
-    if m == 1:
-        return posting_tfs_df(spark, paths, toks).select("doc_id", "tf", "dl")
     if not stats.get("positions"):
         raise ValueError(
             "phrase queries need a positional index "
             "(build_segments(..., positions=True))")
     distinct = list(dict.fromkeys(toks))
 
-    present = len(_termstats_lookup(paths, distinct))
+    present = len(_term_weights(paths, stats, dict.fromkeys(distinct, 1.0)))
     if present < len(distinct):
         # a phrase containing a zero-df term matches nothing anywhere
         return None
@@ -479,10 +426,7 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths,
         for term, dblob, tblob, pblob, bpe in zip(
                 term_rows["term"], term_rows["doc_blob"],
                 term_rows["tf_blob"], term_rows["pos_blob"], bpes):
-            docs = np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64)
-            tfs = varbyte_decode(bytes(tblob)).astype(np.int64)
-            raw[term] = (docs, tfs, bytes(pblob),
-                         None if bpe is None else np.asarray(bpe, np.int64))
+            raw[term] = _raw_positional(dblob, tblob, pblob, bpe)
         inter, plists = _lazy_plists(raw, distinct)
         if plists is None:
             return empty
@@ -514,8 +458,11 @@ def phrase_topk_wand(
     pushed to the scan) plus the doclen sidecars — at 10^12 docs a phrase
     query touches |q| posting lists per segment, never the documents table.
     Requires an index built with ``positions=True`` (single-token phrases
-    work on any index)."""
-    hits = _phrase_hits(spark, paths, phrase)
+    are term queries and work on any index)."""
+    toks = tokenize_py(phrase)
+    if len(toks) == 1:
+        return bm25_topk_wand(spark, paths, toks, k)
+    hits = _phrase_hits(spark, paths, toks)
     if hits is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
     stats = load_stats(paths)
@@ -535,85 +482,6 @@ def phrase_topk_wand(
         ).alias("score"),
     )
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def posting_tfs_df(spark: SparkSession, paths: IndexPaths,
-                   terms: list[str] | None = None,
-                   term_pred: Column | None = None) -> DataFrame:
-    """(term, doc_id, tf, dl) decoded from the compressed segments for the
-    requested terms only — the term IN (...) filter (or an arbitrary
-    ``term_pred`` Column over the dictionary's term strings, e.g. a wildcard
-    rlike or a levenshtein bound — Lucene MultiTermQuery expansion as a
-    distributed dictionary scan, never a driver-side term list) reaches the
-    parquet scan, so only matching dictionary rows per segment are read
-    regardless of corpus size. The doc length rides along from the segment's
-    co-located sidecar row (searchsorted gather inside the same task), so
-    scoring needs NO shuffle join against a corpus-wide doclen table."""
-    if term_pred is None:
-        term_pred = F.col("term").isin(terms or [])
-    # "field:" norm sidecars ride along (one tiny row per field per segment)
-    # so `field:token` entries get the FIELD's doc length, not the text's
-    segs = read_live_segments(spark, paths).where(
-        term_pred | F.col("term").isNull()
-        | (F.col("term").isNotNull() & F.col("term").endswith(":"))
-    ).select("seg_id", "term", "doc_blob", "tf_blob")
-
-    def decode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "term": pd.Series(dtype="object"),
-            "doc_id": pd.Series(dtype="int64"),
-            "tf": pd.Series(dtype="int64"),
-            "dl": pd.Series(dtype="int64"),
-        })
-        dl_rows = pdf[pdf["term"].isna()]
-        notna = pdf[pdf["term"].notna()]
-        fmask = notna["term"].str.endswith(":")
-        sidecars = {}
-        for fterm, grp in notna[fmask].groupby("term"):
-            sidecars[fterm] = (
-                np.cumsum(varbyte_decode(
-                    bytes(grp["doc_blob"].iloc[0]))).astype(np.int64),
-                varbyte_decode(bytes(grp["tf_blob"].iloc[0])).astype(np.int64))
-        term_rows = notna[~fmask]
-        if dl_rows.empty or term_rows.empty:
-            return empty
-        sidecars[None] = (
-            np.cumsum(varbyte_decode(
-                bytes(dl_rows["doc_blob"].iloc[0]))).astype(np.int64),
-            varbyte_decode(bytes(dl_rows["tf_blob"].iloc[0])).astype(np.int64))
-        ts, ds, fs, dls = [], [], [], []
-        for term, dblob, tblob in zip(term_rows["term"], term_rows["doc_blob"],
-                                      term_rows["tf_blob"]):
-            docs = np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64)
-            ts.append(np.full(len(docs), term, dtype=object))
-            ds.append(docs)
-            fs.append(varbyte_decode(bytes(tblob)).astype(np.int64))
-            fld = _term_field(term)
-            sd, sv = sidecars.get(
-                (fld + ":") if fld is not None else None, sidecars[None])
-            dls.append(sv[np.searchsorted(sd, docs)])
-        return pd.DataFrame({
-            "term": np.concatenate(ts),
-            "doc_id": np.concatenate(ds),
-            "tf": np.concatenate(fs),
-            "dl": np.concatenate(dls),
-        })
-
-    return routed_segment_groupby(
-        segs, live_seg_ids(load_stats(paths))).applyInPandas(
-        decode, schema="term string, doc_id long, tf long, dl long")
-
-
-def phrase_matches_df(spark: SparkSession, paths: IndexPaths,
-                      phrase: str, slop: int = 0) -> DataFrame:
-    """(doc_id, tf, dl) for EVERY doc containing the phrase (positional
-    intersection per segment — the unbounded-k inner kernel of
-    ``phrase_topk_wand``; ``slop`` > 0 = Lucene sloppy phrase), for callers
-    that need full match sets rather than a top-k (e.g. mixed query_string
-    scoring)."""
-    hits = _phrase_hits(spark, paths, phrase, slop)
-    return (spark.createDataFrame([], "doc_id long, tf long, dl long")
-            if hits is None else hits)
 
 
 def wildcard_term_pred(pattern: str) -> Column | None:
@@ -671,150 +539,70 @@ def querystring_topk(
 ) -> DataFrame:
     """Top-k BM25 over a full ES query_string with MIXED positive clauses —
     bare terms AND quoted phrases scored together (ES's flagship surface,
-    ref F2 /root/reference/app/helpers/es.py:238-250; quoted phrases
-    throughout documentation/CONFIG_OUTLIERS.md examples), entirely off the
-    index: term contributions from the posting lists, phrase contributions
-    from the positional blobs, summed per doc (SHOULD semantics — a doc
-    matching any positive clause scores), global top-k via TakeOrdered.
-    Negated/field clauses are filter-only in ES scoring and are not part of
-    this scorer — compose with ``indexed_filter`` for those.
+    ref F2 app/helpers/es.py:238-250; quoted phrases throughout
+    documentation/CONFIG_OUTLIERS.md examples), entirely off the index: one
+    disjunction over every positive atom in the scoring kernel (SHOULD
+    semantics — a doc matching any positive clause scores), global top-k via
+    TakeOrdered. Negated/field clauses are filter-only in ES scoring and are
+    not part of this scorer — compose with ``indexed_filter`` for those.
 
-    Wildcard (`fo?bar*`) and fuzzy (`term~1`) atoms use Lucene's
-    scoring_boolean rewrite: the atom expands against the term dictionary
-    (a distributed termstats/segments scan with the pattern predicate — no
-    driver-side term list) and every expanded term contributes its own
-    BM25 clause. Sloppy phrases (`"a b"~2`) score with the sloppy tf."""
+    Wildcard (`fo?bar*`), regexp (`/re/`) and fuzzy (`term~1`) atoms use
+    Lucene's scoring_boolean rewrite: the atom expands against the term
+    dictionary on the driver (``_term_weights``) and every expanded term
+    contributes its own BM25 clause. Sloppy phrases (`"a b"~2`) score with
+    the sloppy tf."""
     from ..queryparser import parse_query_string
 
     node = parse_query_string(query_string)
     node = _resolve_analyzed_for(paths, node)
-    scores = _text_scores(spark, paths, node)
-    if scores is None:
+    stats = load_stats(paths)
+    term_w, phrase_w = _query_weights(spark, paths, stats, node)
+    if not term_w and not phrase_w:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(_score_segments(spark, paths, stats, term_w, phrase_w, k), k)
 
 
-def _text_scores(spark: SparkSession, paths: IndexPaths,
-                 node) -> DataFrame | None:
-    """(doc_id, score) = summed BM25 contributions of the AST's positive
-    text atoms (terms / wildcards / fuzzies / phrases), entirely off the
-    index. None when the query has no scorable atoms."""
+def _query_weights(spark: SparkSession, paths: IndexPaths, stats: dict,
+                   node) -> tuple[dict[str, float], list[tuple]]:
+    """The AST's positive text atoms as ``_score_segments`` weights:
+    ({dictionary term: idf × summed boost}, [(tokens, slop, idf × boost)]).
+    Terms, single-token phrases and the wildcard / regexp / fuzzy atoms
+    (through their ``filter`` Python twins) go through ``_term_weights``, so
+    a term matched by several atoms carries the sum of their boosts.
+    Multi-token phrases take their dfs from one counting job over every
+    phrase's ``_phrase_hits``; phrases matching nothing are dropped."""
     from ..queryparser import collect_query_atoms
+    from .filter import regexp_spec, spec_matcher, wildcard_spec
 
     atoms = collect_query_atoms(node)
-    stats = load_stats(paths)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    fnorms = _field_norms(stats)
+    boosts: dict[str, float] = {}
+    for t, b in atoms["terms"] + [(p[0], b) for p, _, b in atoms["phrases"]
+                                  if len(p) == 1]:
+        boosts[t] = boosts.get(t, 0.0) + b
+    specs = ([(wildcard_spec(p), b) for p, b in atoms["wildcards"]]
+             + [(regexp_spec(p), b) for p, b in atoms["regexps"]]
+             + [(("lev", t, n), b) for t, n, b in atoms["fuzzies"]])
+    term_w = _term_weights(paths, stats, boosts, [
+        (spec_matcher(spec), b) for spec, b in specs if spec is not None])
 
-    def bm25(tf_col, idf_col, avgdl_col):
-        return (
-            idf_col * (tf_col * (K1 + 1.0))
-            / (tf_col + K1 * (1.0 - B + B * F.col("dl") / avgdl_col))
-        )
-
-    # per-term norm columns: `field:token` dictionary entries score with the
-    # field's docCount (idf) and avgdl (norm) — Lucene per-field similarity;
-    # main-text terms keep the corpus stats (fnorms empty → constants)
-    if fnorms:
-        n_map = F.create_map(*[F.lit(x) for f_, (nn, aa) in fnorms.items()
-                               for x in (f_, float(nn))])
-        a_map = F.create_map(*[F.lit(x) for f_, (nn, aa) in fnorms.items()
-                               for x in (f_, float(aa))])
-        fld_col = F.when(F.col("term").contains(":"),
-                         F.substring_index(F.col("term"), ":", 1))
-        n_col = F.coalesce(n_map[fld_col], F.lit(float(n_docs)))
-        a_col = F.coalesce(a_map[fld_col], F.lit(float(avgdl)))
-    else:
-        n_col = F.lit(float(n_docs))
-        a_col = F.lit(float(avgdl))
-
-    contribs: list[DataFrame] = []
-    # ONE fused dictionary scan for every term-shaped atom (literal terms,
-    # wildcards, fuzzies): the combined predicate rides the segment parquet
-    # scan once, and each dictionary term carries the SUM of the boosts of
-    # the atoms it satisfies — exact under score summation (a term matched
-    # by both a literal and a pattern contributes both clauses), and N
-    # atoms cost one scan + one shuffle instead of N of each.
-    legs: list[tuple[Column, Column]] = []  # (term predicate, weight)
-    if atoms["terms"]:
-        boosts = dict(atoms["terms"])
-        terms = list(boosts)
-        w_map = F.create_map(
-            *[F.lit(x) for t in terms for x in (t, float(boosts[t]))])
-        legs.append((F.col("term").isin(terms), w_map[F.col("term")]))
-    for w, b in atoms["wildcards"]:
-        pred = wildcard_term_pred(w)
-        if pred is not None:
-            legs.append((pred, F.lit(float(b))))
-    for p, b in atoms.get("regexps", []):
-        legs.append((regexp_term_pred(p), F.lit(float(b))))
-    for t, n, b in atoms["fuzzies"]:
-        legs.append((fuzzy_term_pred(t, n), F.lit(float(b))))
-    if legs:
-        combined = legs[0][0]
-        for pred, _ in legs[1:]:
-            combined = combined | pred
-        weight = None
-        for pred, wcol in legs:
-            part = F.when(pred, wcol).otherwise(F.lit(0.0))
-            weight = part if weight is None else weight + part
-        exp_stats = (
-            spark.read.parquet(paths.termstats).where(combined)
-            .select("term", F.col("df").cast("double").alias("__df"),
-                    weight.alias("__w"), n_col.alias("__n"),
-                    a_col.alias("__avgdl"))
-        )
-        post = posting_tfs_df(spark, paths, term_pred=combined)
-        idf_col = F.log(
-            1.0 + (F.col("__n") - F.col("__df") + 0.5)
-            / (F.col("__df") + 0.5)) * F.col("__w")
-        contribs.append(
-            post.join(F.broadcast(exp_stats), "term").select(
-                "doc_id",
-                bm25(F.col("tf"), idf_col,
-                     F.col("__avgdl")).alias("contrib")))
-    # phrase atoms: df (docs containing the phrase) is needed for idf. A
-    # driver-side count per phrase costs one synchronized job each (P+1
-    # jobs for P phrases), and a broadcast-join of the count recomputes the
-    # positional intersection (measured 4x slower at 600k). Instead ALL
-    # phrase hits union into one tagged frame materialized ONCE, then one
-    # tiny collect yields every phrase's df and the contribution uses
-    # literal idfs over the materialized rows: 2 jobs and 1x compute for
-    # any number of phrases.
-    ph_parts = []
-    ph_boosts: dict[int, float] = {}
-    ph_norm: dict[int, tuple[int, float]] = {}
-    for i, (p, slop, boost) in enumerate(atoms["phrases"]):
-        h = _phrase_hits(spark, paths, p, slop)
-        if h is not None:
-            ph_parts.append(h.select(
-                "doc_id", "tf", "dl", F.lit(i).alias("__pk")))
-            ph_boosts[i] = float(boost)
-            # per-field phrases (qualified tokens) use the field's norms
-            ph_norm[i] = _term_norm(p[0], fnorms, n_docs, avgdl)
-    if ph_parts:
-        tagged = ph_parts[0]
-        for x in ph_parts[1:]:
-            tagged = tagged.unionByName(x)
-        tagged = materialize(tagged)
-        dfs = {int(r["__pk"]): int(r["n"]) for r in
-               tagged.groupBy("__pk").agg(F.count("*").alias("n")).collect()}
-        idf_map = F.create_map(*[
-            F.lit(v) for i, n in dfs.items()
-            for v in (i, _idf(ph_norm[i][0], n) * ph_boosts[i])])
-        avgdl_map = F.create_map(*[
-            F.lit(v) for i in dfs
-            for v in (i, float(ph_norm[i][1]))])
-        contribs.append(tagged.select(
-            "doc_id",
-            bm25(F.col("tf"), idf_map[F.col("__pk")],
-                 avgdl_map[F.col("__pk")]).alias("contrib")))
-    if not contribs:
-        return None
-    allc = contribs[0]
-    for c in contribs[1:]:
-        allc = allc.unionByName(c)
-    return allc.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
+    phrases = [a for a in atoms["phrases"] if len(a[0]) > 1]
+    hits = [(i, h) for i, (p, slop, _) in enumerate(phrases)
+            if (h := _phrase_hits(spark, paths, p, slop)) is not None]
+    phrase_w: list[tuple] = []
+    if hits:
+        tagged = hits[0][1].select(F.lit(hits[0][0]).alias("__pk"))
+        for i, h in hits[1:]:
+            tagged = tagged.unionByName(h.select(F.lit(i).alias("__pk")))
+        counts = tagged.agg(*[F.count(F.when(F.col("__pk") == i, 1))
+                              for i, _ in hits]).collect()[0]
+        fnorms = _field_norms(stats)
+        for (i, _), dfp in zip(hits, counts):
+            if dfp:
+                p, slop, b = phrases[i]
+                n = _term_norm(p[0], fnorms, stats["n_docs"],
+                               stats["avgdl"])[0]
+                phrase_w.append((p, slop, _idf(n, int(dfp)) * b))
+    return term_w, phrase_w
 
 
 def search_topk(
@@ -835,19 +623,21 @@ def search_topk(
       — posting semi-joins, positional phrases, dictionary patterns; no
       corpus-text regex),
     - SCORE: the sum of the positive text atoms' BM25 contributions off the
-      index (``_text_scores``). Field/negated clauses gate but score 0,
-      like ES filter context; eligible docs with no scorable text atom rank
-      by doc_id at score 0.
+      index — the scoring kernel with k=None (``_score_segments``), so every
+      doc it reaches keeps its score. Field/negated clauses gate but score
+      0, like ES filter context; eligible docs with no scorable text atom
+      rank by doc_id at score 0.
 
-    Returns (doc_id, score) top-k. Both legs read posting lists; the score
-    join is doc_id-keyed and candidate-sized, never corpus-sized. A
-    text-only boolean skips the docs table entirely (``matching_ids`` —
-    the ES behavior: a query with no field clauses never reads _source)."""
+    Returns (doc_id, score) top-k: the eligible ids left-joined to the
+    kernel's per-doc scores, then TakeOrdered. A text-only boolean skips the
+    docs table entirely (``matching_ids`` — the ES behavior: a query with no
+    field clauses never reads _source)."""
     from ..index.filter import indexed_filter, matching_ids, text_only
 
     node = __parse(query_string)
     node = _resolve_analyzed_for(paths, node)
-    if text_only(node, bool(load_stats(paths).get("positions"))):
+    stats = load_stats(paths)
+    if text_only(node, bool(stats.get("positions"))):
         # matching_ids resolves against the INDEXED universe (incl. NOT /
         # match-all); semi-join against the caller's docs so a filtered
         # subset never yields hits outside it — Catalyst prunes the docs
@@ -859,13 +649,14 @@ def search_topk(
         eligible = indexed_filter(
             spark, paths, docs, doc_col, text_col, node, columns,
         ).select(F.col(doc_col).cast("long").alias("doc_id"))
-    scores = _text_scores(spark, paths, node)
-    if scores is None:
+    term_w, phrase_w = _query_weights(spark, paths, stats, node)
+    if not term_w and not phrase_w:
         out = eligible.withColumn("score", F.lit(0.0))
     else:
+        scores = _score_segments(spark, paths, stats, term_w, phrase_w, None)
         out = eligible.join(scores, "doc_id", "left").select(
             "doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(out, k)
 
 
 def __parse(query_string: str):
@@ -990,6 +781,33 @@ class _TermCursor:
         return self.idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / av))
 
 
+class _ListCursor:
+    """A decoded posting list — one phrase's matches in one segment — behind
+    ``_TermCursor``'s block interface (``n``, ``block_last``, ``block_max``,
+    ``_load``), so the block kernels accumulate it like a term. Its block
+    maxima are the EXACT maxima of the impacts the kernels compute from the
+    same arrays, so ``_or_segment``'s chunk bounds stay safe."""
+
+    __slots__ = ("docs", "tfs", "dls", "n", "idf", "avgdl", "block_last",
+                 "block_max", "blk_docs", "blk_tfs", "blk_dls")
+
+    def __init__(self, docs, tfs, dls, idf, avgdl):
+        self.docs, self.tfs, self.dls = docs, tfs, dls
+        self.n = len(docs)
+        self.idf = idf
+        self.avgdl = avgdl
+        starts = np.arange(0, self.n, 128)
+        self.block_last = docs[np.minimum(starts + 128, self.n) - 1]
+        self.block_max = np.maximum.reduceat(
+            idf * _impact_np(tfs, dls, avgdl), starts)
+
+    def _load(self, b: int) -> None:
+        blk = slice(128 * b, 128 * (b + 1))
+        self.blk_docs = self.docs[blk]
+        self.blk_tfs = self.tfs[blk]
+        self.blk_dls = self.dls[blk]
+
+
 def _topk_merge(cur_s: np.ndarray, cur_d: np.ndarray,
                 s: np.ndarray, d: np.ndarray, k: int):
     """Merge candidate (score, doc) arrays into a running top-k kept as two
@@ -1087,9 +905,10 @@ def _and_segment(cursors: list[_TermCursor], k: int, avgdl: float
     return list(zip(cand[order].tolist(), score[order].tolist()))
 
 
-def _or_segment(cursors: list[_TermCursor], k: int, avgdl: float
+def _or_segment(cursors: list[_TermCursor], k: int | None, avgdl: float
                 ) -> list[tuple[int, float]]:
-    """Vectorized block-max WAND for multi-term disjunctions.
+    """Vectorized block-max WAND for multi-term disjunctions (k=None: every
+    scored doc, no pruning).
 
     The doc space is partitioned into chunks on the densest cursor's
     128-posting block grid; each chunk's upper bound is Σ over cursors of the
@@ -1171,6 +990,7 @@ def _or_segment(cursors: list[_TermCursor], k: int, avgdl: float
     cur_s = np.empty(0, np.float64)
     cur_d = np.empty(0, np.int64)
     theta = -np.inf
+    every_d, every_s = [], []  # k=None: chunks are doc-disjoint, sort once
     for j in np.argsort(-tot_ub, kind="stable"):
         if len(cur_s) == k and tot_ub[j] < theta:
             break  # descending bounds: every later chunk is below θ too
@@ -1189,9 +1009,16 @@ def _or_segment(cursors: list[_TermCursor], k: int, avgdl: float
         ud, inv = np.unique(d, return_inverse=True)
         us = np.zeros(len(ud), dtype=np.float64)
         np.add.at(us, inv, s)
+        if k is None:
+            every_d.append(ud)
+            every_s.append(us)
+            continue
         cur_s, cur_d = _topk_merge(cur_s, cur_d, us, ud, k)
         if len(cur_s) == k:
             theta = cur_s[-1]
+    if every_d:
+        cur_s, cur_d = _topk_merge(cur_s, cur_d, np.concatenate(every_s),
+                                   np.concatenate(every_d), None)
     return list(zip(cur_d.tolist(), cur_s.tolist()))
 
 
@@ -1265,88 +1092,105 @@ def _wand_segment(
     return out
 
 
-def bm25_topk_wand(
-    spark: SparkSession,
-    paths: IndexPaths,
-    terms: list[str],
-    k: int,
-    mode: str = "or",
-) -> DataFrame:
-    """Block-max WAND over SPIMI segments → global top-k DataFrame."""
-    terms = list(dict.fromkeys(terms))
-    stats = load_stats(paths)
+def _score_segments(spark: SparkSession, paths: IndexPaths, stats: dict,
+                    term_w: dict[str, float], phrase_w: list[tuple],
+                    k: int | None, mode: str = "or") -> DataFrame:
+    """The BM25 scoring kernel: (doc_id, score) rows of each segment's local
+    top-k (k=None: every doc the query scores) over the weighted terms
+    ``term_w`` ({dictionary term: idf × weight}) and phrases ``phrase_w``
+    ([(tokens, slop, idf × weight)]). mode='and' (terms only) keeps the docs
+    containing every term.
+
+    One scan reads the query's dictionary rows plus the doclen and
+    per-field norm sidecars — term IN (...) OR term IS NULL, pushed to
+    parquet — and positions only when there are phrases. One task per
+    segment builds a lazily decoded ``_TermCursor`` per term and a
+    ``_ListCursor`` per phrase that matches in the segment
+    (``_lazy_plists`` → ``_phrase_seg_match``), then dispatches by shape,
+    all exact and rank-identical:
+     - 1 cursor     → vectorized block-ordered top-k (block-max kept)
+     - conjunction  → vectorized smallest-list intersection with
+                      block-skip probes into the longer lists
+     - disjunction  → vectorized chunked block-max WAND (``_or_segment``)"""
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     fnorms = _field_norms(stats)
-
-    tstats = _termstats_lookup(paths, terms)
-    # field:token entries take the FIELD's docCount/avgdl (per-field norms)
-    idfs = {t: _idf(_term_norm(t, fnorms, n_docs, avgdl)[0], d)
-            for t, d in tstats.items()}
-    if not idfs or (mode == "and" and len(idfs) < len(terms)):
-        # conjunction with a zero-df term matches nothing (oracle semantics)
-        return spark.createDataFrame([], TOPK_SCHEMA)
-
+    scan = sorted(set(term_w) | {t for p, _, _ in phrase_w for t in p})
     side_terms = sorted({
-        fld + ":" for fld in (_term_field(t) for t in terms)
+        fld + ":" for fld in map(_term_field, scan)
         if fld is not None and fld in fnorms})
-
-    # single scan: query-term rows + the doclen sidecar row, co-located per
-    # segment — the filter pushes to parquet (term IN (...) OR term IS NULL)
     # column pruning matters: pos_blob (when the index is positional) is the
-    # largest column in the segment table and WAND never touches it — the
-    # select keeps it out of the parquet scan entirely
-    segs = read_live_segments(spark, paths).where(
-        F.col("term").isin(terms + side_terms) | F.col("term").isNull()
-    ).select("seg_id", "term", "doc_blob", "tf_blob",
-             "block_last_doc", "block_max_tf", "block_min_dl")
+    # largest column in the segment table and only phrases touch it
+    cols = ["seg_id", "term", "doc_blob", "tf_blob",
+            "block_last_doc", "block_max_tf", "block_min_dl"]
+    live = read_live_segments(spark, paths)
+    has_bpe = bool(phrase_w) and "block_pos_ends" in live.columns
+    if phrase_w:
+        cols.append("pos_blob")
+    if has_bpe:
+        cols.append("block_pos_ends")
+    segs = live.where(
+        F.col("term").isin(scan + side_terms) | F.col("term").isNull()
+    ).select(*cols)
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                               "score": pd.Series(dtype="float64")})
-        dl_rows = pdf[pdf["term"].isna()]
-        notna = pdf[pdf["term"].notna()]
-        side = {}
-        for ft in side_terms:
-            grp = notna[notna["term"] == ft]
-            if not grp.empty:
-                side[ft] = (
-                    np.cumsum(varbyte_decode(
-                        bytes(grp["doc_blob"].iloc[0]))).astype(np.int64),
-                    varbyte_decode(
-                        bytes(grp["tf_blob"].iloc[0])).astype(np.int64))
-        term_rows = (notna[~notna["term"].isin(side_terms)]
-                     if side_terms else notna)
-        if dl_rows.empty or term_rows.empty:
+        # sidecar term → (doc ids, doc lengths); None = the main text's
+        side = pdf[pdf["term"].isna() | pdf["term"].isin(side_terms)]
+        sidecars = {
+            None if pd.isna(t) else t: (
+                np.cumsum(varbyte_decode(bytes(d))).astype(np.int64),
+                varbyte_decode(bytes(f)).astype(np.int64))
+            for t, d, f in zip(side["term"], side["doc_blob"],
+                               side["tf_blob"])}
+        if None not in sidecars:
             return empty
-        dl_docs = np.cumsum(
-            varbyte_decode(bytes(dl_rows["doc_blob"].iloc[0]))).astype(np.int64)
-        dl_vals = varbyte_decode(bytes(dl_rows["tf_blob"].iloc[0])).astype(np.int64)
+        rows = {r.term: r for r in pdf[pdf["term"].isin(scan)].itertuples()}
+
+        def norm(term):
+            """(doc ids, doc lengths, avgdl) normalizing ``term``: its
+            field's sidecar and avgdl for `field:token` entries."""
+            fld = _term_field(term)
+            sd, sv = sidecars.get(
+                None if fld is None else fld + ":", sidecars[None])
+            return sd, sv, _term_norm(term, fnorms, n_docs, avgdl)[1]
+
         cursors = []
-        for _, row in term_rows.iterrows():
-            idf = idfs[row["term"]]
-            c_docs, c_vals = dl_docs, dl_vals
-            fld = _term_field(row["term"])
-            if fld is not None and (fld + ":") in side:
-                c_docs, c_vals = side[fld + ":"]
-            _, c_av = _term_norm(row["term"], fnorms, n_docs, avgdl)
+        for term, w in term_w.items():
+            r = rows.get(term)
+            if r is None:
+                continue
+            sd, sv, av = norm(term)
             # block upper bounds from avgdl-independent (max_tf, min_dl) —
             # min_dl of field:token rows is the FIELD's min dl (build-side)
-            bmax = block_upper_bound(
-                row["block_max_tf"], row["block_min_dl"], c_av
-            ) * idf
+            bmax = block_upper_bound(r.block_max_tf, r.block_min_dl, av) * w
             cursors.append(_TermCursor(
-                bytes(row["doc_blob"]), bytes(row["tf_blob"]),
-                c_docs, c_vals, idf, row["block_last_doc"], bmax,
-                avgdl=c_av,
-            ))
-        if mode == "and" and len(cursors) < len(idfs):
+                bytes(r.doc_blob), bytes(r.tf_blob), sd, sv, w,
+                r.block_last_doc, bmax, avgdl=av))
+        if mode == "and" and len(cursors) < len(term_w):
             return empty
-        # dispatch by query shape (all three exact, rank-identical):
-        #  - 1 term        → vectorized block-ordered top-k (block-max kept)
-        #  - conjunction   → vectorized smallest-list intersection with
-        #                    block-skip probes into the longer lists
-        #  - disjunction   → document-at-a-time block-max WAND
-        if len(cursors) == 1:
+        raw: dict[str, tuple] = {}
+        for p, slop, w in phrase_w:
+            distinct = list(dict.fromkeys(p))
+            if not all(t in rows for t in distinct):
+                continue
+            for t in distinct:
+                if t not in raw:
+                    r = rows[t]
+                    raw[t] = _raw_positional(
+                        r.doc_blob, r.tf_blob, r.pos_blob,
+                        r.block_pos_ends if has_bpe else None)
+            _, plists = _lazy_plists(raw, distinct)
+            if plists is None:
+                continue
+            d, tfs = _phrase_seg_match(plists, distinct, p, slop)
+            if d.size:
+                sd, sv, av = norm(p[0])
+                cursors.append(_ListCursor(
+                    d, tfs, sv[np.searchsorted(sd, d)], w, av))
+        if not cursors:
+            return empty
+        if len(cursors) == 1 and k is not None:
             res = _single_term_segment(cursors[0], k, avgdl)
         elif mode == "and":
             res = _and_segment(cursors, k, avgdl)
@@ -1354,6 +1198,28 @@ def bm25_topk_wand(
             res = _or_segment(cursors, k, avgdl)
         return pd.DataFrame(res, columns=["doc_id", "score"])
 
-    local = routed_segment_groupby(segs, live_seg_ids(stats)).applyInPandas(
+    return routed_segment_groupby(segs, live_seg_ids(stats)).applyInPandas(
         run, schema=TOPK_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _top(scores: DataFrame, k: int) -> DataFrame:
+    """Global top-k of (doc_id, score): score desc, doc_id asc."""
+    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def bm25_topk_wand(
+    spark: SparkSession,
+    paths: IndexPaths,
+    terms: list[str],
+    k: int,
+    mode: str = "or",
+) -> DataFrame:
+    """Block-max top-k of a bag of terms, each at weight 1, through the
+    scoring kernel (``_score_segments``) → global top-k DataFrame."""
+    terms = list(dict.fromkeys(terms))
+    stats = load_stats(paths)
+    term_w = _term_weights(paths, stats, dict.fromkeys(terms, 1.0))
+    if not term_w or (mode == "and" and len(term_w) < len(terms)):
+        # conjunction with a zero-df term matches nothing (oracle semantics)
+        return spark.createDataFrame([], TOPK_SCHEMA)
+    return _top(_score_segments(spark, paths, stats, term_w, [], k, mode), k)

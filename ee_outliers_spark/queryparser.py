@@ -291,7 +291,7 @@ class _Parser:
             if kind == "word" and val.upper() == "OR":
                 self.take()
                 parts.append(self.and_expr())
-            elif kind in ("lparen", "quoted", "neg", "word") and not (
+            elif kind in ("lparen", "quoted", "neg", "word", "regex") and not (
                 kind == "word" and val.upper() in ("AND", "OR")
             ):
                 # adjacency → default operator OR (ES query_string default);

@@ -17,10 +17,11 @@ streaming). The Spark-native equivalents:
                             checkpoint gives exactly-once file processing —
                             the scalable replacement for "re-scan everything
                             daily" (ST1/ST2: incremental snapshot reads).
-- ``daemon_tick``         — one reference-style tick: run analyzers over the
-                            rolling window, MERGE outliers into the results
-                            store (housekeeping's whitelist re-application is
-                            OutlierStore.housekeep_whitelist, ST4).
+
+A reference-style tick has no function of its own: it is
+``config.run_all`` over the rolling window, then ``OutlierStore.upsert``
+MERGEs the outliers into the results store (housekeeping's whitelist
+re-application is OutlierStore.housekeep_whitelist, ST4).
 """
 
 from __future__ import annotations

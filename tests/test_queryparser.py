@@ -206,6 +206,9 @@ def test_regexp_atoms_parse_and_dialect_guard():
     assert dsl_to_ast({"regexp": {"lang": "e."}}) == FieldRegexp(
         "lang", "e.")
     assert parse_query_string("/x[^ab]y/") == Regexp("x[^ab]y")  # class neg
+    # a regexp after another atom is one more default-OR operand
+    assert parse_query_string("window /cust[oe]mer/^2") == Or([
+        Term("window"), Regexp("cust[oe]mer", boost=2.0)])
     for bad in [r"/a\d/", "/^abc/", "/a$b/", "//"]:
         with pytest.raises(ValueError):
             parse_query_string(bad)
