@@ -231,8 +231,8 @@ def run_analyzer(
 
     ``index`` (an index.build.IndexPaths for the df's corpus) makes every
     es_query_filter compile through the posting lists (index/filter.py) —
-    single-token text atoms become posting semi-joins instead of per-row
-    regex scans, exactly like the gated filter-context path. Without it the
+    text atoms resolve in the per-segment posting-list kernel instead of
+    per-row regex scans, exactly like the gated filter-context path. Without it the
     runner falls back to the regex compilation (small corpora / no index)."""
     work = df
     if spec.es_query_filter and spec.model_type != "simplequery":

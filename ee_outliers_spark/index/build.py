@@ -487,10 +487,10 @@ def routed_segment_groupby(df: DataFrame, seg_ids: list[int] | None,
                            col: str = "seg_id", pack: bool = True):
     """``df.groupBy("seg_id")`` with guaranteed one-segment-per-reduce-
     partition placement (see ``_route_keys``): the per-segment kernels
-    (build inversion, LSM merge, WAND, phrase intersection, filter
-    set-algebra, posting decode) each
-    process one segment per task instead of however many segments Spark's
-    hash happens to pack into ``shuffle.partitions`` buckets — on 128 live
+    (build inversion, LSM merge, BM25 scoring, phrase intersection, the
+    filter's posting-list kernel) each process one segment per task instead
+    of however many segments Spark's hash happens to pack into
+    ``shuffle.partitions`` buckets — on 128 live
     segments over 32 shuffle partitions the busiest reducer otherwise packs
     ~2× the mean and gates the whole query. Kernels must read seg_id from
     the pdf (none of the query kernels use the group key). Falls back to the

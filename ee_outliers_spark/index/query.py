@@ -33,9 +33,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..queryparser import parse_query_string, resolve_analyzed
 from ..session import materialize
 from ..tokenizer import tokenize_py
 from .build import (
@@ -51,34 +52,56 @@ def _idf(n_docs: int, df_: int) -> float:
     return math.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5))
 
 
+def _read_dictionary(paths: IndexPaths, literals, matchers
+                     ) -> tuple[dict[str, int], list[list[str]]]:
+    """The driver's one read of the term dictionary: ({term: df} of every
+    literal present and every term some matcher accepts, [the terms each of
+    ``matchers`` accepts]). Matchers are ``filter.spec_matcher``s — the
+    expansion of wildcard / regexp / fuzzy atoms, shared by the scorer and
+    the filter kernel. termstats is read with pyarrow — an IN filter on the
+    row groups when there are only literals, the (term, df) columns whole
+    otherwise — so no Spark job runs for it."""
+    import pyarrow.parquet as pq
+
+    dfs: dict[str, int] = {}
+    matched: list[list[str]] = [[] for _ in matchers]
+    if not literals and not matchers:
+        return dfs, matched
+    literals = set(literals)
+    flt = None if matchers else [("term", "in", sorted(literals))]
+    for f in termstats_files(paths):
+        t = pq.read_table(f, columns=["term", "df"], filters=flt)
+        for term, d in zip(t.column("term").to_pylist(),
+                           t.column("df").to_pylist()):
+            hit = term in literals
+            for terms, match in zip(matched, matchers):
+                if match(term):
+                    terms.append(term)
+                    hit = True
+            if hit:
+                dfs[term] = int(d)
+    return dfs, matched
+
+
 def _term_weights(paths: IndexPaths, stats: dict, boosts: dict[str, float],
                   patterns=()) -> dict[str, float]:
     """{dictionary term: idf × weight} — Lucene's scoring_boolean rewrite,
     on the driver. A term's weight is its literal boost in ``boosts`` plus
     the boost of every ``(matcher, boost)`` in ``patterns`` whose matcher
-    (``filter.spec_matcher``) accepts it; zero-df terms are absent. The
-    termstats table is read directly with pyarrow — an IN filter on the row
-    groups for literal lookups, the (term, df) columns whole when there are
-    patterns — so no Spark job runs for it. Field-qualified terms take
-    their field's docCount for idf."""
-    import pyarrow.parquet as pq
-
+    (``filter.spec_matcher``) accepts it; zero-df terms are absent (one
+    ``_read_dictionary``). Field-qualified terms take their field's
+    docCount for idf."""
     if not boosts and not patterns:
         return {}
+    dfs, matched = _read_dictionary(paths, boosts, [m for m, _ in patterns])
+    extra: dict[str, float] = {}
+    for (_, b), terms in zip(patterns, matched):
+        for t in terms:
+            extra[t] = extra.get(t, 0) + b
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     fnorms = _field_norms(stats)
-    flt = None if patterns else [("term", "in", list(boosts))]
-    out: dict[str, float] = {}
-    for f in termstats_files(paths):
-        t = pq.read_table(f, columns=["term", "df"], filters=flt)
-        for term, d in zip(t.column("term").to_pylist(),
-                           t.column("df").to_pylist()):
-            hits = [b for match, b in patterns if match(term)]
-            if term in boosts or hits:
-                w = boosts.get(term, 0.0) + sum(hits)
-                n = _term_norm(term, fnorms, n_docs, avgdl)[0]
-                out[term] = _idf(n, int(d)) * w
-    return out
+    return {t: _idf(_term_norm(t, fnorms, n_docs, avgdl)[0], d)
+            * (boosts.get(t, 0.0) + extra.get(t, 0)) for t, d in dfs.items()}
 
 
 def _term_field(term: str) -> str | None:
@@ -239,8 +262,8 @@ def _phrase_seg_match(plists: dict, distinct: list[str],
                       ) -> tuple[np.ndarray, np.ndarray]:
     """(docs, tfs) of the phrase within ONE segment, from decoded positional
     lists (term → (docs, flat_positions, bounds)). Shared by the scoring
-    path (_phrase_hits) and the postings-only boolean evaluator
-    (filter.matching_ids) — segments are doc-disjoint so per-segment
+    kernels (_phrase_hits, _score_segments) and the filter's posting-list
+    kernel (filter._segment_sets) — segments are doc-disjoint so per-segment
     results union to the global answer.
 
     Vectorized across ALL candidate docs at once: per-term adjusted
@@ -381,8 +404,7 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths,
             "(build_segments(..., positions=True))")
     distinct = list(dict.fromkeys(toks))
 
-    present = len(_term_weights(paths, stats, dict.fromkeys(distinct, 1.0)))
-    if present < len(distinct):
+    if len(_read_dictionary(paths, distinct, ())[0]) < len(distinct):
         # a phrase containing a zero-df term matches nothing anywhere
         return None
 
@@ -484,53 +506,6 @@ def phrase_topk_wand(
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def wildcard_term_pred(pattern: str) -> Column | None:
-    """Dictionary predicate for a wildcard atom (term matches pattern), or
-    None when the pattern can never match a token. Pure-prefix patterns
-    (`foo*`) compile to startsWith so the parquet dictionary scan gets a
-    StringStartsWith pushdown; general patterns anchor-match via rlike."""
-    import re as _re
-
-    from ..queryparser import wildcard_token_body
-
-    body = wildcard_token_body(pattern)
-    if body is None:
-        return None
-    p = pattern.lower()
-    if _re.fullmatch(r"[a-z0-9]+\*", p):
-        # field-qualified dictionary entries ("title:batch") and per-field
-        # norm sidecars ("title:") share the dictionary; a main-text prefix
-        # pattern must never match them (tokens are [a-z0-9]+, no ':')
-        return (F.col("term").startswith(p[:-1])
-                & ~F.col("term").contains(":"))
-    return F.col("term").rlike(f"^({body})$")
-
-
-def regexp_term_pred(pattern: str) -> Column:
-    """Dictionary predicate for a `/regexp/` atom: the (validated, common
-    Java/RE2/Python dialect) pattern fullmatches a dictionary term —
-    Lucene RegexpQuery's automaton intersection as a distributed
-    dictionary scan."""
-    from ..queryparser import regexp_token_body
-
-    # '.' / negated classes in the dialect can match ':' — exclude the
-    # field-qualified dictionary namespace (a token never contains ':')
-    return (F.col("term").rlike(f"^(?:{regexp_token_body(pattern)})$")
-            & ~F.col("term").contains(":"))
-
-
-def fuzzy_term_pred(token: str, max_edits: int) -> Column:
-    """Dictionary predicate for a fuzzy atom: classic Levenshtein bound,
-    with a cheap length-band prefilter so the JVM edit-distance only runs
-    on plausible dictionary rows."""
-    t = token.lower()
-    return (
-        F.length("term").between(len(t) - max_edits, len(t) + max_edits)
-        & ~F.col("term").contains(":")  # never expand into field namespace
-        & (F.levenshtein(F.col("term"), F.lit(t)) <= max_edits)
-    )
-
-
 def querystring_topk(
     spark: SparkSession,
     paths: IndexPaths,
@@ -551,11 +526,9 @@ def querystring_topk(
     dictionary on the driver (``_term_weights``) and every expanded term
     contributes its own BM25 clause. Sloppy phrases (`"a b"~2`) score with
     the sloppy tf."""
-    from ..queryparser import parse_query_string
-
-    node = parse_query_string(query_string)
-    node = _resolve_analyzed_for(paths, node)
     stats = load_stats(paths)
+    node = resolve_analyzed(parse_query_string(query_string),
+                            stats.get("analyzed_fields"))
     term_w, phrase_w = _query_weights(spark, paths, stats, node)
     if not term_w and not phrase_w:
         return spark.createDataFrame([], TOPK_SCHEMA)
@@ -567,7 +540,7 @@ def _query_weights(spark: SparkSession, paths: IndexPaths, stats: dict,
     """The AST's positive text atoms as ``_score_segments`` weights:
     ({dictionary term: idf × summed boost}, [(tokens, slop, idf × boost)]).
     Terms, single-token phrases and the wildcard / regexp / fuzzy atoms
-    (through their ``filter`` Python twins) go through ``_term_weights``, so
+    (through ``filter.spec_matcher``) go through ``_term_weights``, so
     a term matched by several atoms carries the sum of their boosts.
     Multi-token phrases take their dfs from one counting job over every
     phrase's ``_phrase_hits``; phrases matching nothing are dropped."""
@@ -620,8 +593,8 @@ def search_topk(
     clauses with field/negated clauses, app/helpers/es.py:238-270):
 
     - ELIGIBILITY: the full boolean matches (index-backed ``indexed_filter``
-      — posting semi-joins, positional phrases, dictionary patterns; no
-      corpus-text regex),
+      — the text atoms' per-doc markers from one segment scan, one join
+      with the docs table; no corpus-text regex),
     - SCORE: the sum of the positive text atoms' BM25 contributions off the
       index — the scoring kernel with k=None (``_score_segments``), so every
       doc it reaches keeps its score. Field/negated clauses gate but score
@@ -632,11 +605,11 @@ def search_topk(
     kernel's per-doc scores, then TakeOrdered. A text-only boolean skips the
     docs table entirely (``matching_ids`` — the ES behavior: a query with no
     field clauses never reads _source)."""
-    from ..index.filter import indexed_filter, matching_ids, text_only
+    from .filter import indexed_filter, matching_ids, text_only
 
-    node = __parse(query_string)
-    node = _resolve_analyzed_for(paths, node)
     stats = load_stats(paths)
+    node = resolve_analyzed(parse_query_string(query_string),
+                            stats.get("analyzed_fields"))
     if text_only(node, bool(stats.get("positions"))):
         # matching_ids resolves against the INDEXED universe (incl. NOT /
         # match-all); semi-join against the caller's docs so a filtered
@@ -657,18 +630,6 @@ def search_topk(
         out = eligible.join(scores, "doc_id", "left").select(
             "doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
     return _top(out, k)
-
-
-def __parse(query_string: str):
-    from ..queryparser import parse_query_string
-    return parse_query_string(query_string)
-
-
-def _resolve_analyzed_for(paths: IndexPaths, node):
-    """Mapping consultation (ES-style): rewrite field atoms on fields the
-    index declares analyzed into index-backed FieldText atoms."""
-    from ..queryparser import resolve_analyzed
-    return resolve_analyzed(node, load_stats(paths).get("analyzed_fields"))
 
 
 # --------------------------------------------------------------------------

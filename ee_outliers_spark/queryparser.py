@@ -748,11 +748,13 @@ def to_spark_predicate(
     Column meaning "document contains token"; ``phrase_markers`` maps a
     ``phrase_key`` (space-joined tokens + optional ~slop) to "document
     contains phrase"; ``pattern_markers`` maps a ``wildcard_key`` /
-    ``fuzzy_key`` to "document contains a matching token" — all supplied by
-    the index-backed filter path (index/filter.py) so text atoms become
-    posting-list / position-list / term-dictionary lookups instead of regex
-    scans. Falls back to rlike (or a tokens+levenshtein HOF for Fuzzy) when
-    absent."""
+    ``regexp_key`` / ``fuzzy_key`` to "document contains a matching token".
+    ``index/filter.indexed_filter`` supplies them as ``array_contains``
+    tests on the per-doc atom indices its posting-list kernel returns, so
+    text atoms become posting-list lookups instead of regex scans. An atom
+    missing from its dict (no dict, or a multi-token phrase on a
+    non-positional index) falls back to rlike (or a tokens+levenshtein HOF
+    for Fuzzy)."""
     if isinstance(node, MatchAll):
         return F.lit(True)
     if isinstance(node, Term):

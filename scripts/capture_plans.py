@@ -37,9 +37,11 @@ sections: list[tuple[str, str, object]] = []
 node = parse_query_string("window AND (lang:en OR lang:de) AND _exists_:source")
 sections.append((
     "Index-backed filter context",
-    "single-token terms resolve via posting semi-joins; the segment scan is "
-    "pruned by `term IN (...)` PushedFilters; field predicates push to the "
-    "documents scan; NO rlike in the plan",
+    "the text atom resolves in the marker kernel: ONE segment scan pruned "
+    "by `term IN (...)` PushedFilters, per-doc marker arrays from the "
+    "per-segment tasks, ONE inner join with the documents scan (the term "
+    "is required); field predicates push to the documents scan; NO rlike "
+    "in the plan",
     indexed_filter(spark, paths, docs, "doc_id", "text", node,
                    ["doc_id", "text", "lang", "source", "n_chars"]),
 ))
@@ -72,20 +74,21 @@ sections.append((
 ))
 sections.append((
     "Mixed query_string top-k (terms + quoted phrase)",
-    "term contributions decoded from posting lists, phrase contributions "
-    "from positional blobs, unioned + hash-aggregated per doc, TakeOrdered — "
-    "all index-side, no corpus scan",
+    "ONE segment scan (query terms, the NULL sidecar row, positions for "
+    "the phrase); the per-segment scoring kernel sums term and phrase "
+    "contributions per doc and keeps a local top-k; TakeOrdered — all "
+    "index-side, no corpus scan",
     querystring_topk(spark, paths, 'customer window "key order"', 10),
 ))
 wnode = parse_query_string('cust* AND custoner~1 AND "order key"~2')
 sections.append((
-    "Wildcard / fuzzy / sloppy-phrase filter (dictionary predicates)",
-    "wildcard and fuzzy atoms are DICTIONARY predicates on the segment "
-    "scan's term column (prefix patterns push down as StartsWith; the "
-    "levenshtein bound runs on dictionary rows, never corpus text); the "
-    "sloppy phrase intersects positional windows per segment; the ONLY "
-    "rlike in this plan is over the term dictionary column — corpus text "
-    "is never regex-scanned",
+    "Wildcard / fuzzy / sloppy-phrase filter (driver-side expansion)",
+    "wildcard and fuzzy atoms expand against the term dictionary on the "
+    "driver (one pyarrow read of termstats), so the segment scan is a "
+    "plain `term IN (...)`; the sloppy phrase intersects positional "
+    "windows per segment; the boolean is text-only, so the documents "
+    "table contributes only its key to a left-semi join; NO rlike in the "
+    "plan — corpus text is never regex-scanned",
     indexed_filter(spark, paths, docs, "doc_id", "text", wnode,
                    ["doc_id", "text", "lang", "source", "n_chars"]),
 ))
@@ -95,8 +98,9 @@ tnode = parse_query_string('window AND (cust* OR batch) AND NOT "batch batch"')
 sections.append((
     "Postings-only boolean (matching_ids — round 4)",
     "a text-only boolean never touches the documents table: ONE segment "
-    "scan (term-IN + dictionary predicates + the NULL sidecar row pushed "
-    "to parquet), per-segment numpy set algebra inside applyInPandas "
+    "scan (term-IN over the query tokens and expanded pattern terms + the "
+    "NULL sidecar row pushed to parquet), per-segment numpy set algebra "
+    "inside applyInPandas "
     "(And/Or/Not = intersect/union/setdiff vs the doclen universe), union "
     "of per-segment id arrays — zero doc-keyed exchange in the whole plan",
     matching_ids(spark, paths, tnode),

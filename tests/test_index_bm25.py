@@ -135,9 +135,11 @@ def test_wand_multiblock_tied_pivot(spark, tmp_path_factory):
 
 def test_indexed_filter_matches_predicate_and_avoids_regex(
         spark, documents, seg_paths):
-    """Filter context through posting-list semi-joins: same rows as the
-    regex compilation, and the physical plan contains NO rlike over the
-    text column for single-token terms (VERDICT round-1 'what's wrong' #3)."""
+    """Filter context through the posting-list marker kernel: same rows as
+    the regex compilation, and the physical plan contains NO rlike over the
+    text column for single-token terms (VERDICT round-1 'what's wrong' #3).
+    On this non-positional index a phrase compiles to the regex predicate,
+    over the docs of its first token's postings (the required atom)."""
     from ee_outliers_spark.index.filter import indexed_filter
     from ee_outliers_spark.queryparser import parse_query_string, to_spark_predicate
 
@@ -151,14 +153,16 @@ def test_indexed_filter_matches_predicate_and_avoids_regex(
     assert got == want and got
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "rlike" not in plan.lower()
-    # negated terms still compose (marker truth value under NOT)
-    node2 = parse_query_string("window NOT customer")
-    want2 = sorted(r["doc_id"] for r in documents.where(
-        to_spark_predicate(node2, "text", cols)).select("doc_id").collect())
-    got2 = sorted(r["doc_id"] for r in indexed_filter(
-        spark, seg_paths, documents, "doc_id", "text", node2, cols
-    ).select("doc_id").collect())
-    assert got2 == want2
+    # negated terms compose (marker truth value under NOT); the phrase is a
+    # regex predicate over the docs its required token's postings give
+    for qs in ["window NOT customer", '"key order" AND lang:en']:
+        node2 = parse_query_string(qs)
+        want2 = sorted(r["doc_id"] for r in documents.where(
+            to_spark_predicate(node2, "text", cols)).select("doc_id").collect())
+        got2 = sorted(r["doc_id"] for r in indexed_filter(
+            spark, seg_paths, documents, "doc_id", "text", node2, cols
+        ).select("doc_id").collect())
+        assert got2 == want2 and got2, qs
 
 
 def test_matching_ids_postings_only(spark, documents, pos_paths):
@@ -247,24 +251,33 @@ def test_matching_ids_agrees_on_full_query_corpus(spark, documents,
 
 
 def test_matching_ids_randomized_booleans(spark, documents, pos_paths,
-                                          docs_dict):
+                                          seg_paths):
     """Seeded random boolean ASTs (terms / wildcards / regexps / fuzzies /
-    phrases under nested And/Or/Not) stress the per-segment set-algebra
-    evaluator beyond the hand-written corpus: results must equal the pure
-    Python compilation of the same AST over the raw rows."""
+    phrases / field, range and exists atoms under nested And/Or/Not) stress
+    the per-segment posting-list kernel beyond the hand-written corpus:
+    text-only ASTs go through matching_ids' set algebra, mixed ones through
+    indexed_filter's markers on the positional index and, phrase-free, on
+    the non-positional one too. Results must equal the pure Python
+    compilation of the same AST over the raw rows."""
     import random
 
-    from ee_outliers_spark.index.filter import matching_ids, text_only
+    from ee_outliers_spark.index.filter import (
+        indexed_filter, matching_ids, text_only,
+    )
     from ee_outliers_spark.queryparser import (
         And, Fuzzy, Not, Or, Phrase, Regexp, Term, Wildcard,
-        to_python_predicate,
+        parse_query_string, to_python_predicate,
     )
 
     rng = random.Random(20260817)
     vocab = ["the", "customer", "window", "batch", "key", "order", "fast",
              "slow", "vector", "stream", "zebraqq"]
+    fields = [parse_query_string(q) for q in
+              ("lang:en", "n_chars:[10 TO 200]", "_exists_:source")]
 
     def leaf():
+        if rng.random() < 0.25:
+            return rng.choice(fields)
         r = rng.random()
         t = rng.choice(vocab)
         if r < 0.4:
@@ -289,19 +302,37 @@ def test_matching_ids_randomized_booleans(spark, documents, pos_paths,
             return Or(kids)
         return Not(gen(depth - 1))
 
+    def has_phrase(n):
+        if isinstance(n, Phrase):
+            return True
+        if isinstance(n, (And, Or)):
+            return any(has_phrase(p) for p in n.parts)
+        return isinstance(n, Not) and has_phrase(n.part)
+
+    def filtered(paths, node):
+        out = indexed_filter(spark, paths, documents, "doc_id", "text",
+                             node, cols)
+        return sorted(r["doc_id"] for r in out.select("doc_id").collect())
+
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    rows = [{"doc_id": d, "text": t} for d, t in docs_dict.items()]
-    checked = 0
-    for _ in range(25):
+    rows = [r.asDict() for r in documents.collect()]
+    checked = {"text_only": 0, "mixed": 0, "mixed_seg": 0}
+    for _ in range(50):
         node = gen(2)
-        assert text_only(node, positional=True)
         pred = to_python_predicate(node, "text", cols)
         want = sorted(r["doc_id"] for r in rows if pred(r))
-        got = sorted(r["doc_id"] for r in
-                     matching_ids(spark, pos_paths, node).collect())
-        assert got == want, node
-        checked += 1
-    assert checked == 25
+        if text_only(node, positional=True):
+            got = sorted(r["doc_id"] for r in
+                         matching_ids(spark, pos_paths, node).collect())
+            assert got == want, node
+            checked["text_only"] += 1
+            continue
+        assert filtered(pos_paths, node) == want, node
+        checked["mixed"] += 1
+        if not has_phrase(node):
+            assert filtered(seg_paths, node) == want, node
+            checked["mixed_seg"] += 1
+    assert checked == {"text_only": 23, "mixed": 27, "mixed_seg": 17}
 
 
 def test_text_only_filter_never_reads_corpus_text(spark, sf_dir, pos_paths):
@@ -912,15 +943,27 @@ def test_search_topk_respects_docs_subset(spark, documents, pos_paths):
     index rather than the subset. Now semi-joined: every hit must come
     from the passed subset, for plain, negated, and match-all queries."""
     from ee_outliers_spark.index.query import search_topk
+    from ee_outliers_spark.queryparser import (
+        parse_query_string, to_python_predicate,
+    )
 
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     subset = documents.where("doc_id % 3 = 0")
-    sub_ids = {int(r["doc_id"])
-               for r in subset.select("doc_id").collect()}
-    for qs in ["customer OR window", "NOT customer", "*"]:
+    rows = [r.asDict() for r in documents.collect()]
+    sub_ids = {r["doc_id"] for r in rows if r["doc_id"] % 3 == 0}
+    # the mixed booleans take indexed_filter's marker join (inner when a
+    # text atom is required, left for the negation); the phrase matches
+    # only docs outside the subset, so its answer must be empty
+    for qs in ["customer OR window", "NOT customer", "*",
+               "customer AND lang:en", "NOT customer AND _exists_:lang",
+               '"key order" AND lang:de']:
+        pred = to_python_predicate(parse_query_string(qs), "text", cols)
+        want = [r["doc_id"] for r in rows if pred(r)]
+        n_sub = sum(d in sub_ids for d in want)
+        assert len(want) > n_sub, qs  # some matches lie outside the subset
         out = search_topk(spark, pos_paths, subset, "doc_id", "text",
                           qs, 50, cols).collect()
-        assert out, qs
+        assert len(out) == min(50, n_sub), qs
         assert all(int(r["doc_id"]) in sub_ids for r in out), qs
     # full-corpus call unchanged: identical to matching_ids-ranked result
     full = search_topk(spark, pos_paths, documents, "doc_id", "text",
@@ -952,7 +995,8 @@ def test_indexed_filter_phrases_off_positional_index(spark, documents, pos_paths
     """On a positional index the filter context resolves quoted phrases by
     position-list intersection: the compiled plan contains NO regex at all
     (round 2 kept rlike for phrases), and rows equal the regex compilation.
-    The required-term semi-join prunes the docs scan to candidate postings."""
+    When the boolean requires a text atom, the docs join is an inner join
+    with the markers of the candidate postings' docs."""
     from ee_outliers_spark.index.filter import indexed_filter
     from ee_outliers_spark.queryparser import parse_query_string, to_spark_predicate
 
@@ -969,6 +1013,32 @@ def test_indexed_filter_phrases_off_positional_index(spark, documents, pos_paths
         assert got == want, qs
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "rlike" not in plan.lower(), qs
+
+
+def test_mixed_filter_plan_has_one_segment_scan(spark, documents, pos_paths):
+    """A mixed boolean's term, phrase and wildcard atoms resolve in ONE
+    segment scan — the marker kernel — and the docs table joins the
+    per-doc markers straight out of the segment tasks: no aggregate keyed
+    on doc_id sits before the docs join."""
+    import re
+
+    from ee_outliers_spark.index.filter import indexed_filter
+    from ee_outliers_spark.queryparser import parse_query_string, to_spark_predicate
+
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    node = parse_query_string(
+        'window AND "key order" AND cust* AND _exists_:lang')
+    out = indexed_filter(spark, pos_paths, documents, "doc_id", "text",
+                         node, cols)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    seg_scans = [m for m in re.findall(r"ReadSchema: struct<[^\n]*", plan)
+                 if "doc_blob" in m]
+    assert len(seg_scans) == 1, plan
+    assert not re.search(r"Aggregate\(keys=\[[^\]]*doc_id", plan), plan
+    want = sorted(r["doc_id"] for r in documents.where(
+        to_spark_predicate(node, "text", cols)).select("doc_id").collect())
+    got = sorted(r["doc_id"] for r in out.select("doc_id").collect())
+    assert want and got == want
 
 
 def test_querystring_topk_mixed_matches_manual_sum(spark, documents, pos_paths):
