@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .index.build import TERMSTATS_SCHEMA
 from .index.cache import corpus_index
 from .index.filter import indexed_filter
 from .index.query import bm25_topk_wand, doclen_df, phrase_topk_wand
@@ -924,8 +925,7 @@ def term_df_top20(spark, sf_dir):
     # sidecar — the corpus itself is never touched
     paths = corpus_index(spark, sf_dir)
     return (
-        spark.read.parquet(paths.termstats)
-        .select("term", F.col("df").cast("long").alias("df"))
+        spark.read.schema(TERMSTATS_SCHEMA).parquet(paths.termstats)
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(20)
     )

@@ -32,6 +32,7 @@ Scale design (10^12 docs):
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -60,6 +61,9 @@ SEGMENT_SCHEMA = (
     "block_min_dl array<long>, block_pos_ends array<long>, "
     "n_docs long, sum_dl long, build_secs double"
 )
+
+#: the term dictionary: one (term, df) row per term of the live segments
+TERMSTATS_SCHEMA = "term string, df long"
 
 _SEG_COLS = [
     "seg_id", "term", "df_local", "n_postings", "doc_blob", "tf_blob",
@@ -430,7 +434,7 @@ def _route_keys(n: int) -> list[int]:
     ``spark.sql.shuffle.partitions`` buckets binomially — measured on
     128 segments: the busiest of 16 reducers packs 12 segments (1.5× the
     mean) vs 41/32 (1.28×) on 4 reducers, a deterministic straggler tail
-    that alone costs ~15 points of 4→16 scaling efficiency on the pack
+    that alone costs ~15 points of 4→16 scaling efficiency on the build
     stage. Coupon-collector scan, ~n·ln n probes, microseconds for n≤4096."""
     routes: list[int | None] = [None] * n
     found = 0
@@ -444,79 +448,21 @@ def _route_keys(n: int) -> list[int]:
     return routes  # type: ignore[return-value]
 
 
-def live_seg_ids(stats: dict) -> list[int] | None:
-    """The commit point's live segment ids (for routing), or None when the
-    stats predate live tracking."""
-    live = stats.get("live_segments")
-    if live is not None:
-        return [int(s) for s in live]
-    n = stats.get("num_segments")
-    return list(range(int(n))) if n else None
-
-
-class _PackedSegmentGroupBy:
-    """groupBy proxy that packs SEVERAL segments into each reduce task and
-    re-groups rows per segment inside the worker, so a many-segment index
-    (e.g. 352 live segments at 6M docs) costs cores tasks per query instead
-    of one tiny task per segment. Per-task scheduling + Arrow handshake is
-    the dominant cost of a selective query's kernel stage once per-segment
-    work is microseconds (round-6 ADVICE; measured round 7: the same query
-    over 352 one-segment tasks pays ~352 × task overhead across 11 waves).
-    The wrapped kernel still sees exactly one segment per invocation —
-    identical inputs, identical output rows."""
-
-    def __init__(self, gb, col: str):
-        self._gb = gb
-        self._col = col
-
-    def applyInPandas(self, fn, schema):
-        col = self._col
-
-        def packed(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            frames = [fn((int(s),), sub)
-                      for s, sub in pdf.groupby(col, sort=True)]
-            frames = [f for f in frames if len(f)]
-            if not frames:
-                return fn(key, pdf.iloc[0:0])
-            return pd.concat(frames, ignore_index=True)
-
-        return self._gb.applyInPandas(packed, schema)
-
-
 def routed_segment_groupby(df: DataFrame, seg_ids: list[int] | None,
-                           col: str = "seg_id", pack: bool = True):
+                           col: str = "seg_id"):
     """``df.groupBy("seg_id")`` with guaranteed one-segment-per-reduce-
-    partition placement (see ``_route_keys``): the per-segment kernels
-    (build inversion, LSM merge, BM25 scoring, phrase intersection, the
-    filter's posting-list kernel) each process one segment per task instead
-    of however many segments Spark's hash happens to pack into
-    ``shuffle.partitions`` buckets — on 128 live
-    segments over 32 shuffle partitions the busiest reducer otherwise packs
-    ~2× the mean and gates the whole query. Kernels must read seg_id from
-    the pdf (none of the query kernels use the group key). Falls back to the
-    plain groupBy when the live list is unknown (pre-routing index dirs).
-
-    When the live-segment count exceeds the core count and ``pack`` is
-    true (query kernels: tiny per-segment work), segments are round-robin
-    packed into exactly ``defaultParallelism`` balanced reduce tasks
-    (⌈n/p⌉ vs ⌊n/p⌋ segments per task — still deterministic placement, no
-    binomial straggler tail) and the kernel is re-invoked per segment
-    inside the task. Heavy kernels (build, LSM merge: one segment IS the
-    memory budget) pass ``pack=False`` to keep one task per segment."""
+    partition placement (see ``_route_keys``): the heavy per-segment kernels
+    (build inversion, LSM merge — one segment IS the task's memory budget)
+    each process one segment per task instead of however many segments
+    Spark's hash happens to pack into ``shuffle.partitions`` buckets — on
+    128 segments over 32 shuffle partitions the busiest reducer otherwise
+    packs ~2× the mean and gates the whole stage. Kernels must read seg_id
+    from the pdf. Falls back to the plain groupBy when the id list is
+    unknown. Query kernels do not shuffle at all: they read their segments
+    in place (``run_segment_kernel``)."""
     if not seg_ids:
         return df.groupBy(col)
     ids = sorted({int(s) for s in seg_ids})
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if pack and len(ids) > p:
-        routes = _route_keys(p)
-        mapping = F.create_map(*[F.lit(int(v)) for i, s in enumerate(ids)
-                                 for v in (s, routes[i % p])])
-        routed = df.withColumn(
-            "_route",
-            F.coalesce(mapping[F.col(col)],
-                       (-F.col(col) - 1).cast("int")))
-        gb = routed.repartition(p, "_route").groupBy("_route")
-        return _PackedSegmentGroupBy(gb, col)
     routes = _route_keys(len(ids))
     mapping = F.create_map(*[F.lit(int(v)) for s, r in zip(ids, routes)
                              for v in (s, r)])
@@ -543,7 +489,7 @@ def segment_frames_df(base: DataFrame, num_segments: int, positions: bool,
            for s in (range(num_segments) if todo is None else todo)]
     if todo is not None:
         src = src.where(F.col("seg_id").isin(ids))
-    return routed_segment_groupby(src, ids, pack=False).applyInPandas(
+    return routed_segment_groupby(src, ids).applyInPandas(
         _text_segment_kernel(tuple(analyzed_fields), positions=positions),
         schema=SEGMENT_SCHEMA)
 
@@ -600,19 +546,76 @@ def commit_stats(paths: IndexPaths, stats: dict) -> None:
     os.replace(tmp, paths.stats)
 
 
-def read_live_segments(spark: SparkSession, paths: IndexPaths) -> DataFrame:
-    """The segment table restricted to the current commit point's live
-    seg_ids. ``live_segments`` is how LSM merges retire inputs without a
-    delete-then-rename window: the new segment is written, the commit point
-    flips atomically, and the dead directories are garbage afterwards —
-    readers never observe duplicates or a half-deleted index. ``seg_id`` is
-    the parquet partition column, so the IN filter is partition pruning
-    (dead directories are never even listed into the scan)."""
-    segs = spark.read.parquet(paths.segments)
-    live = load_stats(paths).get("live_segments")
-    if live is not None:
-        segs = segs.where(F.col("seg_id").isin([int(s) for s in live]))
-    return segs
+@dataclass(frozen=True)
+class SegmentRead:
+    """What a query kernel reads of each live segment: the rows whose term
+    is in ``terms``, plus the doclen sidecar row (term NULL) when
+    ``sidecar``, restricted to ``columns``."""
+    terms: tuple[str, ...]
+    sidecar: bool
+    columns: tuple[str, ...]
+
+
+@functools.cache
+def segment_arrow_schema():
+    """SEGMENT_SCHEMA as an Arrow schema without the ``seg_id`` partition
+    column, parsed once per driver. Reading with it, a segment written
+    before a column existed (``block_pos_ends``) reads that column as
+    null."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, StructType
+
+    return to_arrow_schema(StructType([
+        f for f in DataType.fromDDL(SEGMENT_SCHEMA).fields
+        if f.name != "seg_id"]))
+
+
+def run_segment_kernel(spark: SparkSession, paths: IndexPaths, stats: dict,
+                       read: SegmentRead, kernel, schema: str) -> DataFrame:
+    """``kernel(seg_id, pdf)`` once per live segment of the commit ``stats``,
+    each call with exactly that segment's ``read`` rows, and the union of
+    the non-empty frames the calls return (``schema``) — the ES shape: a
+    query runs where the shard's data lives.
+
+    The driver frame is ``spark.range(n_live)`` over min(cores, n_live)
+    partitions; each task maps its ids to live seg_ids and reads each
+    segment's directory with pyarrow (``term IN (...) [OR term IS NULL]``,
+    pruned columns). No schema-inference job, no exchange, and no posting
+    blob crosses from the JVM to Python: the kernel is the query's only
+    job. A live segment without a directory (a build whose modulo left it
+    empty) reads as empty; dead directories are never opened. A commit
+    from before live tracking reads every segment directory."""
+    live = stats.get("live_segments")
+    if live is None:
+        live = segment_dir_ids(paths)
+    if not live:
+        return spark.createDataFrame([], schema)
+    root, arrow_schema = paths.segments, segment_arrow_schema()
+
+    def segment_kernel(batches):
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        cols = list(read.columns)
+        flt = ds.field("term").isin(pa.array(read.terms, pa.string()))
+        if read.sidecar:
+            flt = flt | ds.field("term").is_null()
+        for batch in batches:
+            for i in batch["id"]:
+                seg = int(live[int(i)])
+                seg_dir = os.path.join(root, f"seg_id={seg}")
+                table = (ds.dataset(seg_dir, schema=arrow_schema,
+                                    format="parquet")
+                         .to_table(columns=cols, filter=flt)
+                         if os.path.isdir(seg_dir)
+                         else arrow_schema.empty_table().select(cols))
+                out = kernel(seg, table.to_pandas())
+                if len(out):
+                    yield out
+
+    cores = spark.sparkContext.defaultParallelism
+    return spark.range(len(live), numPartitions=min(cores, len(live))
+                       ).mapInPandas(segment_kernel, schema)
 
 
 def refresh_stats_and_termstats(spark: SparkSession, paths: IndexPaths,
@@ -636,7 +639,7 @@ def refresh_stats_and_termstats(spark: SparkSession, paths: IndexPaths,
     if analyzed_fields is None:
         analyzed_fields = prev.get("analyzed_fields")
     if segs is None:
-        segs = spark.read.parquet(paths.segments)
+        segs = spark.read.schema(SEGMENT_SCHEMA).parquet(paths.segments)
         if live is not None:
             segs = segs.where(F.col("seg_id").isin([int(s) for s in live]))
     if sidecar_rows is not None:
@@ -731,7 +734,7 @@ def write_manifest(spark: SparkSession, paths: IndexPaths, seg_ids: list[int],
         ]
     else:
         if segs is None:
-            segs = spark.read.parquet(paths.segments)
+            segs = spark.read.schema(SEGMENT_SCHEMA).parquet(paths.segments)
         # sidecar rows carry the per-segment totals (emitted by the kernel):
         # 1 row per segment, columnar-pruned scan — no full-table aggregation
         seg_stats = (
@@ -791,8 +794,8 @@ def incremental_append_refresh(spark: SparkSession, paths: IndexPaths,
     fs_prev = prev.get("field_stats") or {}
     if any("sum_dl" not in v for v in fs_prev.values()):
         return False
-    new_segs = spark.read.parquet(paths.segments).where(
-        F.col("seg_id").isin([int(s) for s in new_ids]))
+    new_segs = spark.read.schema(SEGMENT_SCHEMA).parquet(
+        paths.segments).where(F.col("seg_id").isin([int(s) for s in new_ids]))
     if sidecar_rows is None:
         sidecar_rows = collect_sidecar_rows(new_segs)
     n_new = sum(int(r["n_docs"]) for r in sidecar_rows if r["term"] is None)
@@ -865,7 +868,8 @@ def incremental_append_refresh(spark: SparkSession, paths: IndexPaths,
                                                    ("df", pa.int64())])),
             os.path.join(tmp, "part-00000.parquet"))
     else:
-        merged = (spark.read.parquet(paths.termstats).unionByName(new_ts)
+        merged = (spark.read.schema(TERMSTATS_SCHEMA).parquet(paths.termstats)
+                  .unionByName(new_ts)
                   .groupBy("term").agg(F.sum("df").cast("long").alias("df")))
         merged.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(old, ignore_errors=True)
@@ -894,8 +898,9 @@ def auto_num_segments(spark: SparkSession, n_docs: int,
     5k-doc build 4.4-5.1 s at 2-5 segments vs 5.2-6.0 s at the 32-segment
     cores floor, and the 50k-doc build 4.4-4.5 s at 13 segments vs
     5.3-5.5 s at 32, with every query shape 10-30% faster on the smaller
-    index (fewer per-segment files; query kernels pack into `cores` reduce
-    tasks either way, so the old many-segments query argument is gone).
+    index (fewer per-segment files; query kernels run at most `cores`
+    tasks either way — ``run_segment_kernel`` — so the old many-segments
+    query argument is gone).
     The floor stays ≥ the SPIMI need (smaller-than-budget segments only —
     the safe direction) and ≤ cores, so corpora past one wave are
     untouched. The cap bounds the partition-directory count for one
@@ -915,8 +920,8 @@ def auto_num_segments(spark: SparkSession, n_docs: int,
     # smaller segments' per-task cost is sub-linear enough that a ragged
     # extra wave of cheaper tasks beats exact waves of pricier ones. The
     # round-6 query-side argument for alignment (per-query cost linear in
-    # segment count) is gone: query kernels now pack into `cores` tasks
-    # regardless of segment count (routed_segment_groupby).
+    # segment count) is gone: query kernels run at most `cores` tasks
+    # regardless of segment count (run_segment_kernel).
     return min(cap, need)
 
 

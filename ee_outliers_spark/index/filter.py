@@ -6,10 +6,11 @@ text clause per segment with bitset algebra (ref F1/F2, app/helpers/
 es.py:238-250, :664-710). Here one per-segment kernel, ``_segment_sets``,
 is the only code where text atoms meet posting lists:
 
-  ONE segments.parquet scan (``term IN (...)`` — query tokens plus the
-  terms the wildcard / regexp / fuzzy atoms expand to on the driver — and
-  the doclen sidecar row when NOT / match-all needs the segment universe)
-    → one applyInPandas task per segment (segments are doc-disjoint)
+  each live segment read in place (``build.run_segment_kernel``) —
+  ``term IN (...)``: query tokens plus the terms the wildcard / regexp /
+  fuzzy atoms expand to on the driver, and the doclen sidecar row when
+  NOT / match-all needs the segment universe (``_sets_read``)
+    → one kernel call per segment (segments are doc-disjoint)
     → every text atom becomes a sorted numpy doc-id array
 
 A text-only boolean (``text_only``) is then evaluated in the task as
@@ -37,10 +38,7 @@ from ..queryparser import (
     wildcard_token_body,
 )
 from ..tokenizer import tokenize_py
-from .build import (
-    IndexPaths, live_seg_ids, load_stats, read_live_segments,
-    routed_segment_groupby,
-)
+from .build import IndexPaths, SegmentRead, load_stats, run_segment_kernel
 from .codec import varbyte_decode
 from .query import (
     _lazy_plists, _phrase_seg_match, _raw_positional, _read_dictionary,
@@ -230,11 +228,36 @@ def _needs_universe(n, has_cand: bool) -> bool:
     return False
 
 
+def _sets_read(node, positional: bool, out: str,
+               guard: list[tuple[str, str]] | None,
+               expanded_terms) -> SegmentRead | None:
+    """What ``_segment_sets`` reads of each segment for the resolved AST
+    ``node``, given the dictionary terms its pattern atoms expand to: the
+    term rows of every term, phrase token and guard atom; the doclen sidecar
+    (the segment universe) only when a NOT / match-all needs it
+    (``_needs_universe``); positions only when there are phrases. None when
+    no atom can match and no universe is needed: nothing can match."""
+    atoms = _text_atoms(node, positional)
+    ph_tokens = {t for kind, _, n in atoms if kind == "phrase"
+                 for t in _atom_tokens(n)}
+    need = ({key for kind, key, _ in atoms if kind == "term"} | ph_tokens
+            | {v for kind, v in guard or () if kind == "term"}
+            | set(expanded_terms))
+    sidecar = out != "markers" and _needs_universe(node, False)
+    if not need and not sidecar:
+        return None
+    return SegmentRead(
+        tuple(sorted(need)), sidecar,
+        ("term", "doc_blob")
+        + (("tf_blob", "pos_blob", "block_pos_ends") if ph_tokens else ()))
+
+
 def _segment_sets(spark: SparkSession, paths: IndexPaths, stats: dict, node,
                   out: str, guard: list[tuple[str, str]] | None = None
                   ) -> DataFrame:
-    """The per-segment posting-list kernel over the resolved AST ``node``.
-    ``out`` picks what each segment task returns:
+    """The per-segment posting-list kernel over the resolved AST ``node``,
+    on the live segments of commit ``stats``. ``out`` picks what each
+    segment returns:
 
     - "ids": (doc_id) of the docs matching the text-only boolean;
     - "count": one (cnt) row, the number of those docs;
@@ -245,49 +268,33 @@ def _segment_sets(spark: SparkSession, paths: IndexPaths, stats: dict, node,
       union is emitted (its markers possibly empty).
 
     Pattern atoms expand on the driver (``query._read_dictionary`` with
-    ``spec_matcher``), so the scan is a plain ``term IN (...) [OR term IS
-    NULL]`` pushed to parquet; positions are read only when there are
-    phrases."""
-    atoms = _text_atoms(node, bool(stats.get("positions")))
+    ``spec_matcher``), so each segment read is a plain ``term IN (...) [OR
+    term IS NULL]`` (``_sets_read``)."""
+    positional = bool(stats.get("positions"))
+    atoms = _text_atoms(node, positional)
     pats = {key: n for kind, key, n in atoms if kind == "pat"}
     matched = _read_dictionary(
         paths, (), [spec_matcher(_pattern_spec(n)) for n in pats.values()])[1]
     expanded = dict(zip(pats, matched))
-    ph_tokens = {t for kind, _, n in atoms if kind == "phrase"
-                 for t in _atom_tokens(n)}
-    need = ({key for kind, key, _ in atoms if kind == "term"} | ph_tokens
-            | {v for kind, v in guard or () if kind == "term"}
-            | {t for terms in expanded.values() for t in terms})
-    needs_universe = out != "markers" and _needs_universe(node, False)
+    read = _sets_read(node, positional, out, guard,
+                      [t for terms in matched for t in terms])
     schema = {"ids": "doc_id long", "count": "cnt long",
               "markers": f"doc_id long, {MARKER_COL} array<int>"}[out]
-    if not need and not needs_universe:
-        # no atom can match and no universe is needed: nothing can match
+    if read is None:
         return spark.createDataFrame([], schema)
-    pred = F.col("term").isin(sorted(need))
-    if needs_universe:
-        pred = pred | F.col("term").isNull()
-    cols = ["seg_id", "term", "doc_blob"]
-    live = read_live_segments(spark, paths)
-    has_bpe = False
-    if ph_tokens:
-        cols += ["tf_blob", "pos_blob"]
-        has_bpe = "block_pos_ends" in live.columns
-        if has_bpe:
-            cols.append("block_pos_ends")
-    segs = live.where(pred).select(*cols)
+    ph_tokens = {t for kind, _, n in atoms if kind == "phrase"
+                 for t in _atom_tokens(n)}
     nothing = np.empty(0, dtype=np.int64)
 
     def union(parts: list[np.ndarray]) -> np.ndarray:
         return np.unique(np.concatenate(parts)) if parts else nothing
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
         universe = nothing
-        if needs_universe:
+        if read.sidecar:
             dl_rows = pdf[pdf["term"].isna()]
             if dl_rows.empty:
-                return pd.DataFrame({("cnt" if out == "count" else "doc_id"):
-                                     pd.Series(dtype="int64")})
+                return pd.DataFrame()
             universe = np.cumsum(
                 varbyte_decode(bytes(dl_rows["doc_blob"].iloc[0]))
             ).astype(np.int64)
@@ -307,11 +314,10 @@ def _segment_sets(spark: SparkSession, paths: IndexPaths, stats: dict, node,
         # under a bare OR) memoize on the phrase key.
         raw_pos: dict[str, tuple] = {}
         if ph_tokens:
-            bpes = (term_rows["block_pos_ends"] if has_bpe
-                    else [None] * len(term_rows))
             for term, dblob, tblob, pblob, bpe in zip(
                     term_rows["term"], term_rows["doc_blob"],
-                    term_rows["tf_blob"], term_rows["pos_blob"], bpes):
+                    term_rows["tf_blob"], term_rows["pos_blob"],
+                    term_rows["block_pos_ends"]):
                 if term in ph_tokens and pblob is not None:
                     raw_pos[term] = _raw_positional(dblob, tblob, pblob, bpe)
         ph_memo: dict[str, np.ndarray] = {}
@@ -411,8 +417,7 @@ def _segment_sets(spark: SparkSession, paths: IndexPaths, stats: dict, node,
             return pd.DataFrame({"cnt": [int(ids.size)]})
         return pd.DataFrame({"doc_id": ids})
 
-    return routed_segment_groupby(
-        segs, live_seg_ids(stats)).applyInPandas(run, schema=schema)
+    return run_segment_kernel(spark, paths, stats, read, run, schema)
 
 
 def matching_ids(spark: SparkSession, paths: IndexPaths, node,
@@ -422,18 +427,26 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
     path (ref S2 app/helpers/es.py:143-158: a count query never fetches
     documents; Lucene evaluates the bool as per-segment bitset algebra).
     Segments partition the doc space, so the boolean DISTRIBUTES over
-    segments: inside one ``_segment_sets`` task the atoms become sorted
+    segments: inside one ``_segment_sets`` call the atoms become sorted
     numpy doc-id arrays (posting lists; pattern atoms union their expanded
     dictionary terms; phrases intersect position lists; the doclen sidecar
     is the segment's universe for NOT/match-all) and And/Or/Not are
-    intersect/union/setdiff. The plan is ONE pushed-down segment scan →
-    grouped evaluation → union of per-segment id arrays; no join, no
-    docs-table access.
+    intersect/union/setdiff. The plan is ONE job: each task reads its
+    segments in place and evaluates them → union of per-segment id arrays;
+    no join, no docs-table access.
 
     Caller contract: ``node`` must satisfy ``text_only``; the ids are those
     of the indexed corpus (compose with a semi-join for subset inputs)."""
     stats = load_stats(paths)
-    node = resolve_analyzed(node, stats.get("analyzed_fields"))
+    return _matching_ids(
+        spark, paths, stats,
+        resolve_analyzed(node, stats.get("analyzed_fields")), count_only)
+
+
+def _matching_ids(spark: SparkSession, paths: IndexPaths, stats: dict, node,
+                  count_only: bool = False) -> DataFrame:
+    """``matching_ids`` on commit ``stats`` for an already-resolved
+    ``node``."""
     if not stats.get("positions") and any(
             kind == "phrase" for kind, _, _ in _text_atoms(node, True)):
         # a multi-token phrase needs position lists; silently evaluating it
@@ -468,17 +481,26 @@ def indexed_filter(
     way ES filter context never leaves the inverted index.
 
     Otherwise the marker kernel (``_segment_sets``) returns, per doc, which
-    text atoms it matches, from one segment scan; the docs table is joined
-    ONCE — inner when ``required_atoms_union`` guarantees a text atom (only
-    candidate docs survive the join), left otherwise (no markers = no text
-    atom matched) — and the boolean is ``to_spark_predicate`` with each text
+    text atoms it matches, from one segment-kernel pass; the docs table is
+    joined ONCE — inner when ``required_atoms_union`` guarantees a text atom
+    (only candidate docs survive the join), left otherwise (no markers = no
+    text atom matched) — and the boolean is ``to_spark_predicate`` with each text
     atom as ``array_contains(markers, i)``."""
     stats = load_stats(paths)
     # mapping consultation (ES-style): field atoms on analyzed fields
     # become index-backed FieldText atoms before any compilation
-    node = resolve_analyzed(node, stats.get("analyzed_fields"))
+    return _indexed_filter(
+        spark, paths, stats, docs, doc_col, text_col,
+        resolve_analyzed(node, stats.get("analyzed_fields")), columns)
+
+
+def _indexed_filter(spark: SparkSession, paths: IndexPaths, stats: dict,
+                    docs: DataFrame, doc_col: str, text_col: str, node,
+                    columns: list[str]) -> DataFrame:
+    """``indexed_filter`` on commit ``stats`` for an already-resolved
+    ``node``."""
     if text_only(node, bool(stats.get("positions"))):
-        ids = matching_ids(spark, paths, node).withColumnRenamed(
+        ids = _matching_ids(spark, paths, stats, node).withColumnRenamed(
             "doc_id", "__mi_doc_id")
         return docs.join(ids, docs[doc_col] == F.col("__mi_doc_id"),
                          "left_semi")

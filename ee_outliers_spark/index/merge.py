@@ -22,7 +22,8 @@ Two policies:
                        compaction. Crash-safe: the new segment is written
                        BEFORE the atomic commit flip; a crash on either side
                        of the flip leaves a fully consistent index (readers
-                       filter to live seg_ids — see build.read_live_segments).
+                       read only live seg_ids — see
+                       build.run_segment_kernel).
 - ``merge_segments`` — full compaction (every ``fanin`` consecutive seg_ids
                        → one), same commit-point protocol.
 
@@ -45,7 +46,7 @@ from pyspark.sql import functions as F
 
 from .build import (
     SEGMENT_SCHEMA, IndexPaths, commit_stats, load_stats,
-    read_live_segments, read_manifest, refresh_stats_and_termstats,
+    read_manifest, refresh_stats_and_termstats,
     routed_segment_groupby, segment_dir_ids, segment_frame, write_manifest,
 )
 from .codec import decode_position_stream, varbyte_decode
@@ -133,19 +134,15 @@ def merge_tier(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> int | 
     untouched (asserted by tests via bytes-on-disk)."""
     stats = load_stats(paths)
     live = stats.get("live_segments")
-    if live is None:
-        live = sorted(
-            int(r["seg_id"]) for r in
-            spark.read.parquet(paths.segments)
-            .select("seg_id").distinct().collect()
-        )
+    if live is None:  # a commit from before live tracking: every directory
+        live = segment_dir_ids(paths)
     if len(live) < 2:
         return None
     sizes = _manifest_seg_sizes(paths)
     tier = sorted(live, key=lambda s: (sizes.get(s, 0), s))[:fanin]
     new_seg = max(segment_dir_ids(paths) + list(live)) + 1
 
-    segs = spark.read.parquet(paths.segments).where(
+    segs = spark.read.schema(SEGMENT_SCHEMA).parquet(paths.segments).where(
         F.col("seg_id").isin([int(s) for s in tier]))
 
     def run(pdfs):
@@ -180,13 +177,9 @@ def compact_if_needed(spark: SparkSession, paths: IndexPaths,
     does O(log) rewrites per doc regardless of corpus size."""
     created: list[int] = []
     while True:
-        stats = load_stats(paths)
-        live = stats.get("live_segments")
+        live = load_stats(paths).get("live_segments")
         if live is None:
-            live = sorted(
-                int(r["seg_id"]) for r in
-                spark.read.parquet(paths.segments)
-                .select("seg_id").distinct().collect())
+            live = segment_dir_ids(paths)
         if len(live) <= max_live:
             break
         new_seg = merge_tier(spark, paths, fanin=fanin)
@@ -203,11 +196,11 @@ def merge_segments(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> No
     is durable — a crash at any point leaves a readable index)."""
     stats = load_stats(paths)
     old_live = stats.get("live_segments")
-    segs = read_live_segments(spark, paths)
     if old_live is None:
-        old_live = sorted(
-            int(r["seg_id"]) for r in
-            segs.select("seg_id").distinct().collect())
+        old_live = segment_dir_ids(paths)
+    # seg_id is the partition column: dead directories are pruned
+    segs = spark.read.schema(SEGMENT_SCHEMA).parquet(paths.segments).where(
+        F.col("seg_id").isin([int(s) for s in old_live]))
     # fresh ids above every existing directory: append + flip, not rmtree+rename
     base = max(segment_dir_ids(paths) + list(old_live), default=-1) + 1
     rank = {s: i for i, s in enumerate(sorted(old_live))}
@@ -222,9 +215,9 @@ def merge_segments(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> No
         return _merge_group(pdf, int(pdf["new_seg"].iloc[0]))
 
     # route each output segment to its own reduce task (same placement
-    # guarantee as the build/query exchanges — see routed_segment_groupby)
+    # guarantee as the build exchange — see routed_segment_groupby)
     merged = routed_segment_groupby(
-        grouped, new_ids, col="new_seg", pack=False).applyInPandas(
+        grouped, new_ids, col="new_seg").applyInPandas(
         run, schema=SEGMENT_SCHEMA)
     merged.write.mode("append").partitionBy("seg_id").parquet(paths.segments)
 

@@ -5,10 +5,11 @@ Replaces Elasticsearch query_string scoring (ref F2/T-BM25, SURVEY §2.2/§2.6;
 whole scoring pipeline is Spark).
 
 One BM25 scoring kernel, ``_score_segments``, rank-identical to the
-pure-Python oracle. Segments are doc-disjoint, so one applyInPandas task per
-segment sums each doc's contributions and keeps a local top-k — block-max
-pruned over the compressed 128-posting blocks (Broder et al.; Ding & Suel) —
-and the global answer is one TakeOrdered over the local candidates:
+pure-Python oracle. Segments are doc-disjoint, so the kernel runs once per
+segment, where the segment lies (``build.run_segment_kernel``), sums each
+doc's contributions and keeps a local top-k — block-max pruned over the
+compressed 128-posting blocks (Broder et al.; Ding & Suel) — and the global
+answer is one TakeOrdered over the local candidates:
 
 - ``bm25_topk_wand`` scores a bag of terms at weight 1;
 - ``querystring_topk`` scores a query_string's positive atoms as one
@@ -20,16 +21,17 @@ and the global answer is one TakeOrdered over the local candidates:
 ``phrase_topk_wand`` scores a multi-token phrase from its positional matches
 (``_phrase_hits``); a single-token phrase goes to the term kernel.
 
-Scale: query-term pushdown prunes the parquet scan to |q| rows per segment;
-no posting list is materialized on the driver and no per-term contribution
-is shuffled; the final top-k is a tree reduction (orderBy+limit ⇒ TakeOrdered).
+Scale: query-term pushdown prunes each segment read to |q| rows; no posting
+list is materialized on the driver, none crosses from the JVM to Python, and
+no per-term contribution is shuffled; the final top-k is a tree reduction
+(orderBy+limit ⇒ TakeOrdered). Each public call reads the commit point
+(stats.json) once and hands that snapshot to every kernel it runs.
 """
 
 from __future__ import annotations
 
 import heapq
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,8 +42,8 @@ from ..queryparser import parse_query_string, resolve_analyzed
 from ..session import materialize
 from ..tokenizer import tokenize_py
 from .build import (
-    B, K1, IndexPaths, block_upper_bound, live_seg_ids, load_stats,
-    read_live_segments, routed_segment_groupby, termstats_files,
+    B, K1, IndexPaths, SegmentRead, block_upper_bound, load_stats,
+    run_segment_kernel, termstats_files,
 )
 from .codec import decode_position_stream, varbyte_decode
 
@@ -385,19 +387,18 @@ def _phrase_seg_match(plists: dict, distinct: list[str],
     return inter[uniq], tfs.astype(np.int64)
 
 
-def _phrase_hits(spark: SparkSession, paths: IndexPaths,
+def _phrase_hits(spark: SparkSession, paths: IndexPaths, stats: dict,
                  phrase: str | list[str], slop: int = 0) -> DataFrame | None:
     """(doc_id, tf, dl) for every doc containing the phrase (optionally with
     ``slop``, Lucene sloppy-phrase semantics — see ``_sloppy_tf``), off the
-    index. None when the phrase trivially matches nothing (empty after
-    tokenize, or contains a zero-df term). Callers pass multi-token phrases;
-    a single token is a term, scored by the term kernel. A list argument is
-    taken as ALREADY-analyzed dictionary terms (the per-field path passes
-    `field:token`-qualified terms)."""
+    index of commit ``stats``. None when the phrase trivially matches
+    nothing (empty after tokenize, or contains a zero-df term). Callers pass
+    multi-token phrases; a single token is a term, scored by the term
+    kernel. A list argument is taken as ALREADY-analyzed dictionary terms
+    (the per-field path passes `field:token`-qualified terms)."""
     toks = list(phrase) if isinstance(phrase, list) else tokenize_py(phrase)
     if not toks:
         return None
-    stats = load_stats(paths)
     if not stats.get("positions"):
         raise ValueError(
             "phrase queries need a positional index "
@@ -412,24 +413,13 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths,
     # normalized by the FIELD's doc length — fetch that norm sidecar too
     fld = _term_field(toks[0])
     side_term = (fld + ":") if fld is not None else None
-    side_pred = F.col("term").isNull()
-    if side_term is not None:
-        side_pred = side_pred | (F.col("term") == side_term)
-    seg_cols = ["seg_id", "term", "doc_blob", "tf_blob", "pos_blob"]
-    live = read_live_segments(spark, paths)
-    has_bpe = "block_pos_ends" in live.columns
-    if has_bpe:
-        seg_cols.append("block_pos_ends")
-    segs = live.where(
-        F.col("term").isin(distinct) | side_pred
-    ).select(*seg_cols)
-
+    read = SegmentRead(
+        tuple(distinct + ([side_term] if side_term else [])), True,
+        ("term", "doc_blob", "tf_blob", "pos_blob", "block_pos_ends"))
     phrase_terms = list(toks)  # ordered, with duplicates
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "tf": pd.Series(dtype="int64"),
-                              "dl": pd.Series(dtype="int64")})
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame()
         dl_rows = pdf[pdf["term"].isna()]
         if side_term is not None:
             frows = pdf[pdf["term"] == side_term]
@@ -443,11 +433,10 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths,
             varbyte_decode(bytes(dl_rows["doc_blob"].iloc[0]))).astype(np.int64)
         dl_vals = varbyte_decode(bytes(dl_rows["tf_blob"].iloc[0])).astype(np.int64)
         raw: dict[str, tuple] = {}
-        bpes = (term_rows["block_pos_ends"] if has_bpe
-                else [None] * len(term_rows))
         for term, dblob, tblob, pblob, bpe in zip(
                 term_rows["term"], term_rows["doc_blob"],
-                term_rows["tf_blob"], term_rows["pos_blob"], bpes):
+                term_rows["tf_blob"], term_rows["pos_blob"],
+                term_rows["block_pos_ends"]):
             raw[term] = _raw_positional(dblob, tblob, pblob, bpe)
         inter, plists = _lazy_plists(raw, distinct)
         if plists is None:
@@ -461,8 +450,8 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths,
             "dl": dl_vals[np.searchsorted(dl_docs, d)],
         })
 
-    return routed_segment_groupby(segs, live_seg_ids(stats)).applyInPandas(
-        run, schema="doc_id long, tf long, dl long")
+    return run_segment_kernel(spark, paths, stats, read, run,
+                              "doc_id long, tf long, dl long")
 
 
 def phrase_topk_wand(
@@ -475,19 +464,19 @@ def phrase_topk_wand(
     intersecting the per-term position lists stored in the segments (Lucene
     PhraseQuery over .prx), BM25-scored with the phrase's own df/idf.
 
-    The corpus is never re-tokenized per query: the plan reads ONLY
-    segments.parquet rows for the phrase's distinct terms (term IN (...)
-    pushed to the scan) plus the doclen sidecars — at 10^12 docs a phrase
+    The corpus is never re-tokenized per query: the kernel reads ONLY the
+    segment rows of the phrase's distinct terms (term IN (...), in place
+    per live segment) plus the doclen sidecars — at 10^12 docs a phrase
     query touches |q| posting lists per segment, never the documents table.
     Requires an index built with ``positions=True`` (single-token phrases
     are term queries and work on any index)."""
     toks = tokenize_py(phrase)
+    stats = load_stats(paths)
     if len(toks) == 1:
-        return bm25_topk_wand(spark, paths, toks, k)
-    hits = _phrase_hits(spark, paths, toks)
+        return _bm25_topk(spark, paths, stats, toks, k)
+    hits = _phrase_hits(spark, paths, stats, toks)
     if hits is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    stats = load_stats(paths)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     # hits feed the df count and the scores; a broadcast-join of the count
     # would recompute the positional intersection (measured 4x slower at 600k)
@@ -560,7 +549,7 @@ def _query_weights(spark: SparkSession, paths: IndexPaths, stats: dict,
 
     phrases = [a for a in atoms["phrases"] if len(a[0]) > 1]
     hits = [(i, h) for i, (p, slop, _) in enumerate(phrases)
-            if (h := _phrase_hits(spark, paths, p, slop)) is not None]
+            if (h := _phrase_hits(spark, paths, stats, p, slop)) is not None]
     phrase_w: list[tuple] = []
     if hits:
         tagged = hits[0][1].select(F.lit(hits[0][0]).alias("__pk"))
@@ -593,8 +582,8 @@ def search_topk(
     clauses with field/negated clauses, app/helpers/es.py:238-270):
 
     - ELIGIBILITY: the full boolean matches (index-backed ``indexed_filter``
-      — the text atoms' per-doc markers from one segment scan, one join
-      with the docs table; no corpus-text regex),
+      — the text atoms' per-doc markers from one segment-kernel pass, one
+      join with the docs table; no corpus-text regex),
     - SCORE: the sum of the positive text atoms' BM25 contributions off the
       index — the scoring kernel with k=None (``_score_segments``), so every
       doc it reaches keeps its score. Field/negated clauses gate but score
@@ -605,7 +594,7 @@ def search_topk(
     kernel's per-doc scores, then TakeOrdered. A text-only boolean skips the
     docs table entirely (``matching_ids`` — the ES behavior: a query with no
     field clauses never reads _source)."""
-    from .filter import indexed_filter, matching_ids, text_only
+    from .filter import _indexed_filter, _matching_ids, text_only
 
     stats = load_stats(paths)
     node = resolve_analyzed(parse_query_string(query_string),
@@ -615,12 +604,12 @@ def search_topk(
         # match-all); semi-join against the caller's docs so a filtered
         # subset never yields hits outside it — Catalyst prunes the docs
         # scan to the id column, the same guarantee indexed_filter gives
-        eligible = matching_ids(spark, paths, node).join(
+        eligible = _matching_ids(spark, paths, stats, node).join(
             docs.select(F.col(doc_col).cast("long").alias("doc_id")),
             "doc_id", "left_semi")
     else:
-        eligible = indexed_filter(
-            spark, paths, docs, doc_col, text_col, node, columns,
+        eligible = _indexed_filter(
+            spark, paths, stats, docs, doc_col, text_col, node, columns,
         ).select(F.col(doc_col).cast("long").alias("doc_id"))
     term_w, phrase_w = _query_weights(spark, paths, stats, node)
     if not term_w and not phrase_w:
@@ -639,18 +628,19 @@ def search_topk(
 def doclen_df(spark: SparkSession, paths: IndexPaths) -> DataFrame:
     """(doc_id, dl) decoded from the per-segment doclen sidecar rows — the
     corpus text is never re-tokenized once an index exists."""
-    segs = read_live_segments(spark, paths).where(
-        F.col("term").isNull()
-    ).select("doc_blob", "tf_blob")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for dblob, tblob in zip(pdf["doc_blob"], pdf["tf_blob"]):
-                docs = np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64)
-                dls = varbyte_decode(bytes(tblob)).astype(np.int64)
-                yield pd.DataFrame({"doc_id": docs, "dl": dls})
+    def decode(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        if pdf.empty:  # a live segment without a directory
+            return pdf
+        dblob, tblob = pdf["doc_blob"].iloc[0], pdf["tf_blob"].iloc[0]
+        return pd.DataFrame({
+            "doc_id": np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64),
+            "dl": varbyte_decode(bytes(tblob)).astype(np.int64)})
 
-    return segs.mapInPandas(decode, schema="doc_id long, dl long")
+    return run_segment_kernel(
+        spark, paths, load_stats(paths),
+        SegmentRead((), True, ("doc_blob", "tf_blob")), decode,
+        "doc_id long, dl long")
 
 
 class _TermCursor:
@@ -1062,11 +1052,12 @@ def _score_segments(spark: SparkSession, paths: IndexPaths, stats: dict,
     ([(tokens, slop, idf × weight)]). mode='and' (terms only) keeps the docs
     containing every term.
 
-    One scan reads the query's dictionary rows plus the doclen and
-    per-field norm sidecars — term IN (...) OR term IS NULL, pushed to
-    parquet — and positions only when there are phrases. One task per
-    segment builds a lazily decoded ``_TermCursor`` per term and a
-    ``_ListCursor`` per phrase that matches in the segment
+    Each live segment of commit ``stats`` is read in place
+    (``run_segment_kernel``): the query's dictionary rows plus the doclen
+    and per-field norm sidecars — term IN (...) OR term IS NULL — and
+    positions only when there are phrases. Per segment, the kernel builds a
+    lazily decoded ``_TermCursor`` per term and a ``_ListCursor`` per
+    phrase that matches in the segment
     (``_lazy_plists`` → ``_phrase_seg_match``), then dispatches by shape,
     all exact and rank-identical:
      - 1 cursor     → vectorized block-ordered top-k (block-max kept)
@@ -1081,21 +1072,14 @@ def _score_segments(spark: SparkSession, paths: IndexPaths, stats: dict,
         if fld is not None and fld in fnorms})
     # column pruning matters: pos_blob (when the index is positional) is the
     # largest column in the segment table and only phrases touch it
-    cols = ["seg_id", "term", "doc_blob", "tf_blob",
-            "block_last_doc", "block_max_tf", "block_min_dl"]
-    live = read_live_segments(spark, paths)
-    has_bpe = bool(phrase_w) and "block_pos_ends" in live.columns
-    if phrase_w:
-        cols.append("pos_blob")
-    if has_bpe:
-        cols.append("block_pos_ends")
-    segs = live.where(
-        F.col("term").isin(scan + side_terms) | F.col("term").isNull()
-    ).select(*cols)
+    read = SegmentRead(
+        tuple(scan + side_terms), True,
+        ("term", "doc_blob", "tf_blob", "block_last_doc", "block_max_tf",
+         "block_min_dl")
+        + (("pos_blob", "block_pos_ends") if phrase_w else ()))
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame()
         # sidecar term → (doc ids, doc lengths); None = the main text's
         side = pdf[pdf["term"].isna() | pdf["term"].isin(side_terms)]
         sidecars = {
@@ -1139,8 +1123,7 @@ def _score_segments(spark: SparkSession, paths: IndexPaths, stats: dict,
                 if t not in raw:
                     r = rows[t]
                     raw[t] = _raw_positional(
-                        r.doc_blob, r.tf_blob, r.pos_blob,
-                        r.block_pos_ends if has_bpe else None)
+                        r.doc_blob, r.tf_blob, r.pos_blob, r.block_pos_ends)
             _, plists = _lazy_plists(raw, distinct)
             if plists is None:
                 continue
@@ -1159,8 +1142,7 @@ def _score_segments(spark: SparkSession, paths: IndexPaths, stats: dict,
             res = _or_segment(cursors, k, avgdl)
         return pd.DataFrame(res, columns=["doc_id", "score"])
 
-    return routed_segment_groupby(segs, live_seg_ids(stats)).applyInPandas(
-        run, schema=TOPK_SCHEMA)
+    return run_segment_kernel(spark, paths, stats, read, run, TOPK_SCHEMA)
 
 
 def _top(scores: DataFrame, k: int) -> DataFrame:
@@ -1177,8 +1159,12 @@ def bm25_topk_wand(
 ) -> DataFrame:
     """Block-max top-k of a bag of terms, each at weight 1, through the
     scoring kernel (``_score_segments``) → global top-k DataFrame."""
+    return _bm25_topk(spark, paths, load_stats(paths), terms, k, mode)
+
+
+def _bm25_topk(spark: SparkSession, paths: IndexPaths, stats: dict,
+               terms: list[str], k: int, mode: str = "or") -> DataFrame:
     terms = list(dict.fromkeys(terms))
-    stats = load_stats(paths)
     term_w = _term_weights(paths, stats, dict.fromkeys(terms, 1.0))
     if not term_w or (mode == "and" and len(term_w) < len(terms)):
         # conjunction with a zero-df term matches nothing (oracle semantics)

@@ -55,6 +55,19 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def _default_driver_mem() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEM`` is unset: 20g, capped at
+    a quarter of physical memory (``MemTotal`` in /proc/meminfo), so a
+    session on a small host starts instead of failing at JVM launch."""
+    try:
+        with open("/proc/meminfo") as fh:
+            total_kb = next(int(line.split()[1]) for line in fh
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "20g"
+    return f"{min(20 * 1024, total_kb // 4096)}m"
+
+
 def get_spark(
     app_name: str = "ee-outliers-spark",
     master: str | None = None,
@@ -64,7 +77,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    _mem = os.environ.get("SPARK_DRIVER_MEM", "20g")
+    _mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     # Pre-touch is OPT-IN (default off since round 7): faulting the full
     # heap at JVM start converts host memory pressure into unbounded,
     # unattributable startup stalls — measured round 6: pre-touching 16g
@@ -100,13 +113,14 @@ def get_spark(
         # local mode = ONE JVM for driver+executors: size the heap for
         # cache + per-task shuffle/Arrow buffers × cores, or 32 concurrent
         # tasks GC-thrash an undersized heap and scaling inverts. 20g fits
-        # every harness in this sandbox (the largest bench corpus caches
-        # ~11 GB deserialized); DON'T size it "as big as the box": this
-        # VM's page-fault path degrades super-linearly in faulted bytes
-        # when the hypervisor is under memory pressure (measured round 6,
-        # same hour: pre-touching 8g cost 7.6 s, 16g 225 s, 48g 520 s wall /
-        # 192 CPU-min of sys — and while a big heap faults in, the whole
-        # guest stalls). Every page the JVM never touches is startup time
+        # every bench harness (the largest bench corpus caches ~11 GB
+        # deserialized) on a host with ≥ 80 GB, and a quarter of physical
+        # memory caps it on smaller hosts; DON'T size it "as big as the
+        # box": this VM's page-fault path degrades super-linearly in
+        # faulted bytes when the hypervisor is under memory pressure
+        # (measured round 6, same hour: pre-touching 8g cost 7.6 s, 16g
+        # 225 s, 48g 520 s wall / 192 CPU-min of sys — and while a big heap
+        # faults in, the whole guest stalls). Every page the JVM never touches is startup time
         # and host co-tenancy risk saved.
         .config("spark.driver.memory", _mem)
         # Xms=Xmx + pre-touch: fault the whole heap ONCE at JVM start so

@@ -47,7 +47,7 @@ class OutlierStore:
     def read(self) -> DataFrame:
         if not self._exists():
             return self.spark.createDataFrame([], RESULTS_SCHEMA)
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(RESULTS_SCHEMA).parquet(self.path)
 
     def upsert(self, new: DataFrame) -> int:
         """Idempotent merge: insert rows whose (doc_key, model_name) is not

@@ -32,9 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.build import (
-    IndexPaths, collect_sidecar_rows, incremental_append_refresh, load_stats,
-    read_manifest, refresh_stats_and_termstats, segment_dir_ids,
-    segment_frames_df, write_manifest,
+    SEGMENT_SCHEMA, IndexPaths, collect_sidecar_rows,
+    incremental_append_refresh, load_stats, read_manifest,
+    refresh_stats_and_termstats, segment_dir_ids, segment_frames_df,
+    write_manifest,
 )
 
 
@@ -73,8 +74,8 @@ def append_segments(
     new_ids = list(range(base_seg, base_seg + num_segments))
     # ONE pruned job over the new batch's partition dirs feeds the manifest
     # AND the incremental stats fold
-    new_segs = spark.read.parquet(paths.segments).where(
-        F.col("seg_id").isin(new_ids))
+    new_segs = spark.read.schema(SEGMENT_SCHEMA).parquet(
+        paths.segments).where(F.col("seg_id").isin(new_ids))
     sidecar = collect_sidecar_rows(new_segs)
     write_manifest(spark, paths, new_ids,
                    {"kind": "incremental_append", "base_seg": base_seg}, wall,

@@ -37,18 +37,20 @@ sections: list[tuple[str, str, object]] = []
 node = parse_query_string("window AND (lang:en OR lang:de) AND _exists_:source")
 sections.append((
     "Index-backed filter context",
-    "the text atom resolves in the marker kernel: ONE segment scan pruned "
-    "by `term IN (...)` PushedFilters, per-doc marker arrays from the "
-    "per-segment tasks, ONE inner join with the documents scan (the term "
-    "is required); field predicates push to the documents scan; NO rlike "
-    "in the plan",
+    "the text atom resolves in the marker kernel: ONE MapInPandas "
+    "segment_kernel over a Range, each task reading its live segments in "
+    "place (`term IN (...)`), per-doc marker arrays from the kernel, ONE "
+    "inner join with the documents scan (the term is required); field "
+    "predicates push to the documents scan; NO rlike in the plan",
     indexed_filter(spark, paths, docs, "doc_id", "text", node,
                    ["doc_id", "text", "lang", "source", "n_chars"]),
 ))
 sections.append((
     "Block-max WAND top-k",
-    "one segment scan with term-IN pushdown (query terms + the NULL sidecar "
-    "row), per-segment applyInPandas WAND, TakeOrdered global top-k",
+    "one MapInPandas segment_kernel over a Range: each task reads the "
+    "query terms + the NULL sidecar row of its live segments in place and "
+    "runs the per-segment WAND; no segment scan or exchange in the JVM; "
+    "TakeOrdered global top-k",
     bm25_topk_wand(spark, paths, ["customer", "window", "batch"], 10, "or"),
 ))
 qv = ep._lsh_query_vec(spark, sf_dir)
@@ -67,24 +69,24 @@ from ee_outliers_spark.index.query import (  # noqa: E402
 sections.append((
     "Index-backed phrase query (positional postings)",
     "the phrase's distinct terms + the NULL sidecar rows are the ONLY rows "
-    "read (term IN pushdown on segments.parquet); position-list intersection "
-    "in the per-segment kernel; the documents table appears NOWHERE in this "
-    "plan — the round-2 full-corpus re-tokenize is gone",
+    "the segment kernel reads (term IN, in place per live segment); "
+    "position-list intersection in the kernel; the documents table appears "
+    "NOWHERE in this plan — the round-2 full-corpus re-tokenize is gone",
     phrase_topk_wand(spark, paths, "key order", 10),
 ))
 sections.append((
     "Mixed query_string top-k (terms + quoted phrase)",
-    "ONE segment scan (query terms, the NULL sidecar row, positions for "
-    "the phrase); the per-segment scoring kernel sums term and phrase "
-    "contributions per doc and keeps a local top-k; TakeOrdered — all "
-    "index-side, no corpus scan",
+    "ONE segment-kernel pass (query terms, the NULL sidecar row, positions "
+    "for the phrase, read in place); the per-segment scoring kernel sums "
+    "term and phrase contributions per doc and keeps a local top-k; "
+    "TakeOrdered — all index-side, no corpus scan",
     querystring_topk(spark, paths, 'customer window "key order"', 10),
 ))
 wnode = parse_query_string('cust* AND custoner~1 AND "order key"~2')
 sections.append((
     "Wildcard / fuzzy / sloppy-phrase filter (driver-side expansion)",
     "wildcard and fuzzy atoms expand against the term dictionary on the "
-    "driver (one pyarrow read of termstats), so the segment scan is a "
+    "driver (one pyarrow read of termstats), so the segment read is a "
     "plain `term IN (...)`; the sloppy phrase intersects positional "
     "windows per segment; the boolean is text-only, so the documents "
     "table contributes only its key to a left-semi join; NO rlike in the "
@@ -97,19 +99,19 @@ from ee_outliers_spark.index.filter import matching_ids  # noqa: E402
 tnode = parse_query_string('window AND (cust* OR batch) AND NOT "batch batch"')
 sections.append((
     "Postings-only boolean (matching_ids — round 4)",
-    "a text-only boolean never touches the documents table: ONE segment "
-    "scan (term-IN over the query tokens and expanded pattern terms + the "
-    "NULL sidecar row pushed to parquet), per-segment numpy set algebra "
-    "inside applyInPandas "
-    "(And/Or/Not = intersect/union/setdiff vs the doclen universe), union "
-    "of per-segment id arrays — zero doc-keyed exchange in the whole plan",
+    "a text-only boolean never touches the documents table: ONE "
+    "MapInPandas segment_kernel over a Range (term-IN over the query tokens "
+    "and expanded pattern terms + the NULL sidecar row, read in place per "
+    "live segment), per-segment numpy set algebra (And/Or/Not = "
+    "intersect/union/setdiff vs the doclen universe), union of per-segment "
+    "id arrays — no exchange in the whole plan",
     matching_ids(spark, paths, tnode),
 ))
 sections.append((
     "Per-field analyzed filter (FieldText — round 5)",
     "field atoms on analyzed fields resolve as field-prefixed dictionary "
-    "terms in the SAME postings-only set-algebra plan — one segment scan "
-    "with `term IN ('title:batch', ...)` pushed down, per-segment numpy "
+    "terms in the SAME postings-only set-algebra plan — one segment-kernel "
+    "pass reading `term IN ('title:batch', ...)`, per-segment numpy "
     "booleans, zero documents-table access; .keyword / non-analyzed "
     "fields stay plain column predicates",
     matching_ids(spark, ep._field_index(spark, sf_dir),

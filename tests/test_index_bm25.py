@@ -4,6 +4,7 @@ behind bm25_topk_wand / querystring_topk / search_topk, and phrase scoring.
 Ranks exact; scores to 1e-6."""
 
 import math
+import os
 
 import pytest
 
@@ -202,22 +203,22 @@ def test_matching_ids_postings_only(spark, documents, pos_paths):
     for qs in ["window AND lang:en", "n_chars:[10 TO 200]",
                "_exists_:source"]:
         assert not text_only(parse_query_string(qs), positional=True), qs
-    # the doclen-sidecar universe ships only when NOT/match-all needs it —
-    # a positive-only boolean's scan filter has no isnull(term) leg
-    pos_plan = matching_ids(
-        spark, pos_paths, parse_query_string("window AND cust*")
-    )._jdf.queryExecution().optimizedPlan().toString().lower()
-    assert "isnull(term" not in pos_plan
-    neg_plan = matching_ids(
-        spark, pos_paths, parse_query_string("NOT window")
-    )._jdf.queryExecution().optimizedPlan().toString().lower()
-    assert "isnull(term" in neg_plan
+    # the doclen-sidecar universe is read only when NOT/match-all needs it
+    # — a positive-only boolean's segment read has no `term IS NULL` leg
+    from ee_outliers_spark.index.filter import _sets_read
+
+    pos_read = _sets_read(parse_query_string("window AND cust*"), True,
+                          "ids", None, ["customer"])
+    assert not pos_read.sidecar
+    assert set(pos_read.terms) == {"window", "customer"}
+    assert _sets_read(parse_query_string("NOT window"), True, "ids", None,
+                      []).sidecar
     # `X AND NOT Y` evaluates the NOT as subtraction from the positive
-    # conjunction (Lucene ReqExcl) — no universe row in the scan either
-    req_excl_plan = matching_ids(
-        spark, pos_paths, parse_query_string('window AND NOT "batch batch"')
-    )._jdf.queryExecution().optimizedPlan().toString().lower()
-    assert "isnull(term" not in req_excl_plan
+    # conjunction (Lucene ReqExcl) — no universe row in the read either
+    req_excl = _sets_read(parse_query_string('window AND NOT "batch batch"'),
+                          True, "ids", None, [])
+    assert not req_excl.sidecar
+    assert "pos_blob" in req_excl.columns
 
 
 def test_matching_ids_agrees_on_full_query_corpus(spark, documents,
@@ -649,8 +650,7 @@ def test_segment_routing_is_one_task_per_segment(spark, documents):
         return pd.DataFrame({"seg_id": [int(pdf["seg_id"].iloc[0])],
                              "uniq": [int(pdf["seg_id"].nunique())]})
 
-    rows = routed_segment_groupby(src, list(range(n_seg)),
-                                  pack=False).applyInPandas(
+    rows = routed_segment_groupby(src, list(range(n_seg))).applyInPandas(
         seg_of, "seg_id int, uniq int").collect()
     assert sorted(r["seg_id"] for r in rows) == list(range(n_seg))
     assert all(r["uniq"] == 1 for r in rows)
@@ -658,12 +658,11 @@ def test_segment_routing_is_one_task_per_segment(spark, documents):
 
 def test_routed_segment_groupby_random_live_sets(spark):
     """Property test over random sparse live-sets (round-6 verdict #6):
-    routed_segment_groupby must invoke the kernel exactly once per live
-    segment with a SINGLE-segment pdf for every live-set shape the LSM can
-    produce (sparse, non-contiguous seg_ids after compaction), on both the
-    one-task-per-segment path (n ≤ cores) and the packed path (n > cores —
-    round-7: segments round-robin packed into defaultParallelism balanced
-    reduce tasks, kernel re-invoked per segment inside the task)."""
+    routed_segment_groupby — the build and merge router — must invoke the
+    kernel exactly once per live segment with a SINGLE-segment pdf for
+    every live-set shape the LSM can produce (sparse, non-contiguous
+    seg_ids after compaction), with fewer and with more segments than
+    cores."""
     import random
 
     import pandas as pd
@@ -697,6 +696,68 @@ def test_routed_segment_groupby_random_live_sets(spark):
             seg_of, "seg_id int, uniq int, rows int").collect()
         assert sorted(r["seg_id"] for r in got2) == sorted(live + [1025])
         assert all(r["uniq"] == 1 for r in got2)
+
+
+def _segment_kernel_nodes(plan: str) -> list[str]:
+    """The segment-kernel nodes of an executed plan: each is a MapInPandas
+    of ``run_segment_kernel``'s task function whose child is a Range."""
+    lines = plan.splitlines()
+    return [ln for i, ln in enumerate(lines)
+            if "MapInPandas segment_kernel(" in ln
+            and i + 1 < len(lines) and "Range (" in lines[i + 1]]
+
+
+def test_run_segment_kernel_random_live_sets(spark, tmp_path):
+    """Property test for the query-side segment reader over random sparse
+    live sets, with more and fewer segments than cores: every live segment
+    reaches the kernel exactly once, each call sees exactly that segment's
+    rows (term rows and sidecar), and a dead directory on disk — here a
+    corrupt file that would fail any read — is never opened."""
+    import random
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ee_outliers_spark.index.build import (
+        IndexPaths, SegmentRead, run_segment_kernel, segment_arrow_schema)
+
+    rng = random.Random(11)
+    schema = segment_arrow_schema()
+    read = SegmentRead(("a", "b", "c"), True, ("term", "df_local"))
+
+    def kernel(seg, pdf):
+        return pd.DataFrame({
+            "seg_id": [seg],
+            "rows": [len(pdf)],
+            "own": [bool((pdf["df_local"] == seg).all())],
+            "sidecars": [int(pdf["term"].isna().sum())]})
+
+    cores = spark.sparkContext.defaultParallelism
+    for size in (1, 2, 3, 5, 17, 64, 131, 256):
+        paths = IndexPaths(str(tmp_path / f"idx{size}"))
+        ids = rng.sample(range(1024), size + 3)
+        live, dead = sorted(ids[:size]), ids[size:]
+        for s in live:
+            d = os.path.join(paths.segments, f"seg_id={s}")
+            os.makedirs(d)
+            cols = {f.name: pa.nulls(5, f.type) for f in schema}
+            cols["term"] = pa.array(["a", "b", "c", "zz", None], pa.string())
+            cols["df_local"] = pa.array([s] * 5, pa.int64())
+            pq.write_table(pa.table(cols), os.path.join(d, "part-0.parquet"))
+        for s in dead:
+            d = os.path.join(paths.segments, f"seg_id={s}")
+            os.makedirs(d)
+            with open(os.path.join(d, "part-0.parquet"), "wb") as fh:
+                fh.write(b"not a parquet file")
+        df = run_segment_kernel(spark, paths, {"live_segments": live}, read,
+                                kernel, "seg_id int, rows int, own boolean, "
+                                        "sidecars int")
+        assert df.rdd.getNumPartitions() == min(cores, size), size
+        got = df.collect()
+        assert sorted(r["seg_id"] for r in got) == live, size
+        assert all(r["rows"] == 4 and r["own"] and r["sidecars"] == 1
+                   for r in got), size
 
 
 def test_phrase_seg_match_repeated_sloppy_randomized():
@@ -877,6 +938,7 @@ def test_sloppy_phrase_three_terms_positional(spark, documents, pos_paths):
     offsets."""
     import itertools
 
+    from ee_outliers_spark.index.build import load_stats
     from ee_outliers_spark.index.query import _phrase_hits
     from ee_outliers_spark.tokenizer import tokenize_py
 
@@ -897,7 +959,8 @@ def test_sloppy_phrase_three_terms_positional(spark, documents, pos_paths):
             for r in documents.select("doc_id", "text").collect()}
     for phrase, slop in [("key order update", 3), ("the key order", 2),
                          ("batch batch stream", 2), ("key the key", 3)]:
-        hits = _phrase_hits(spark, pos_paths, phrase, slop)
+        hits = _phrase_hits(spark, pos_paths, load_stats(pos_paths), phrase,
+                            slop)
         # None: the phrase has a zero-df token and matches nothing
         got = sorted(int(r["doc_id"])
                      for r in (hits.collect() if hits is not None else []))
@@ -1017,9 +1080,10 @@ def test_indexed_filter_phrases_off_positional_index(spark, documents, pos_paths
 
 def test_mixed_filter_plan_has_one_segment_scan(spark, documents, pos_paths):
     """A mixed boolean's term, phrase and wildcard atoms resolve in ONE
-    segment scan — the marker kernel — and the docs table joins the
-    per-doc markers straight out of the segment tasks: no aggregate keyed
-    on doc_id sits before the docs join."""
+    segment-kernel pass — the marker kernel, reading the segments in place
+    (one MapInPandas over a Range, no JVM scan of posting blobs) — and the
+    docs table joins the per-doc markers straight out of the segment
+    tasks: no aggregate keyed on doc_id sits before the docs join."""
     import re
 
     from ee_outliers_spark.index.filter import indexed_filter
@@ -1031,10 +1095,12 @@ def test_mixed_filter_plan_has_one_segment_scan(spark, documents, pos_paths):
     out = indexed_filter(spark, pos_paths, documents, "doc_id", "text",
                          node, cols)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    seg_scans = [m for m in re.findall(r"ReadSchema: struct<[^\n]*", plan)
-                 if "doc_blob" in m]
-    assert len(seg_scans) == 1, plan
-    assert not re.search(r"Aggregate\(keys=\[[^\]]*doc_id", plan), plan
+    assert len(_segment_kernel_nodes(plan)) == 1, plan
+    blob_scans = [m for m in re.findall(r"ReadSchema: struct<[^\n]*", plan)
+                  if "doc_blob" in m]
+    assert not blob_scans, plan
+    # HashAggregate prints keys=[...], SortAggregate key=[...]
+    assert not re.search(r"Aggregate\(keys?=\[[^\]]*doc_id", plan), plan
     want = sorted(r["doc_id"] for r in documents.where(
         to_spark_predicate(node, "text", cols)).select("doc_id").collect())
     got = sorted(r["doc_id"] for r in out.select("doc_id").collect())
