@@ -19,7 +19,9 @@ answer is one TakeOrdered over the local candidates:
   scores to the boolean's eligible ids.
 
 ``phrase_topk_wand`` scores a multi-token phrase from its positional matches
-(``_phrase_hits``); a single-token phrase goes to the term kernel.
+(``_phrase_kernel``): each segment returns its match count and its top-k
+candidates, and the driver ranks them under the phrase's idf; a single-token
+phrase goes to the term kernel.
 
 Scale: query-term pushdown prunes each segment read to |q| rows; no posting
 list is materialized on the driver, none crosses from the JVM to Python, and
@@ -32,6 +34,7 @@ from __future__ import annotations
 
 import heapq
 import math
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -39,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queryparser import parse_query_string, resolve_analyzed
-from ..session import materialize
 from ..tokenizer import tokenize_py
 from .build import (
     B, K1, IndexPaths, SegmentRead, block_upper_bound, load_stats,
@@ -48,6 +50,7 @@ from .build import (
 from .codec import decode_position_stream, varbyte_decode
 
 TOPK_SCHEMA = "doc_id long, score double"
+PHRASE_HITS_SCHEMA = "doc_id long, tf long, dl long"
 
 
 def _idf(n_docs: int, df_: int) -> float:
@@ -396,6 +399,18 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths, stats: dict,
     multi-token phrases; a single token is a term, scored by the term
     kernel. A list argument is taken as ALREADY-analyzed dictionary terms
     (the per-field path passes `field:token`-qualified terms)."""
+    spec = _phrase_kernel(paths, stats, phrase, slop)
+    if spec is None:
+        return None
+    return run_segment_kernel(spark, paths, stats, *spec, PHRASE_HITS_SCHEMA)
+
+
+def _phrase_kernel(paths: IndexPaths, stats: dict, phrase: str | list[str],
+                   slop: int = 0
+                   ) -> tuple[SegmentRead, Callable[..., pd.DataFrame]] | None:
+    """``_phrase_hits``' (read spec, per-segment kernel): the kernel maps one
+    segment's rows to that segment's (doc_id, tf, dl) phrase matches. None
+    when the phrase trivially matches nothing."""
     toks = list(phrase) if isinstance(phrase, list) else tokenize_py(phrase)
     if not toks:
         return None
@@ -450,8 +465,7 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths, stats: dict,
             "dl": dl_vals[np.searchsorted(dl_docs, d)],
         })
 
-    return run_segment_kernel(spark, paths, stats, read, run,
-                              "doc_id long, tf long, dl long")
+    return read, run
 
 
 def phrase_topk_wand(
@@ -469,30 +483,49 @@ def phrase_topk_wand(
     per live segment) plus the doclen sidecars — at 10^12 docs a phrase
     query touches |q| posting lists per segment, never the documents table.
     Requires an index built with ``positions=True`` (single-token phrases
-    are term queries and work on any index)."""
+    are term queries and work on any index).
+
+    One Spark job: the phrase's idf is one positive constant per query, so
+    each segment returns its match count and only the matches that can reach
+    the top-k under any such idf; the driver sums the counts into the df and
+    scores and ranks those candidates."""
     toks = tokenize_py(phrase)
     stats = load_stats(paths)
     if len(toks) == 1:
         return _bm25_topk(spark, paths, stats, toks, k)
-    hits = _phrase_hits(spark, paths, stats, toks)
-    if hits is None:
+    spec = _phrase_kernel(paths, stats, toks)
+    if spec is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
+    read, hits = spec
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    # hits feed the df count and the scores; a broadcast-join of the count
-    # would recompute the positional intersection (measured 4x slower at 600k)
-    hits = materialize(hits)
-    dfp = hits.count()
-    if dfp == 0:
+
+    def candidates(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        h = hits(seg, pdf)
+        if h.empty:
+            return h
+        n = len(h)
+        if 0 < k < n:
+            # score = fl(idf × impact) is monotone in impact; the 1e-9
+            # relative margin also keeps a doc whose score only rounds to
+            # a tie with the k-th's, where the doc-id order decides
+            impact = _impact_np(h["tf"].to_numpy(), h["dl"].to_numpy(), avgdl)
+            kth = np.partition(impact, n - k)[n - k]
+            h = h[impact >= kth * (1.0 - 1e-9)]
+        return h.assign(seg_hits=np.where(np.arange(len(h)) == 0, n, 0))
+
+    rows = run_segment_kernel(
+        spark, paths, stats, read, candidates,
+        PHRASE_HITS_SCHEMA + ", seg_hits long").toPandas()
+    if rows.empty:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    idf = _idf(n_docs, int(dfp))
-    scored = hits.select(
-        "doc_id",
-        (
-            F.lit(idf) * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl))))
-        ).alias("score"),
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    idf = _idf(n_docs, int(rows["seg_hits"].sum()))
+    doc = rows["doc_id"].to_numpy()
+    scores = idf * _impact_np(rows["tf"].to_numpy(), rows["dl"].to_numpy(),
+                              avgdl)
+    top = np.lexsort((doc, -scores))[:max(k, 0)]
+    # a pandas frame becomes an Arrow local relation: no job, no worker
+    return spark.createDataFrame(
+        pd.DataFrame({"doc_id": doc[top], "score": scores[top]}), TOPK_SCHEMA)
 
 
 def querystring_topk(

@@ -68,10 +68,12 @@ from ee_outliers_spark.index.query import (  # noqa: E402
 
 sections.append((
     "Index-backed phrase query (positional postings)",
-    "the phrase's distinct terms + the NULL sidecar rows are the ONLY rows "
-    "the segment kernel reads (term IN, in place per live segment); "
-    "position-list intersection in the kernel; the documents table appears "
-    "NOWHERE in this plan — the round-2 full-corpus re-tokenize is gone",
+    "the segment kernel runs eagerly as the query's one job, reading ONLY "
+    "the phrase's distinct terms + the NULL sidecar rows (term IN, in place "
+    "per live segment) and intersecting position lists; each segment "
+    "returns its match count and top-k candidates, and the driver ranks "
+    "them, so the plan left is a LocalTableScan of the top-k — the "
+    "documents table is never read",
     phrase_topk_wand(spark, paths, "key order", 10),
 ))
 sections.append((

@@ -70,6 +70,40 @@ def test_phrase_wand_rank_identity(phrase, spark, pos_paths, oracle):
     _check(got, oracle.phrase_topk(tokenize_py(phrase), K))
 
 
+@pytest.mark.parametrize("k", [1, 3, 7, 40, 200])
+def test_phrase_topk_one_job_keeps_segment_ties(k, spark, tmp_path_factory):
+    """A phrase top-k runs one Spark job, and each segment's candidate cut
+    keeps every doc tied with its k-th: 120 docs over 4 segments where
+    most phrase matches share one score, so the answer is decided by doc id
+    across segments."""
+    from ee_outliers_spark.index.query import phrase_topk_wand
+    from ee_outliers_spark.tokenizer import tokenize_py
+
+    texts = {}
+    for d in range(120):
+        if d % 11 == 0:
+            texts[d] = "red fox red fox runs"
+        elif d % 3:
+            texts[d] = "red fox jumps over it"
+        else:
+            texts[d] = "a grey wolf sleeps here"
+    docs = spark.createDataFrame(sorted(texts.items()),
+                                 "doc_id long, text string")
+    paths = build_segments(spark, docs, "doc_id", "text",
+                           str(tmp_path_factory.mktemp("phrase_ties")),
+                           num_segments=4, positions=True)
+    sc = spark.sparkContext
+    group = f"phrase-topk-{k}"
+    sc.setJobGroup(group, group)
+    try:
+        got = phrase_topk_wand(spark, paths, "red fox", k).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    _check(got, OracleIndex(texts).phrase_topk(tokenize_py("red fox"), k))
+
+
 def test_phrase_wand_requires_positions(spark, seg_paths):
     from ee_outliers_spark.index.query import phrase_topk_wand
 
