@@ -10,8 +10,9 @@ run_model``). Aggregators are comma-separated column lists.
 
 ``run_analyzer`` executes one spec against an events DataFrame and returns
 the outlier rows with rendered reason/summary columns; ``run_all`` executes
-every enabled spec and MERGEs results into an OutlierStore — one tick of the
-reference daemon (§3.1's perform_analysis, distributed).
+every enabled spec and merges all their outliers into an OutlierStore in one
+write — one tick of the reference daemon (§3.1's perform_analysis,
+distributed).
 """
 
 from __future__ import annotations
@@ -329,13 +330,20 @@ def run_all(
     stats: list | None = None,
     index=None,
 ) -> dict[str, int]:
-    """One daemon tick: run every enabled spec; MERGE into the OutlierStore.
-    Returns {model_name: n_new_outliers}. Pass ``stats=[]`` to collect
-    per-model run records for ``analysis_summary``; ``index`` routes every
-    spec's es_query_filter through the posting lists (see run_analyzer)."""
+    """One daemon tick: run every enabled spec and merge all their outliers
+    into the OutlierStore with ONE ``upsert``, as the reference sends bulk
+    updates. Returns {model_name: n_new_outliers} for every enabled spec (0
+    when it inserted nothing); without a store, each spec's outlier count.
+    Pass ``stats=[]`` to collect per-model run records for
+    ``analysis_summary``. A record's ``analysis_time_seconds`` is the
+    spec's own time: ``run_analyzer``, plus its count when there is no
+    store. The shared write runs every spec's plan and is attributed to no
+    model. ``index`` routes every spec's es_query_filter through the
+    posting lists (see run_analyzer)."""
+    import functools
     import time as _time
 
-    results = {}
+    results, seconds, staged = {}, [], []
     for spec in specs:
         if not spec.run_model:
             continue
@@ -343,7 +351,7 @@ def run_all(
         out = run_analyzer(df, spec, text_col=text_col, ts_col=ts_col,
                            history=history, key_col=key_col, index=index)
         if store is not None:
-            staged = out.select(
+            staged.append(out.select(
                 F.col(key_col).cast("string").alias("doc_key"),
                 "model_name", "model_type",
                 F.col("outlier_reason").alias("reason"),
@@ -356,18 +364,22 @@ def run_all(
                       if c in out.columns]
                 )).alias("observations"),
                 F.lit(detected_ts or dt.datetime(2024, 1, 1)).alias("detected_ts"),
-            )
-            results[spec.name] = store.upsert(staged)
+            ))
+            results[spec.name] = 0
         else:
             results[spec.name] = out.count()
-        if stats is not None:
-            stats.append({
-                "model_name": spec.name,
-                "model_type": spec.model_type,
-                "total_outliers": results[spec.name],
-                "analysis_time_seconds": _time.monotonic() - _t0,
-                "completed": True,
-            })
+        seconds.append((spec, _time.monotonic() - _t0))
+    if staged:
+        store.upsert(functools.reduce(DataFrame.unionByName, staged))
+        results.update(store.last_inserted)
+    if stats is not None:
+        stats.extend({
+            "model_name": spec.name,
+            "model_type": spec.model_type,
+            "total_outliers": results[spec.name],
+            "analysis_time_seconds": secs,
+            "completed": True,
+        } for spec, secs in seconds)
     return results
 
 

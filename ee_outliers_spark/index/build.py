@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import empty_frame
 from .codec import varbyte_encode, varbyte_encode_with_lengths
 
 BLOCK = 128
@@ -589,7 +590,7 @@ def run_segment_kernel(spark: SparkSession, paths: IndexPaths, stats: dict,
     if live is None:
         live = segment_dir_ids(paths)
     if not live:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     root, arrow_schema = paths.segments, segment_arrow_schema()
 
     def segment_kernel(batches):

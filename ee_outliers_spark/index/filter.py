@@ -37,6 +37,7 @@ from ..queryparser import (
     regexp_token_body, resolve_analyzed, to_spark_predicate, wildcard_key,
     wildcard_token_body,
 )
+from ..session import empty_frame
 from ..tokenizer import tokenize_py
 from .build import IndexPaths, SegmentRead, load_stats, run_segment_kernel
 from .codec import varbyte_decode
@@ -281,7 +282,7 @@ def _segment_sets(spark: SparkSession, paths: IndexPaths, stats: dict, node,
     schema = {"ids": "doc_id long", "count": "cnt long",
               "markers": f"doc_id long, {MARKER_COL} array<int>"}[out]
     if read is None:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     ph_tokens = {t for kind, _, n in atoms if kind == "phrase"
                  for t in _atom_tokens(n)}
     nothing = np.empty(0, dtype=np.int64)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queryparser import parse_query_string, resolve_analyzed
+from ..session import empty_frame
 from ..tokenizer import tokenize_py
 from .build import (
     B, K1, IndexPaths, SegmentRead, block_upper_bound, load_stats,
@@ -495,7 +496,7 @@ def phrase_topk_wand(
         return _bm25_topk(spark, paths, stats, toks, k)
     spec = _phrase_kernel(paths, stats, toks)
     if spec is None:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(spark, TOPK_SCHEMA)
     read, hits = spec
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
 
@@ -517,7 +518,7 @@ def phrase_topk_wand(
         spark, paths, stats, read, candidates,
         PHRASE_HITS_SCHEMA + ", seg_hits long").toPandas()
     if rows.empty:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(spark, TOPK_SCHEMA)
     idf = _idf(n_docs, int(rows["seg_hits"].sum()))
     doc = rows["doc_id"].to_numpy()
     scores = idf * _impact_np(rows["tf"].to_numpy(), rows["dl"].to_numpy(),
@@ -553,7 +554,7 @@ def querystring_topk(
                             stats.get("analyzed_fields"))
     term_w, phrase_w = _query_weights(spark, paths, stats, node)
     if not term_w and not phrase_w:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(spark, TOPK_SCHEMA)
     return _top(_score_segments(spark, paths, stats, term_w, phrase_w, k), k)
 
 
@@ -1201,5 +1202,5 @@ def _bm25_topk(spark: SparkSession, paths: IndexPaths, stats: dict,
     term_w = _term_weights(paths, stats, dict.fromkeys(terms, 1.0))
     if not term_w or (mode == "and" and len(term_w) < len(terms)):
         # conjunction with a zero-df term matches nothing (oracle semantics)
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return empty_frame(spark, TOPK_SCHEMA)
     return _top(_score_segments(spark, paths, stats, term_w, [], k, mode), k)

@@ -82,27 +82,13 @@ def retract_fixpoint(
 
     work = df
     wl = None
-    prev_cached = None
     for _ in range(max_iters):
-        res = one_pass(work).cache()
+        res = materialize(one_pass(work))
         if wl is None:
             wl = whitelist_predicate(
                 value_set_col(res, df.columns), literals, regexps)
-        n_retract = res.where(F.col("is_outlier") & wl).count()
-        if prev_cached is not None:
-            # the new iteration is materialized past its parent — drop the
-            # parent's cache so the loop never pins more than two copies
-            prev_cached.unpersist()
-        if n_retract == 0:
-            # materialize the answer, then release the cache — a long-lived
-            # session must not keep one pinned window per analyzer call
-            out = materialize(res.where("is_outlier"))
-            res.unpersist()
-            return out
+        if res.where(F.col("is_outlier") & wl).count() == 0:
+            return res.where("is_outlier")
         # drop whitelisted flagged docs from the window and recompute
         work = res.where(~(F.col("is_outlier") & wl)).select(*df.columns)
-        prev_cached = res
-    out = materialize(one_pass(work).where("is_outlier"))
-    if prev_cached is not None:
-        prev_cached.unpersist()
-    return out
+    return materialize(one_pass(work).where("is_outlier"))

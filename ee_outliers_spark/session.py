@@ -55,6 +55,21 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty frame of the DDL ``schema`` that collects without a Spark
+    job.
+
+    ``createDataFrame([], schema)`` parallelizes an empty list, so every
+    collect of it runs a Python job with one task per core (about 0.4 s on
+    4 cores); an empty pandas frame takes the same path. An empty pyarrow
+    table becomes a local relation, which the driver answers itself."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    return spark.createDataFrame(to_arrow_schema(struct).empty_table(), struct)
+
+
 def _default_driver_mem() -> str:
     """The driver heap when ``SPARK_DRIVER_MEM`` is unset: 20g, capped at
     a quarter of physical memory (``MemTotal`` in /proc/meminfo), so a
@@ -73,6 +88,9 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """The engine's session, with the package's py-files zip registered
+    (``ensure_py_files``), so Python workers import ``ee_outliers_spark``
+    whatever the driver's cwd."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -136,4 +154,8 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", _java_opts)
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    from . import ensure_py_files
+
+    spark = builder.getOrCreate()
+    ensure_py_files(spark)
+    return spark

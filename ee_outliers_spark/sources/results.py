@@ -26,9 +26,12 @@ that downstream filters use (e.g. simplequery's must_not on
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import empty_frame, materialize
 
 RESULTS_SCHEMA = (
     "doc_key string, model_name string, model_type string, "
@@ -40,19 +43,25 @@ class OutlierStore:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
+        # {model_name: rows inserted} of the last upsert; a model with no
+        # new row is absent
+        self.last_inserted: dict[str, int] = {}
 
     def _exists(self) -> bool:
         return os.path.exists(self.path)
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], RESULTS_SCHEMA)
+            return empty_frame(self.spark, RESULTS_SCHEMA)
         return self.spark.read.schema(RESULTS_SCHEMA).parquet(self.path)
 
     def upsert(self, new: DataFrame) -> int:
         """Idempotent merge: insert rows whose (doc_key, model_name) is not
         already present (ref: save_outlier dedups per doc+model via the
-        must_not exclusion upstream). Returns #inserted."""
+        must_not exclusion upstream). ``new`` may hold any number of
+        models' rows; they go in as one write, the bulk request of the
+        reference. Sets ``last_inserted`` to the per-model counts and
+        returns their sum."""
         new = new.select(
             F.col("doc_key").cast("string"),
             "model_name", "model_type", "reason", "summary", "observations",
@@ -61,43 +70,40 @@ class OutlierStore:
         if self._exists():
             existing = self.read().select("doc_key", "model_name")
             new = new.join(existing, ["doc_key", "model_name"], "left_anti")
-        # persist so the count and the append share ONE anti-join computation
-        new = new.persist()
-        n = new.count()
-        if n:
+        # the per-model count and the append read ONE computation of the
+        # anti-join; unlike a persisted frame, a materialized one keeps
+        # AQE's coalescing, so a small batch is written as one file
+        new = materialize(new)
+        self.last_inserted = {
+            r["model_name"]: r["count"]
+            for r in new.groupBy("model_name").count().collect()}
+        if self.last_inserted:
             new.write.mode("append").parquet(self.path)
-        new.unpersist()
-        return n
+        return sum(self.last_inserted.values())
+
+    def _rewrite(self, kept: DataFrame) -> None:
+        """Replace the store with ``kept``, computed in full BEFORE the
+        source files are deleted."""
+        kept = materialize(kept)
+        kept.write.mode("overwrite").parquet(self.path + ".tmp")
+        shutil.rmtree(self.path)
+        os.rename(self.path + ".tmp", self.path)
 
     def wipe_model(self, model_name: str) -> None:
         """ref es.py:358-386: remove a model's outliers (scripted
         update_by_query) — filtered rewrite here."""
         if not self._exists():
             return
-        kept = self.read().where(F.col("model_name") != model_name).cache()
-        kept.count()  # materialize fully BEFORE deleting the source files
-        kept.write.mode("overwrite").parquet(self.path + ".tmp")
-        import shutil
-
-        shutil.rmtree(self.path)
-        os.rename(self.path + ".tmp", self.path)
-        kept.unpersist()
+        self._rewrite(self.read().where(F.col("model_name") != model_name))
 
     def housekeep_whitelist(self, whitelisted_keys: DataFrame) -> None:
         """ref housekeeping.py:22-79: drop now-whitelisted outliers."""
         if not self._exists():
             return
-        kept = self.read().join(
+        self._rewrite(self.read().join(
             whitelisted_keys.select(F.col("doc_key").cast("string")),
             "doc_key", "left_anti",
-        ).cache()
-        kept.count()  # materialize fully BEFORE deleting the source files
-        kept.write.mode("overwrite").parquet(self.path + ".tmp")
-        import shutil
-
-        shutil.rmtree(self.path)
-        os.rename(self.path + ".tmp", self.path)
-        kept.unpersist()
+        ))
 
 
 def with_outlier_tags(events: DataFrame, outliers: DataFrame,

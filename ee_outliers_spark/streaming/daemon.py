@@ -19,9 +19,10 @@ streaming). The Spark-native equivalents:
                             daily" (ST1/ST2: incremental snapshot reads).
 
 A reference-style tick has no function of its own: it is
-``config.run_all`` over the rolling window, then ``OutlierStore.upsert``
-MERGEs the outliers into the results store (housekeeping's whitelist
-re-application is OutlierStore.housekeep_whitelist, ST4).
+``config.run_all`` over the rolling window, which plans every use case and
+merges all their outliers into the results store with one
+``OutlierStore.upsert`` (housekeeping's whitelist re-application is
+OutlierStore.housekeep_whitelist, ST4).
 """
 
 from __future__ import annotations

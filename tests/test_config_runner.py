@@ -2,6 +2,8 @@
 run_all tick into an OutlierStore."""
 
 import datetime as dt
+import os
+import re
 import textwrap
 
 from ee_outliers_spark.config import (
@@ -265,6 +267,41 @@ def test_run_all_into_store(spark, tmp_path):
     assert sum(counts2.values()) == 0
     df = store.read()
     assert df.where("model_name = 'simplequery_powershell_hidden'").count() == 1
+
+
+def _write_jobs(path) -> set:
+    """The write-job UUIDs named in a parquet table's part files."""
+    return {m.group(1) for f in os.listdir(path)
+            if (m := re.match(r"part-\d+-([0-9a-f-]{36})-c\d+", f))}
+
+
+def test_run_all_one_write_per_tick(spark, tmp_path):
+    """run_all merges every spec's outliers with ONE write: the store holds
+    the part files of a single write job, and its counts and rows equal a
+    store filled by one run_analyzer + upsert per spec. A spec without
+    outliers reports 0, and a rerun reports 0 for every model."""
+    p = tmp_path / "cases.conf"
+    p.write_text(textwrap.dedent(INI))
+    specs = load_use_cases(str(p)) + [AnalyzerSpec(
+        name="simplequery_nothing", model_type="simplequery",
+        es_query_filter="nosuchword")]
+    enabled = [s.name for s in specs if s.run_model]
+    store = OutlierStore(spark, str(tmp_path / "merged.parquet"))
+    counts = run_all(_events(spark), specs, store=store)
+    assert list(counts) == enabled
+    assert counts["simplequery_nothing"] == 0
+    assert len(_write_jobs(store.path)) == 1
+
+    per_spec = OutlierStore(spark, str(tmp_path / "per_spec.parquet"))
+    want = {}
+    for spec in specs:
+        want.update(run_all(_events(spark), [spec], store=per_spec))
+    assert counts == want
+    assert sorted(store.read().collect()) == sorted(per_spec.read().collect())
+
+    assert run_all(_events(spark), specs, store=store) == dict.fromkeys(
+        enabled, 0)
+    assert len(_write_jobs(store.path)) == 1
 
 
 def test_ini_runner_uses_index(spark, documents, tmp_path):

@@ -119,6 +119,42 @@ def test_phrase_wand_empty_phrase_matches_nothing(spark, pos_paths):
     assert phrase_topk_wand(spark, pos_paths, "--- !!", K).count() == 0
 
 
+def test_empty_answers_collect_without_a_job(spark, pos_paths, oracle,
+                                             tmp_path):
+    """An empty answer is a local relation: collecting it runs no Spark job
+    (a parallelized empty list ran one Python task per core)."""
+    from ee_outliers_spark.index.query import (
+        phrase_topk_wand, querystring_topk,
+    )
+    from ee_outliers_spark.sources.results import OutlierStore
+
+    adjacent = {pair for toks in oracle.toks.values()
+                for pair in zip(toks, toks[1:])}
+    vocab = sorted(oracle.tf)[:50]
+    a, b = next((a, b) for a in vocab for b in vocab
+                if (a, b) not in adjacent)
+    assert oracle.phrase_topk([a, b], K) == []
+    answers = {
+        "and-zero-df": bm25_topk_wand(spark, pos_paths, ["the", "nosuchterm"],
+                                      K, "and"),
+        "phrase-no-hits": phrase_topk_wand(spark, pos_paths, f"{a} {b}", K),
+        "qs-no-known-term": querystring_topk(spark, pos_paths,
+                                             "nosuchterm OR zzqqxx", K),
+        "missing-store": OutlierStore(spark, str(tmp_path / "none")).read(),
+    }
+    sc = spark.sparkContext
+    for what, df in answers.items():
+        group = f"empty-answer-{what}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rows == [], what
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], what
+
+
 def test_phrase_wand_survives_append_and_tier_merge(
         spark, documents, tmp_path_factory, oracle):
     """Positions flow through incremental appends and LSM tier merges:

@@ -2,6 +2,7 @@
 
 import datetime as dt
 import math
+import os
 
 from ee_outliers_spark.index.build import build_segments
 from ee_outliers_spark.index.merge import merge_segments
@@ -55,6 +56,37 @@ def test_outlier_store_merge(spark, tmp_path_factory):
     assert store.read().count() == 1
     store.housekeep_whitelist(spark.createDataFrame([("d2",)], "doc_key string"))
     assert store.read().count() == 0
+
+
+def test_upsert_writes_one_file(spark, tmp_path):
+    """A small upsert is one materialized frame that AQE coalesces: each
+    call appends one part file, and ``last_inserted`` holds its per-model
+    counts."""
+    ts = dt.datetime(2024, 1, 2)
+    schema = ("doc_key string, model_name string, model_type string, "
+              "reason string, summary string, observations string, "
+              "detected_ts timestamp")
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [(f"d{i}", f"m{i % 3}", "terms", "r", "s", "{}", ts)
+             for i in range(lo, hi)], schema)
+
+    path = str(tmp_path / "outliers.parquet")
+    store = OutlierStore(spark, path)
+
+    def parts():
+        return [f for f in os.listdir(path) if f.startswith("part-")]
+
+    assert store.upsert(batch(0, 40)) == 40
+    assert len(parts()) == 1
+    assert store.last_inserted == {"m0": 14, "m1": 13, "m2": 13}
+    assert store.upsert(batch(20, 60)) == 20
+    assert len(parts()) == 2
+    assert store.last_inserted == {"m0": 6, "m1": 7, "m2": 7}
+    assert store.upsert(batch(0, 60)) == 0
+    assert store.last_inserted == {}
+    assert len(parts()) == 2
 
 
 def test_merge_tier_touches_only_the_tier(spark, documents, tmp_path):

@@ -170,3 +170,12 @@ def test_py_files_zip_is_content_addressed(tmp_path):
     assert sorted(os.listdir(out)) == sorted(
         ["ee_outliers_spark_pyfiles.zip", os.path.basename(za),
          os.path.basename(zb)])
+
+
+def test_get_spark_registers_py_files(spark):
+    """A ``get_spark`` session ships the package zip to its workers, so a
+    driver started from any cwd runs the engine's Python kernels."""
+    sc = spark.sparkContext
+    assert sc._ee_outliers_pyfiles
+    assert any(os.path.basename(p).startswith("ee_outliers_spark_pyfiles-")
+               for p in sc._python_includes)
