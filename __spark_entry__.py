@@ -15,7 +15,7 @@ from ee_outliers_spark import entrypoints as _ep
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: BM25 top-20 conjunctive query via the DataFrame executor."""
+    """Flagship: BM25 top-20 conjunctive query via ``bm25_topk_wand``."""
     return _ep.flagship(spark, "/root/testdata/sf0.001")
 
 

@@ -12,13 +12,17 @@ run_model``). Aggregators are comma-separated column lists.
 the outlier rows with rendered reason/summary columns; ``run_all`` executes
 every enabled spec and merges all their outliers into an OutlierStore in one
 write — one tick of the reference daemon (§3.1's perform_analysis,
-distributed).
+distributed). ``run_all`` plans the tick once, as the reference's cluster
+shares the work of its use cases' queries: one filter pass over every
+spec's es_query_filter builds one shared, materialized window, and the
+analyzers are then planned concurrently on their slices of it.
 """
 
 from __future__ import annotations
 
 import configparser
 import datetime as dt
+import functools
 import glob as _glob
 from dataclasses import dataclass, field
 
@@ -27,10 +31,12 @@ from pyspark.sql import functions as F
 
 from .functions.render import render_template, wrap_summary
 from .operators.metrics_analyzer import metrics_outliers
-from .operators.simplequery import simplequery_outliers
 from .operators.sudden import sudden_appearance
 from .operators.terms import terms_outliers
-from .queryparser import parse_query_string, to_spark_predicate
+from .queryparser import (
+    MatchAll, Or, parse_query_string, resolve_analyzed, to_spark_predicate,
+)
+from .session import materialize
 
 ANALYZER_PREFIXES = ("simplequery", "terms", "metrics", "sudden_appearance",
                      "word2vec")
@@ -219,6 +225,11 @@ def _retract_whitelisted(out: DataFrame, source_cols, spec: AnalyzerSpec) -> Dat
     return out.where(~wl)
 
 
+#: Helper column of ``run_all``'s shared window: the indices, in enabled-spec
+#: order, of the use cases whose filter a row matches.
+WINDOW_SPECS_COL = "__run_all_specs"
+
+
 def run_analyzer(
     df: DataFrame,
     spec: AnalyzerSpec,
@@ -234,9 +245,16 @@ def run_analyzer(
     es_query_filter compile through the posting lists (index/filter.py) —
     text atoms resolve in the per-segment posting-list kernel instead of
     per-row regex scans, exactly like the gated filter-context path. Without it the
-    runner falls back to the regex compilation (small corpora / no index)."""
+    runner falls back to the regex compilation (small corpora / no index).
+
+    A frame that carries ``WINDOW_SPECS_COL`` is one spec's slice of
+    ``run_all``'s shared window, whose filter and time range were applied
+    when the window was built: it goes straight to the model step."""
+    if WINDOW_SPECS_COL in df.columns:
+        return _run_model(df.drop(WINDOW_SPECS_COL), spec, text_col, ts_col,
+                          history, key_col)
     work = df
-    if spec.es_query_filter and spec.model_type != "simplequery":
+    if spec.es_query_filter:
         node = parse_query_string(spec.es_query_filter)
         if index is not None:
             from .index.filter import indexed_filter
@@ -247,13 +265,24 @@ def run_analyzer(
             work = work.where(to_spark_predicate(node, text_col, df.columns))
     if ts_col and history:
         work = work.where(F.col(ts_col).between(*history))
+    return _run_model(work, spec, text_col, ts_col, history, key_col)
 
+
+def _run_model(
+    work: DataFrame,
+    spec: AnalyzerSpec,
+    text_col: str,
+    ts_col: str | None,
+    history: tuple[dt.datetime, dt.datetime] | None,
+    key_col: str,
+) -> DataFrame:
+    """The model step of ``run_analyzer``: the spec's analyzer over the
+    rows its filter and time range selected (``work``), with the rendered
+    outlier columns. A simplequery spec's outliers are those rows."""
     wl = dict(whitelist_literals=spec.whitelist_literals or None,
               whitelist_regexps=spec.whitelist_regexps or None)
     if spec.model_type == "simplequery":
-        out = simplequery_outliers(work, spec.es_query_filter or "*",
-                                   text_col=text_col, key_col=key_col,
-                                   index=index)
+        out = work
         if spec.highlight_match and spec.es_query_filter:
             # ref highlight_match (es.py:567-587 + simplequery.py:83-93):
             # <value>-wrapped fragment + the extracted matched values
@@ -268,7 +297,7 @@ def run_analyzer(
                 "matched_values",
                 F.concat_ws(",", extract_matched_values("matched_fields")),
             )
-        out = _retract_whitelisted(out, df.columns, spec)
+        out = _retract_whitelisted(out, work.columns, spec)
     elif spec.model_type == "terms":
         out = terms_outliers(
             work, spec.aggregator, spec.target, spec.target_count_method,
@@ -287,7 +316,7 @@ def run_analyzer(
             work, spec.aggregator, spec.target, ts_col, start, end,
             spec.sliding_window_size, spec.sliding_window_step_size,
         )
-        out = _retract_whitelisted(out, df.columns, spec)
+        out = _retract_whitelisted(out, work.columns, spec)
     elif spec.model_type == "word2vec":
         from .operators.word2vec import word2vec_outliers
 
@@ -318,6 +347,51 @@ def run_analyzer(
     )
 
 
+def _shared_window(
+    df: DataFrame,
+    specs: list[AnalyzerSpec],
+    key_col: str,
+    text_col: str,
+    ts_col: str | None,
+    history: tuple[dt.datetime, dt.datetime] | None,
+    index,
+) -> DataFrame:
+    """The rows of ``df`` in the time range that match at least one spec's
+    es_query_filter (a spec without one matches every row), each with
+    ``WINDOW_SPECS_COL``: the indices of the specs it matches — an array,
+    so the number of specs is unbounded. Materialized once.
+
+    With an ``index``, every filter is evaluated in ONE marker-kernel pass
+    over the Or of all filters, parsed against one stats snapshot, and
+    each filter compiles to a predicate over the shared markers
+    (``filter.marker_join``); without one, each compiles to its regex
+    predicate. Either way the events are scanned once."""
+    nodes = [parse_query_string(s.es_query_filter) if s.es_query_filter
+             else MatchAll() for s in specs]
+    columns = df.columns
+    window = df
+    if ts_col and history:
+        window = window.where(F.col(ts_col).between(*history))
+    markers: dict = {}
+    if index is not None:
+        from .index.build import load_stats
+        from .index.filter import MARKER_COL, marker_join
+
+        stats = load_stats(index)
+        nodes = [resolve_analyzed(n, stats.get("analyzed_fields"))
+                 for n in nodes]
+        window, markers = marker_join(df.sparkSession, index, stats, window,
+                                      key_col, Or(nodes))
+    hits = F.array(*[
+        F.when(to_spark_predicate(n, text_col, columns, **markers), F.lit(i))
+        for i, n in enumerate(nodes)])
+    window = window.withColumn(
+        WINDOW_SPECS_COL, F.filter(hits, lambda x: x.isNotNull()))
+    if index is not None:
+        window = window.drop(MARKER_COL)
+    return materialize(window.where(F.size(WINDOW_SPECS_COL) > 0))
+
+
 def run_all(
     df: DataFrame,
     specs: list[AnalyzerSpec],
@@ -334,43 +408,63 @@ def run_all(
     into the OutlierStore with ONE ``upsert``, as the reference sends bulk
     updates. Returns {model_name: n_new_outliers} for every enabled spec (0
     when it inserted nothing); without a store, each spec's outlier count.
-    Pass ``stats=[]`` to collect per-model run records for
+
+    The tick is planned once. One filter pass builds one shared window of
+    the events that match any spec (``_shared_window``: with an ``index``,
+    every es_query_filter is evaluated in one posting-list kernel job), and
+    it is materialized once. Each spec's ``run_analyzer`` then reads its
+    slice of that window; the specs are planned concurrently, on a driver
+    thread pool of min(enabled specs, default parallelism) threads whose
+    jobs carry the caller's job group and local properties. The staged
+    outliers are merged in spec order, and an analyzer's exception is
+    raised from here.
+
+    Pass ``stats=[]`` to collect per-model run records, in spec order, for
     ``analysis_summary``. A record's ``analysis_time_seconds`` is the
     spec's own time: ``run_analyzer``, plus its count when there is no
-    store. The shared write runs every spec's plan and is attributed to no
-    model. ``index`` routes every spec's es_query_filter through the
-    posting lists (see run_analyzer)."""
-    import functools
+    store. The specs are planned concurrently, so these times overlap; the
+    shared window and the shared write are attributed to no model."""
     import time as _time
+    from concurrent.futures import ThreadPoolExecutor
 
-    results, seconds, staged = {}, [], []
-    for spec in specs:
-        if not spec.run_model:
-            continue
-        _t0 = _time.monotonic()
-        out = run_analyzer(df, spec, text_col=text_col, ts_col=ts_col,
-                           history=history, key_col=key_col, index=index)
+    from pyspark import inheritable_thread_target
+
+    enabled = [s for s in specs if s.run_model]
+    if not enabled:
+        return {}
+    window = _shared_window(df, enabled, key_col, text_col, ts_col, history,
+                            index)
+
+    def plan(i: int, spec: AnalyzerSpec) -> tuple[DataFrame, int, float]:
+        t0 = _time.monotonic()
+        out = run_analyzer(
+            window.where(F.array_contains(WINDOW_SPECS_COL, i)), spec,
+            text_col=text_col, ts_col=ts_col, history=history,
+            key_col=key_col)
         if store is not None:
-            staged.append(out.select(
-                F.col(key_col).cast("string").alias("doc_key"),
-                "model_name", "model_type",
-                F.col("outlier_reason").alias("reason"),
-                F.col("outlier_summary").alias("summary"),
-                F.to_json(F.struct(
-                    *[c for c in ("aggregator", "target", "term_count",
-                                  "decision_frontier", "metric_value",
-                                  "non_outlier_values_sample", "observation",
-                                  "score")
-                      if c in out.columns]
-                )).alias("observations"),
-                F.lit(detected_ts or dt.datetime(2024, 1, 1)).alias("detected_ts"),
-            ))
-            results[spec.name] = 0
+            out, n = _staged(out, key_col, detected_ts), 0
         else:
-            results[spec.name] = out.count()
-        seconds.append((spec, _time.monotonic() - _t0))
-    if staged:
-        store.upsert(functools.reduce(DataFrame.unionByName, staged))
+            n = out.count()
+        return out, n, _time.monotonic() - t0
+
+    # wrapped here, in the caller's thread: each task gets its own copy of
+    # the local properties (job group, scheduler pool) and tags the caller
+    # has set — a shared copy would let one thread's SQL execution id leak
+    # into another's jobs
+    spark = df.sparkSession
+    tasks = [inheritable_thread_target(spark)(functools.partial(plan, i, spec))
+             for i, spec in enumerate(enabled)]
+    cores = spark.sparkContext.defaultParallelism
+    with ThreadPoolExecutor(max_workers=min(len(enabled), cores)) as pool:
+        futures = [pool.submit(task) for task in tasks]
+    # every spec is planned (or failed) here; the first failure in spec
+    # order is raised
+    planned = [f.result() for f in futures]
+
+    results = {spec.name: n for spec, (_, n, _) in zip(enabled, planned)}
+    if store is not None:
+        store.upsert(functools.reduce(DataFrame.unionByName,
+                                      [out for out, _, _ in planned]))
         results.update(store.last_inserted)
     if stats is not None:
         stats.extend({
@@ -379,8 +473,27 @@ def run_all(
             "total_outliers": results[spec.name],
             "analysis_time_seconds": secs,
             "completed": True,
-        } for spec, secs in seconds)
+        } for spec, (_, _, secs) in zip(enabled, planned))
     return results
+
+
+def _staged(out: DataFrame, key_col: str,
+            detected_ts: dt.datetime | None) -> DataFrame:
+    """One spec's outlier rows in the ``OutlierStore`` upsert columns."""
+    return out.select(
+        F.col(key_col).cast("string").alias("doc_key"),
+        "model_name", "model_type",
+        F.col("outlier_reason").alias("reason"),
+        F.col("outlier_summary").alias("summary"),
+        F.to_json(F.struct(
+            *[c for c in ("aggregator", "target", "term_count",
+                          "decision_frontier", "metric_value",
+                          "non_outlier_values_sample", "observation",
+                          "score")
+              if c in out.columns]
+        )).alias("observations"),
+        F.lit(detected_ts or dt.datetime(2024, 1, 1)).alias("detected_ts"),
+    )
 
 
 def run_daemon(

@@ -547,6 +547,13 @@ def commit_stats(paths: IndexPaths, stats: dict) -> None:
     os.replace(tmp, paths.stats)
 
 
+def live_segment_ids(paths: IndexPaths, stats: dict) -> list[int]:
+    """The live seg_ids of commit ``stats``; a commit from before live
+    tracking counts every segment directory."""
+    live = stats.get("live_segments")
+    return segment_dir_ids(paths) if live is None else list(live)
+
+
 @dataclass(frozen=True)
 class SegmentRead:
     """What a query kernel reads of each live segment: the rows whose term
@@ -586,9 +593,7 @@ def run_segment_kernel(spark: SparkSession, paths: IndexPaths, stats: dict,
     job. A live segment without a directory (a build whose modulo left it
     empty) reads as empty; dead directories are never opened. A commit
     from before live tracking reads every segment directory."""
-    live = stats.get("live_segments")
-    if live is None:
-        live = segment_dir_ids(paths)
+    live = live_segment_ids(paths, stats)
     if not live:
         return empty_frame(spark, schema)
     root, arrow_schema = paths.segments, segment_arrow_schema()

@@ -506,6 +506,22 @@ def _indexed_filter(spark: SparkSession, paths: IndexPaths, stats: dict,
         return docs.join(ids, docs[doc_col] == F.col("__mi_doc_id"),
                          "left_semi")
 
+    joined, markers = marker_join(spark, paths, stats, docs, doc_col, node)
+    return joined.where(to_spark_predicate(
+        node, text_col, columns, **markers)).drop(MARKER_COL)
+
+
+def marker_join(spark: SparkSession, paths: IndexPaths, stats: dict,
+                docs: DataFrame, doc_col: str, node
+                ) -> tuple[DataFrame, dict]:
+    """``docs`` joined ONCE with the marker kernel's output for the resolved
+    AST ``node`` on commit ``stats`` — inner when ``required_atoms_union``
+    guarantees a text atom, left otherwise (no markers = no text atom
+    matched) — plus the ``to_spark_predicate`` marker keywords that test
+    each text atom as ``array_contains(MARKER_COL, i)``. Any sub-AST of
+    ``node`` compiles against the same markers, so one join serves every
+    boolean whose atoms ``node`` covers (``config.run_all`` passes the Or
+    of every use case's filter)."""
     guard = required_atoms_union(node)
     marks = _segment_sets(spark, paths, stats, node, "markers", guard)
     joined = docs.join(
@@ -519,7 +535,6 @@ def _indexed_filter(spark: SparkSession, paths: IndexPaths, stats: dict,
     for i, (kind, key, _) in enumerate(
             _text_atoms(node, bool(stats.get("positions")))):
         markers[kind][key] = F.array_contains(F.col(MARKER_COL), i)
-    return joined.where(to_spark_predicate(
-        node, text_col, columns, term_markers=markers["term"],
-        phrase_markers=markers["phrase"], pattern_markers=markers["pat"],
-    )).drop(MARKER_COL)
+    return joined, {"term_markers": markers["term"],
+                    "phrase_markers": markers["phrase"],
+                    "pattern_markers": markers["pat"]}

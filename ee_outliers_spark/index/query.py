@@ -45,8 +45,8 @@ from ..queryparser import parse_query_string, resolve_analyzed
 from ..session import empty_frame
 from ..tokenizer import tokenize_py
 from .build import (
-    B, K1, IndexPaths, SegmentRead, block_upper_bound, load_stats,
-    run_segment_kernel, termstats_files,
+    B, K1, IndexPaths, SegmentRead, block_upper_bound, live_segment_ids,
+    load_stats, run_segment_kernel, termstats_files,
 )
 from .codec import decode_position_stream, varbyte_decode
 
@@ -495,7 +495,9 @@ def phrase_topk_wand(
     if len(toks) == 1:
         return _bm25_topk(spark, paths, stats, toks, k)
     spec = _phrase_kernel(paths, stats, toks)
-    if spec is None:
+    # no live segment: answer without the kernel frame, whose toPandas
+    # would run a job even when it is empty
+    if spec is None or not live_segment_ids(paths, stats):
         return empty_frame(spark, TOPK_SCHEMA)
     read, hits = spec
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]

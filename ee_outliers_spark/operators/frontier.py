@@ -123,9 +123,10 @@ def flag_outliers(
     sensitivity (the whole-group semantics of terms.py:383-396)."""
     fr = frontier_df(df, groups, value, method, sensitivity, trigger_on)
     if groups:
-        # its row count picks the broadcast join: the rows cross no exchange
-        fr = materialize(fr)
-        if fr.count() <= BROADCAST_GROUP_ROWS:
+        # its row count, observed by the materializing job, picks the
+        # broadcast join: the rows cross no exchange
+        fr, n_groups = materialize(fr, count=True)
+        if n_groups <= BROADCAST_GROUP_ROWS:
             fr = F.broadcast(fr)
     # empty groups = one global frontier (ref terms across_aggregators)
     out = df.join(fr, groups, "left") if groups else df.crossJoin(F.broadcast(fr))

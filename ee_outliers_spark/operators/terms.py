@@ -15,11 +15,15 @@ survives as a HAVING filter.
 
 Whitelist-retract fixpoint (terms.py:138-157): whitelisted flagged docs are
 removed and the frontier recomputed until no flagged doc is whitelisted —
-a driver loop over a cached DataFrame (monotone shrinking ⇒ converges).
+a driver loop over materialized passes (monotone shrinking ⇒ converges).
 
 Scale: groupBy(aggregator, target) with map-side partial aggregation; the
 across variant's frontier input is aggregator-cardinality-sized. The doc→flag
-join is an equi-join on the group keys (AQE handles skewed aggregators).
+join is an equi-join on the group keys (AQE handles skewed aggregators). Each
+variant runs one eager action of its own: it materializes the flagged
+group-level frame, and the same job's observed row count decides whether
+that frame is broadcast back onto the rows (``session.materialize``); the
+within variant's frontier adds one more (``frontier.flag_outliers``).
 """
 
 from __future__ import annotations
@@ -158,14 +162,12 @@ def terms_within(
             F.count("*").alias("_nb")
         ).where(F.col("_nb") >= min_target_buckets).select("aggregator")
         counts = counts.join(ok, "aggregator", "left_semi")
-    # the group-sized counts are read twice by flag_outliers, and `flagged`
-    # by the samples and row joins
-    counts = materialize(counts)
-    flagged = materialize(flag_outliers(
+    # `flagged` is read by the samples and the row join; its row count
+    # comes from the materializing job
+    flagged, n_groups = materialize(flag_outliers(
         counts, ["aggregator"], "term_count",
         trigger_method, trigger_sensitivity, trigger_on,
-    ))
-    n_groups = flagged.count()  # already materialized — metadata-cheap
+    ), count=True)
     samples = _non_outlier_samples(flagged)
     flag_sel = flagged.select(
         "aggregator", "target", "term_count", "decision_frontier",
@@ -174,8 +176,9 @@ def terms_within(
     # the row-level result then streams through two broadcast joins with
     # ZERO row-side shuffles (vs two full sort-merge exchanges of the
     # corpus). Materialized frames carry no size stats, so the planner
-    # cannot make this call itself; the row-count guard keeps unbounded-
-    # cardinality aggregators on the sort-merge path.
+    # cannot make this call itself; the row count observed while
+    # materializing does, and keeps unbounded-cardinality aggregators on
+    # the sort-merge path.
     if n_groups <= BROADCAST_GROUP_ROWS:
         flag_sel = F.broadcast(flag_sel)
         samples = F.broadcast(samples)
@@ -205,15 +208,14 @@ def terms_across(
     counts = _cap_buckets(counts, max_num_aggregators, None,
                           "unique_target_count")
     # same shape as terms_within: broadcast back to rows when it fits
-    counts = materialize(counts)
-    flagged = materialize(flag_outliers(
+    flagged, n_groups = materialize(flag_outliers(
         counts, [], "unique_target_count",
         trigger_method, trigger_sensitivity, trigger_on,
-    ))
+    ), count=True)
     flag_sel = flagged.select(
         "aggregator", "unique_target_count", "decision_frontier",
         "is_outlier")
-    if flagged.count() <= BROADCAST_GROUP_ROWS:
+    if n_groups <= BROADCAST_GROUP_ROWS:
         flag_sel = F.broadcast(flag_sel)
     return base.join(
         flag_sel,

@@ -265,10 +265,28 @@ def _lex(s: str) -> list[tuple[str, str]]:
 
 # --- parser (recursive descent) -------------------------------------------------
 
+#: Deepest nesting of groups and NOTs a query_string may have. Every AST
+#: walker recurses once per level, so a bound here keeps them all inside
+#: Python's recursion limit.
+MAX_NESTING = 100
+
+
 class _Parser:
     def __init__(self, toks: list[tuple[str, str]]):
         self.toks = toks
         self.i = 0
+        self.depth = 0
+
+    def nest(self, parse):
+        """``parse()`` one nesting level deeper, or ValueError past
+        ``MAX_NESTING`` levels."""
+        if self.depth >= MAX_NESTING:
+            raise ValueError(
+                f"query_string nests deeper than {MAX_NESTING} levels")
+        self.depth += 1
+        node = parse()
+        self.depth -= 1
+        return node
 
     def peek(self):
         return self.toks[self.i] if self.i < len(self.toks) else (None, None)
@@ -332,7 +350,7 @@ class _Parser:
         kind, val = self.peek()
         if kind == "neg" or (kind == "word" and val.upper() == "NOT"):
             self.take()
-            return Not(self.unary())
+            return Not(self.nest(self.unary))
         node = self.atom()
         nk, nv = self.peek()
         if nk == "boost":
@@ -348,7 +366,7 @@ class _Parser:
     def atom(self):
         kind, val = self.take()
         if kind == "lparen":
-            node = self.or_expr()
+            node = self.nest(self.or_expr)
             k2, _ = self.take()
             if k2 != "rparen":
                 raise ValueError("unbalanced parentheses")
@@ -373,7 +391,7 @@ class _Parser:
                     # Lucene field grouping: `lang:(en OR de)` scopes every
                     # value atom in the group to the field
                     self.take()
-                    inner = self.or_expr()
+                    inner = self.nest(self.or_expr)
                     ck, _ = self.take()
                     if ck != "rparen":
                         raise ValueError(

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def spread_input(df: DataFrame) -> DataFrame:
@@ -39,7 +40,7 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
-def materialize(df: DataFrame) -> DataFrame:
+def materialize(df: DataFrame, count: bool = False):
     """Compute ``df`` now and return a frame that reads the computed rows —
     the one intra-query materialization policy for frames referenced more
     than once (self-join sides, count + join, iterative rounds):
@@ -51,8 +52,17 @@ def materialize(df: DataFrame) -> DataFrame:
       and Spark's ContextCleaner releases them after the returned DataFrame
       is garbage-collected;
     - blocks are unreplicated (``localCheckpoint``), so losing an executor
-      after this call fails the query that reads them."""
-    return df.localCheckpoint(eager=True)
+      after this call fails the query that reads them.
+
+    With ``count=True`` returns ``(frame, n_rows)``: the row count is an
+    observed metric of the same job (``DataFrame.observe``), so sizing a
+    frame costs no ``count()`` job of its own."""
+    if not count:
+        return df.localCheckpoint(eager=True)
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True)
+    return out, int(obs.get["n"])
 
 
 def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
@@ -126,6 +136,13 @@ def get_spark(
                 str(shuffle_partitions * 8))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Generated classes live in an LRU cache of 100 entries by default,
+        # and one config.run_all tick needs more than that, so every warm
+        # tick compiled them all again (measured: a second identical
+        # six-use-case run_all compiled 112 classes). 1024 entries hold a
+        # tick's and the query shapes' classes: a repeated run_all compiles
+        # none. The cache is a static conf, so it is sized at session start.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode = ONE JVM for driver+executors: size the heap for

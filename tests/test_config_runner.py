@@ -432,3 +432,199 @@ def test_ini_runner_multiterm_forms(spark, documents, tmp_path):
         to_spark_predicate(node, "text", documents.columns)
     ).select("doc_id").collect())
     assert got == want
+
+
+def _clear_job_group(sc) -> None:
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
+def _shapes_specs() -> list:
+    """One spec per filter shape run_all's shared window must reproduce."""
+    def terms(name, flt, agg, target, method, sens, **kw):
+        return AnalyzerSpec(
+            name=name, model_type="terms", es_query_filter=flt,
+            aggregator=[agg], target=target, target_count_method=method,
+            trigger_on="low", trigger_method="float",
+            trigger_sensitivity=sens, outlier_summary=f"{{{agg}}}", **kw)
+
+    return [
+        AnalyzerSpec(
+            name="metrics_no_filter", model_type="metrics",
+            aggregator=["lang"], target="text", metric="length",
+            trigger_on="high", trigger_method="stdev",
+            trigger_sensitivity=1.0),
+        terms("terms_field_range", "lang:(en OR de) AND n_chars:[100 TO 400]",
+              "lang", "source", "within_aggregator", 4),
+        terms("terms_pure_negation", "NOT batch", "source", "lang",
+              "across_aggregators", 5),
+        AnalyzerSpec(name="simplequery_phrase", model_type="simplequery",
+                     es_query_filter='"order key" AND customer',
+                     outlier_reason="phrase in {lang}"),
+        AnalyzerSpec(name="simplequery_highlight", model_type="simplequery",
+                     es_query_filter="window AND NOT vector",
+                     highlight_match=True),
+        terms("terms_whitelisted", "customer", "lang", "source",
+              "within_aggregator", 6, whitelist_literals=[["en"]],
+              whitelist_regexps=[["^src1$"]]),
+    ]
+
+
+def test_run_all_shared_window_equals_per_spec(spark, documents, tmp_path):
+    """run_all's one filter pass and shared window give the same per-model
+    counts and store rows as one run_analyzer + upsert per spec, for every
+    filter shape at once — no filter, field/range, a pure negation (no
+    guaranteed text atom), a phrase, a highlighted simplequery and a
+    whitelisted spec — with an index and without one."""
+    import datetime as dtm
+
+    from ee_outliers_spark.config import _staged
+    from ee_outliers_spark.index.build import build_segments
+    from pyspark.sql import functions as F
+
+    docs = documents.withColumn(
+        "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id") * 60))
+    history = (dtm.datetime(2023, 11, 14, 23), dtm.datetime(2023, 11, 15, 3))
+    idx = build_segments(spark, documents, "doc_id", "text",
+                         str(tmp_path / "idx"), num_segments=4,
+                         positions=True)
+    specs = _shapes_specs()
+    kw = dict(key_col="doc_id", text_col="text", ts_col="ts",
+              history=history)
+    for name, index in (("indexed", idx), ("regex", None)):
+        store = OutlierStore(spark, str(tmp_path / f"{name}_all"))
+        counts = run_all(docs, specs, store=store, index=index, **kw)
+
+        per_spec = OutlierStore(spark, str(tmp_path / f"{name}_per_spec"))
+        want = {}
+        for spec in specs:
+            per_spec.upsert(_staged(
+                run_analyzer(docs, spec, index=index, **kw), "doc_id", None))
+            want[spec.name] = per_spec.last_inserted.get(spec.name, 0)
+        assert counts == want, name
+        assert all(want.values()), want
+        assert (sorted(store.read().collect())
+                == sorted(per_spec.read().collect())), name
+
+
+def _segment_kernel_queries(spark, group: str) -> int:
+    """SQL executions with a job in job group ``group`` whose physical plan
+    runs a segment kernel (``build.run_segment_kernel``'s MapInPandas)."""
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    n = 0
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        it = e.jobs().keySet().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(int(it.next()))
+        if ids & jobs and "segment_kernel(" in e.physicalPlanDescription():
+            n += 1
+    return n
+
+
+def test_run_all_runs_one_segment_kernel_job(spark, documents, tmp_path):
+    """With an index, every spec's es_query_filter is evaluated in ONE
+    segment-kernel pass; the analyzers then read the materialized window,
+    so no other query of the tick runs a kernel. (When each spec filtered
+    on its own, the analyzers' sizing materializations and the shared
+    upsert each ran the kernels of their specs again.)"""
+    from ee_outliers_spark.index.build import build_segments
+
+    idx = build_segments(spark, documents, "doc_id", "text",
+                         str(tmp_path / "idx"), num_segments=4,
+                         positions=True)
+    specs = [s for s in _shapes_specs() if s.es_query_filter][:4]
+    store = OutlierStore(spark, str(tmp_path / "store"))
+    sc = spark.sparkContext
+    sc.setJobGroup("run-all-kernels", "run-all-kernels")
+    try:
+        counts = run_all(documents, specs, store=store, key_col="doc_id",
+                         text_col="text", index=idx)
+    finally:
+        _clear_job_group(sc)
+    assert sum(counts.values()) > 0
+    assert _segment_kernel_queries(spark, "run-all-kernels") == 1
+
+
+def test_run_all_threads_raise_and_inherit_job_group(spark, monkeypatch):
+    """The specs are planned on worker threads: their jobs carry the
+    caller's job group (no job of the call runs without one), and an
+    analyzer's exception is raised from run_all."""
+    import threading
+
+    from ee_outliers_spark import config
+
+    sc = spark.sparkContext
+    planners = set()
+    terms = config.terms_outliers
+
+    def spy(*args, **kwargs):
+        planners.add(threading.current_thread().name)
+        return terms(*args, **kwargs)
+
+    monkeypatch.setattr(config, "terms_outliers", spy)
+    specs = [
+        AnalyzerSpec(name=f"terms_{m}", model_type="terms", aggregator=["proc"],
+                     target="host", target_count_method=m, trigger_on="low",
+                     trigger_method="float", trigger_sensitivity=2)
+        for m in ("within_aggregator", "across_aggregators")]
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("run-all-threads", "run-all-threads")
+    try:
+        counts = run_all(_events(spark), specs)
+    finally:
+        _clear_job_group(sc)
+    assert counts == {"terms_within_aggregator": 2,
+                      "terms_across_aggregators": 4}
+    assert planners and threading.current_thread().name not in planners
+    assert sc.statusTracker().getJobIdsForGroup("run-all-threads")
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("analyzer failed")
+
+    monkeypatch.setattr(config, "terms_outliers", boom)
+    import pytest
+
+    with pytest.raises(RuntimeError, match="analyzer failed"):
+        run_all(_events(spark), specs)
+
+
+def test_materialize_counts_without_a_job(spark):
+    """materialize(df, count=True) returns the row count observed by the
+    materializing job: it runs exactly the jobs materialize(df) runs."""
+    from ee_outliers_spark.session import empty_frame, materialize
+
+    sc = spark.sparkContext
+    for what, df, want in (
+            ("rows", spark.range(50).where("id % 7 = 0"), 8),
+            ("empty", spark.range(50).where("id < 0"), 0),
+            ("local-empty", empty_frame(spark, "a long"), 0)):
+        jobs = {}
+        for count in (False, True):
+            group = f"materialize-{what}-{count}"
+            sc.setJobGroup(group, group)
+            try:
+                got = materialize(df, count=count)
+            finally:
+                _clear_job_group(sc)
+            jobs[count] = len(sc.statusTracker().getJobIdsForGroup(group))
+        frame, n = got
+        assert n == want and frame.count() == want, what
+        assert jobs[True] == jobs[False], what
+
+
+def test_repeated_run_all_compiles_no_class(spark, documents, tmp_path):
+    """The generated-class cache holds a whole tick (more classes than
+    Spark's default cache of 100): a second identical run_all compiles
+    nothing."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for i in range(2):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        run_all(documents, _shapes_specs(), key_col="doc_id", text_col="text",
+                store=OutlierStore(spark, str(tmp_path / f"store{i}")))
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1] == 0, compiles

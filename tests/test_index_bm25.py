@@ -154,6 +154,27 @@ def test_empty_answers_collect_without_a_job(spark, pos_paths, oracle,
         assert rows == [], what
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], what
 
+    # on an index with no live segment, a phrase whose tokens are in the
+    # dictionary answers without running the empty kernel frame: neither
+    # the call nor the collect runs a job
+    from ee_outliers_spark.index.build import commit_stats, load_stats
+
+    docs = spark.createDataFrame([(1, "red fox runs"), (2, "red fox")],
+                                 "doc_id long, text string")
+    dead = build_segments(spark, docs, "doc_id", "text",
+                          str(tmp_path / "no_live"), num_segments=2,
+                          positions=True)
+    commit_stats(dead, {**load_stats(dead), "live_segments": []})
+    group = "empty-answer-no-live-segment"
+    sc.setJobGroup(group, group)
+    try:
+        rows = phrase_topk_wand(spark, dead, "red fox", K).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows == []
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
 
 def test_phrase_wand_survives_append_and_tier_merge(
         spark, documents, tmp_path_factory, oracle):

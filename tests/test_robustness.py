@@ -92,3 +92,22 @@ def test_topk_duplicate_query_terms(spark, documents, tmp_path_factory):
     twice = [(r["doc_id"], round(r["score"], 9)) for r in
              bm25_topk_wand(spark, p, ["vector", "vector"], 10, "or").collect()]
     assert once == twice
+
+
+@pytest.mark.parametrize("q", [
+    "(" * 10_000 + "a" + ")" * 10_000,
+    "NOT " * 10_000 + "a",
+])
+def test_deep_query_strings_raise_valueerror(q):
+    """Nesting past the parser's bound fails with the documented ValueError,
+    not a RecursionError from the recursive descent."""
+    with pytest.raises(ValueError, match="nests deeper"):
+        parse_query_string(q)
+
+
+def test_moderate_nesting_parses_and_compiles():
+    cols = ["doc_id", "text"]
+    for q in ("(" * 50 + "a AND NOT b" + ")" * 50, "NOT " * 50 + "a"):
+        node = parse_query_string(q)
+        to_duckdb_sql(node, "text", cols)
+        to_python_predicate(node, "text", cols)
