@@ -8,8 +8,6 @@ DataFrame programs:
 
 - ``tokenizer``    — deterministic analyzer shared by index build, query side
                      and the pure-Python oracle (ref: app/helpers/utils.py:522-534).
-- ``corpus``       — Common-Crawl-style web_pages table synthesis + the
-                     byte-identical html→text extraction invariant.
 - ``index``        — SPIMI per-partition posting-list build, varbyte+delta-gap
                      compression, block-max metadata, LSM merge, BM25 top-k
                      (one per-segment block-max scoring kernel).

@@ -16,7 +16,9 @@ files at a parquet corpus:
 `--index` builds (resumably) / reuses a SPIMI positional index beside the
 data and routes every es_query_filter through the posting lists
 (config.run_analyzer(index=...)); without it filters compile to column
-predicates + regex, which is fine for small corpora only.
+predicates + regex, which is fine for small corpora only. Before the run,
+and before every daemon tick, the index takes in the table files it has not
+recorded (streaming.daemon.catch_up), so the table must be append-only.
 """
 
 from __future__ import annotations
@@ -67,14 +69,26 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     if spark is None:
         spark = get_spark("ee-outliers-spark", master=args.master)
     specs = load_use_cases(args.use_cases)
-    df = spark.read.parquet(os.path.join(args.data, f"{args.table}.parquet"))
+    table = os.path.join(args.data, f"{args.table}.parquet")
+    df = spark.read.parquet(table)
 
     index = None
     if args.index:
         from .index.build import build_segments
+        from .streaming.daemon import catch_up
 
         index = build_segments(spark, df, args.key_col, args.text_col,
                                args.index, positions=True)
+        catch_up(spark, df, index, args.key_col, args.text_col)
+
+    def read_table():
+        # each tick sees the table as it is now, and the index catches up
+        # with it first, so a filter never answers from missing rows
+        df = spark.read.parquet(table)
+        if index is not None:
+            catch_up(spark, df, index, args.key_col, args.text_col)
+        return df
+
     store = None
     if args.results:
         from .sources.results import OutlierStore
@@ -89,9 +103,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     stats: list[dict] = []
     if args.run_mode == "daemon":
         stats = run_daemon(
-            lambda: spark.read.parquet(
-                os.path.join(args.data, f"{args.table}.parquet")),
-            specs, schedule=args.schedule, max_ticks=args.max_ticks,
+            read_table, specs, schedule=args.schedule, max_ticks=args.max_ticks,
             store=store, key_col=args.key_col, text_col=args.text_col,
             ts_col=args.ts_col, history=history, index=index,
         )

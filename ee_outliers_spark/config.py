@@ -8,6 +8,13 @@ sudden_appearance_* | word2vec_*``); keys mirror the reference
 trigger_method, trigger_sensitivity, outlier_type/reason/summary,
 run_model``). Aggregators are comma-separated column lists.
 
+Reference keys this engine does not implement (a use-case file that sets
+them runs as if they were absent): ``use_derived_fields`` and the
+outliers.conf ``[derivedfields]`` grok patterns; word2vec's
+``trigger_focus`` and ``trigger_score`` (texts are scored by their center
+words); and the outliers.conf ``[general]`` settings, whose run-time
+choices are CLI arguments here (``python -m ee_outliers_spark``).
+
 ``run_analyzer`` executes one spec against an events DataFrame and returns
 the outlier rows with rendered reason/summary columns; ``run_all`` executes
 every enabled spec and merges all their outliers into an OutlierStore in one
@@ -73,67 +80,6 @@ class AnalyzerSpec:
     # [whitelist_literals]/[whitelist_regexps] sections to every model in it)
     whitelist_literals: list[list[str]] = field(default_factory=list)
     whitelist_regexps: list[list[str]] = field(default_factory=list)
-
-
-@dataclass
-class GeneralSettings:
-    """The reference outliers.conf ``[general]``/``[daemon]`` surface mapped
-    onto the Spark engine (ref /root/reference/defaults/outliers.conf:1-103
-    + app/helpers/settings.py): history window, save/wipe flags, run/test
-    switches, timestamp field, daemon cron schedule — plus an engine
-    ``[index]`` section for the knobs ES keeps in its own index settings
-    (segment count, positional postings, per-field analyzed columns, and
-    the LSM compaction policy consumed by
-    streaming.stream_index_updates)."""
-    history_window: dt.timedelta = dt.timedelta(days=7)
-    save_results: bool = True
-    wipe_all_existing_outliers: bool = False
-    wipe_all_whitelisted_outliers: bool = True
-    run_models: bool = True
-    test_models: bool = False
-    timestamp_field: str = "ts"
-    schedule: str = "0 0 * * *"
-    # [index]
-    num_segments: int | None = None  # None → auto (SPIMI memory budget)
-    positions: bool = True
-    analyzed_fields: list[str] = field(default_factory=list)
-    # None = "key absent from the conf" — callers keep their own argument
-    # instead of having a silent default win over an explicit parameter.
-    max_live_segments: int | None = None
-    merge_fanin: int | None = None
-
-
-def load_settings(path: str) -> GeneralSettings:
-    """Parse an outliers.conf-shaped INI into GeneralSettings (unknown keys
-    ignored, like the reference's ConfigParser use)."""
-    cp = configparser.ConfigParser(interpolation=None)
-    cp.read(path)
-    s = GeneralSettings()
-    if "general" in cp:
-        g = cp["general"]
-        s.history_window = dt.timedelta(
-            days=g.getint("history_window_days", fallback=7),
-            hours=g.getint("history_window_hours", fallback=0))
-        s.save_results = g.getboolean("es_save_results", fallback=True)
-        s.wipe_all_existing_outliers = g.getboolean(
-            "es_wipe_all_existing_outliers", fallback=False)
-        s.wipe_all_whitelisted_outliers = g.getboolean(
-            "es_wipe_all_whitelisted_outliers", fallback=True)
-        s.run_models = g.getboolean("run_models", fallback=True)
-        s.test_models = g.getboolean("test_models", fallback=False)
-        s.timestamp_field = g.get("timestamp_field", fallback="ts")
-    if "daemon" in cp:
-        s.schedule = cp["daemon"].get("schedule", fallback=s.schedule)
-    if "index" in cp:
-        i = cp["index"]
-        s.num_segments = i.getint("num_segments", fallback=0) or None
-        s.positions = i.getboolean("positions", fallback=True)
-        s.analyzed_fields = [x.strip() for x in
-                             i.get("analyzed_fields", fallback="").split(",")
-                             if x.strip()]
-        s.max_live_segments = i.getint("max_live_segments", fallback=None)
-        s.merge_fanin = i.getint("merge_fanin", fallback=None)
-    return s
 
 
 def parse_duration(s: str) -> dt.timedelta:

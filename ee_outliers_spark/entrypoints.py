@@ -474,20 +474,6 @@ _FUZZ_QS = "custoner~1 AND lang:e?"
 _SLOP_QS = '"order key"~2 AND NOT source:src7'
 
 
-def _filter_gate(qs: str):
-    def run(spark, sf_dir):
-        docs = load(spark, sf_dir, "documents")
-        paths = corpus_index(spark, sf_dir)
-        node = parse_query_string(qs)
-        return (
-            indexed_filter(spark, paths, docs, "doc_id", "text", node,
-                           DOC_COLS)
-            .select("doc_id")
-            .orderBy("doc_id")
-        )
-    return run
-
-
 # Lucene regexp atoms (round 4): `/pattern/` = token-level RegexpQuery,
 # `field:/pattern/` = keyword-value regexp; both resolve index-backed
 # (dictionary-predicate segment scan / plain column predicate). The first

@@ -5,16 +5,11 @@ utils.py:155-189 ``flatten_dict`` flattens nested dicts to dotted keys).
 Spark analogs: struct columns ARE the nesting, so
 - ``flatten_schema_paths`` enumerates every leaf as a dotted path (the
   universe the query parser resolves field names against), and
-- ``flatten_df`` projects every leaf to a dotted top-level column
-  (flatten_dict as a zero-shuffle projection — Catalyst prunes unused
-  branches out of the scan).
 - ``dig`` is the Python-oracle twin for row dicts / Row objects.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -29,13 +24,6 @@ def flatten_schema_paths(schema: StructType, prefix: str = "") -> list[str]:
         else:
             out.append(path)
     return out
-
-
-def flatten_df(df: DataFrame, sep: str = ".") -> DataFrame:
-    """Every leaf as a top-level column named by its dotted path (ref X9).
-    Pure projection: no shuffle, column pruning still reaches the scan."""
-    paths = flatten_schema_paths(df.schema)
-    return df.select(*[F.col(p).alias(p.replace(".", sep)) for p in paths])
 
 
 def dig(row, dotted: str, case_insensitive: bool = True):

@@ -1,5 +1,5 @@
-"""Outlier rendering: placeholder substitution, summary wrap, derived fields,
-asset extraction (SURVEY X12/X13/X14/X19).
+"""Outlier rendering: placeholder substitution and summary wrap (SURVEY
+X12/X13).
 
 - ``render_template``: '{field.name}' placeholders → column values
   (case-insensitive field resolution; arrays comma-joined; missing →
@@ -7,11 +7,6 @@ asset extraction (SURVEY X12/X13/X14/X19).
   analyzer.py:158-188. Compiled at plan time into concat() — JVM-side.
 - ``wrap_summary``: textwrap.fill(width=150) — ref outlier.py:14-15; an
   Arrow UDF (cosmetic but required for byte-identical summaries).
-- ``derived_fields``: grok-ish named-group regex patterns applied to a source
-  column, matches become new columns — ref es.py:489-517. Compiled to
-  regexp_extract (JVM) per group.
-- ``extract_assets``: configured field→type map, values flattened, empties
-  dropped, rendered 'type: value' — ref utils.py:130-155.
 """
 
 from __future__ import annotations
@@ -65,101 +60,3 @@ def wrap_summary(s: pd.Series) -> pd.Series:
     """Hard-wrap at 150 chars (ref outlier.py:14-15 textwrap.fill)."""
     return s.map(lambda x: textwrap.fill(x, width=150) if x is not None else None)
 
-
-def derived_fields(df: DataFrame, source_col: str,
-                   patterns: dict[str, str]) -> DataFrame:
-    """For each {new_field: regex-with-one-group}: add regexp_extract column
-    (null when no match → downstream existence skip, ref F8). The reference
-    uses grok (es.py:489-517); grok patterns reduce to named regexes — we
-    take the regex directly and compile once at plan time."""
-    out = df
-    for name, rx in patterns.items():
-        extracted = F.regexp_extract(F.col(source_col), rx, 1)
-        out = out.withColumn(
-            name, F.when(extracted != "", extracted).otherwise(F.lit(None))
-        )
-    return out
-
-
-# --- grok (ref X14: es.py:489-517 runs grok via ES ingest; the reference's
-# defaults/outliers.conf derived-field patterns use exactly these) -----------
-
-GROK_LIB: dict[str, str] = {
-    "WORD": r"\b\w+\b",
-    "NOTSPACE": r"\S+",
-    "SPACE": r"\s*",
-    "DATA": r".*?",
-    "GREEDYDATA": r".*",
-    "INT": r"[+-]?\d+",
-    "NUMBER": r"[+-]?\d+(?:\.\d+)?",
-    "BASE16NUM": r"(?:0[xX])?[0-9a-fA-F]+",
-    "YEAR": r"(?:\d\d){1,2}",
-    "MONTHNUM": r"0?[1-9]|1[0-2]",
-    "MONTHDAY": r"(?:0[1-9])|(?:[12]\d)|(?:3[01])|[1-9]",
-    "HOUR": r"2[0123]|[01]?\d",
-    "MINUTE": r"[0-5]\d",
-    "SECOND": r"(?:[0-5]?\d)(?:[:.,]\d+)?",
-    "ISO8601_TIMEZONE": r"Z|[+-](?:2[0123]|[01]?\d)(?::?[0-5]\d)?",
-    "IP": (r"(?:(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.){3}"
-           r"(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)"),
-    "USERNAME": r"[a-zA-Z0-9._-]+",
-    "HOSTNAME": (r"\b(?:[0-9A-Za-z][0-9A-Za-z-]{0,62})"
-                 r"(?:\.(?:[0-9A-Za-z][0-9A-Za-z-]{0,62}))*\.?\b"),
-    "UUID": r"[A-Fa-f0-9]{8}(?:-[A-Fa-f0-9]{4}){3}-[A-Fa-f0-9]{12}",
-}
-
-_GROK_REF = re.compile(r"%\{(\w+)(?::(\w+))?\}")
-
-
-def grok_to_regex(pattern: str) -> tuple[str, dict[str, int]]:
-    """Expand ``%{NAME:field}`` / ``%{NAME}`` grok references into a plain
-    regex plus {field: capture-group-index}. Named refs become capturing
-    groups (indexed in order of appearance); bare refs are non-capturing.
-    Caller-written raw capturing parens would shift indices — use ``(?:``.
-    """
-    fields: dict[str, int] = {}
-    next_idx = [1]
-
-    def sub(m: re.Match) -> str:
-        name, field = m.group(1), m.group(2)
-        try:
-            body = GROK_LIB[name]
-        except KeyError:
-            raise ValueError(f"unknown grok pattern %{{{name}}}")
-        if field:
-            fields[field] = next_idx[0]
-            next_idx[0] += 1
-            return f"({body})"
-        return f"(?:{body})"
-
-    return _GROK_REF.sub(sub, pattern), fields
-
-
-def derived_fields_grok(df: DataFrame, source_col: str,
-                        grok_pattern: str) -> DataFrame:
-    """One grok expression → one new column per named reference
-    (ref es.py:489-517 derived fields; the grok step runs at plan time,
-    extraction is JVM regexp_extract per field)."""
-    rx, fields = grok_to_regex(grok_pattern)
-    out = df
-    for field, idx in fields.items():
-        extracted = F.regexp_extract(F.col(source_col), rx, idx)
-        out = out.withColumn(
-            field, F.when(extracted != "", extracted).otherwise(F.lit(None))
-        )
-    return out
-
-
-def extract_assets(df: DataFrame, field_types: dict[str, str]) -> Column:
-    """Array<string> of 'type: value' for configured asset fields with
-    non-empty values (ref utils.py:130-155)."""
-    parts = []
-    for field, typ in field_types.items():
-        col = _resolve(field, df.columns)
-        if col is None:
-            continue
-        v = F.col(col).cast("string")
-        parts.append(F.when(v.isNotNull() & (v != ""), F.concat(F.lit(typ + ": "), v)))
-    if not parts:
-        return F.array().cast("array<string>")
-    return F.filter(F.array(*parts), lambda x: x.isNotNull())

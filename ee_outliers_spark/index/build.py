@@ -282,7 +282,7 @@ def _text_segment_kernel(analyzed_fields: tuple[str, ...] = (),
     (_assemble_segment). tests/test_index_bm25.py pins the output bytes
     against a plain-Python inversion fed to ``segment_frame``."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -996,7 +996,8 @@ def build_segments(
             spark, paths, todo,
             {"source": df.schema.simpleString(), "doc_col": doc_col,
              "text_col": text_col, "num_segments": num_segments,
-             "positions": positions, "analyzed_fields": analyzed_fields},
+             "positions": positions, "analyzed_fields": analyzed_fields,
+             "input_files": sorted(df.inputFiles())},
             wall, segs=seg_df, sidecar_rows=sidecar,
         )
         if done:

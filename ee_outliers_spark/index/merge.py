@@ -211,7 +211,7 @@ def merge_segments(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> No
         *[F.lit(x) for kv in group_of.items() for x in kv])
     grouped = segs.withColumn("new_seg", mapping[F.col("seg_id")])
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         return _merge_group(pdf, int(pdf["new_seg"].iloc[0]))
 
     # route each output segment to its own reduce task (same placement

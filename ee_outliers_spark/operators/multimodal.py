@@ -1,5 +1,5 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, with decode / feature-extract / resize / frame-sample as
+metadata, with decode / feature-extract / frame-sample as
 Arrow-batched operators.
 
 Spark-side plumbing is REAL (schemas, mapInPandas batch handling, zero
@@ -114,18 +114,6 @@ def image_features(df: DataFrame, id_col: str = "media_id",
     return df.mapInPandas(run, schema=schema)
 
 
-def resize_plan(df: DataFrame, out_w: int, out_h: int,
-                meta_col: str = "meta") -> DataFrame:
-    """Resize as metadata transformation + codec hook: the plan (schema,
-    scale factors, pruned columns) is real; the pixel resample is the
-    pluggable codec step. Returns rows with scale factors — JVM-only."""
-    return df.select(
-        "*",
-        (F.lit(out_w) / F.col(f"{meta_col}.width")).alias("scale_x"),
-        (F.lit(out_h) / F.col(f"{meta_col}.height")).alias("scale_y"),
-    )
-
-
 def sample_frames(df: DataFrame, every_n: int, id_col: str = "media_id",
                   meta_col: str = "meta") -> DataFrame:
     """Video frame sampling: one row per selected frame index (0, n, 2n, …) —
@@ -144,25 +132,3 @@ def sample_frames(df: DataFrame, every_n: int, id_col: str = "media_id",
         )
     )
 
-
-def frame_features(frames: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Per-frame features: fake decode keyed by (blob, frame_no) so frames
-    differ deterministically."""
-    schema = f"{id_col} long, frame_no int, feature array<float>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            feats = [
-                _fake_features(bytes(raw) + b"#%d" % fn).astype(
-                    np.float32).tolist()
-                for raw, fn in zip(pdf["blob"], pdf["frame_no"])
-            ]
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "frame_no": pdf["frame_no"].to_numpy(),
-                "feature": feats,
-            })
-
-    return frames.mapInPandas(run, schema=schema)

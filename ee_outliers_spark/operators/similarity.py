@@ -246,47 +246,6 @@ def seed_centroids(df: DataFrame, id_col: str, vec_col: str,
     return [[float(x) for x in r[0]] for r in rows]
 
 
-def kmeans_centroids(df: DataFrame, id_col: str, vec_col: str, k: int,
-                     n_iter: int = 10, sample: int = 20_000,
-                     seed: int = 13) -> list[list[float]]:
-    """KMeans-trained coarse-quantizer centroids (Lloyd's iterations over a
-    deterministic hash-sample collected to the driver — sample·d and K·d are
-    tiny next to the corpus, and the quantizer only has to capture cluster
-    structure, not every vector). Deterministic end to end: the sample is
-    the ``sample`` lowest md5(id) rows (stable under repartition/rescale,
-    like operators/sampling.py), init is seeded kmeans++-style. At 100 TB
-    the same contract holds: one column-pruned sample scan, driver-side
-    K·d·n_iter arithmetic, centroids broadcast back into ``ivf_assign`` —
-    swapping in pyspark.ml's KMeans changes nothing downstream."""
-    import numpy as np
-
-    rows = (df.select(
-                F.col(vec_col).alias("v"),
-                F.md5(F.col(id_col).cast("string")).alias("__h"))
-            .orderBy("__h").limit(sample).select("v").collect())
-    x = np.asarray([list(map(float, r["v"])) for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    # kmeans++-style init: spread the seeds by squared-distance weighting
-    cents = [x[int(rng.integers(len(x)))]]
-    for _ in range(1, k):
-        d2 = np.min(
-            ((x[:, None, :] - np.asarray(cents)[None, :, :]) ** 2)
-            .sum(axis=2), axis=1)
-        p = d2 / d2.sum() if d2.sum() > 0 else None
-        cents.append(x[int(rng.choice(len(x), p=p))])
-    c = np.asarray(cents, dtype=np.float64)
-    for _ in range(n_iter):
-        assign = _nearest_cell(x, c)
-        for j in range(k):
-            sel = x[assign == j]
-            if len(sel):
-                c[j] = sel.mean(axis=0)
-            else:  # empty cell: restart on the farthest point
-                far = np.argmax(((x - c[assign]) ** 2).sum(axis=1))
-                c[j] = x[far]
-    return [[float(v) for v in row] for row in c]
-
-
 def _nearest_cell(vecs, cents) -> "np.ndarray":
     """Vectorized argmin_c ||v - c||² via |c|² − 2 v·c (|v|² is constant per
     row); ties break to the lowest cell index (np.argmin rule — the oracle

@@ -132,7 +132,7 @@ def nn_model(
     tests by outlier-set agreement, not bitwise)."""
     b1, b2, eps = 0.9, 0.999, 1e-8
 
-    def train_eval(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def train_eval(key, pdf):
         import numpy as np
         import pandas as pd
 
@@ -197,12 +197,6 @@ def nn_model(
     return pairs.groupBy("aggregator").applyInPandas(train_eval, NN_SCHEMA)
 
 
-def _mean_col(col: str, geo: bool):
-    """Geometric (exp∘mean∘log) or arithmetic mean aggregate — the
-    reference's ``mean(list, use_geo_mean)`` (ml_models/word2vec.py)."""
-    return F.exp(F.avg(F.log(col))) if geo else F.avg(col)
-
-
 def _scored_pairs(
     df: DataFrame, groups: list[str], text_id: str, text_col: str,
     window: int, max_voc_size: int, min_voc_occurrence: int,
@@ -218,96 +212,6 @@ def _scored_pairs(
     model = (prob_model(pairs) if use_prob_model
              else nn_model(pairs, **(nn_params or {})))
     return pairs.join(model, ["aggregator", "center", "ctx"])
-
-
-def occurrence_scores(scored: DataFrame, use_geo_mean: bool = False) -> DataFrame:
-    """Per word OCCURRENCE (aggregator, text_id, pos): center / context /
-    total scores (ref A13 trigger_score semantics, word2vec.py:552-586):
-    center = mean of P(ctx|this word) where this word is the center;
-    context = mean of P(this word|center) where this word is the context;
-    total = mean(center, context)."""
-    center = scored.groupBy(
-        "aggregator", "text_id", F.col("i").alias("pos"),
-        F.col("center").alias("word"),
-    ).agg(_mean_col("p", use_geo_mean).alias("center_score"))
-    ctx = scored.groupBy(
-        "aggregator", "text_id", F.col("j").alias("pos"),
-        F.col("ctx").alias("word"),
-    ).agg(_mean_col("p", use_geo_mean).alias("context_score"))
-    occ = center.join(ctx, ["aggregator", "text_id", "pos", "word"], "outer")
-    total = (
-        F.exp((F.log("center_score") + F.log("context_score")) / 2.0)
-        if use_geo_mean
-        else (F.col("center_score") + F.col("context_score")) / 2.0
-    )
-    return occ.withColumn(
-        "total_score",
-        F.when(
-            F.col("center_score").isNotNull()
-            & F.col("context_score").isNotNull(), total
-        ).otherwise(F.coalesce("center_score", "context_score")),
-    )
-
-
-def word2vec_scores(
-    df: DataFrame,
-    groups: list[str],
-    text_id: str,
-    text_col: str,
-    window: int = 2,
-    max_voc_size: int = 6000,
-    min_voc_occurrence: int = 1,
-    trigger_score: str = "center",
-    use_geo_mean: bool = True,
-) -> DataFrame:
-    """(aggregator, text_id, score) for every trigger_score variant the
-    reference accepts (word2vec.py:113-118): center / context / total =
-    per-text mean over the occurrence scores of that type; mean = per-text
-    mean over ALL raw pair probabilities."""
-    if trigger_score not in {"center", "context", "total", "mean"}:
-        raise ValueError(f"unexpected trigger_score {trigger_score!r}")
-    scored = _scored_pairs(df, groups, text_id, text_col, window,
-                           max_voc_size, min_voc_occurrence)
-    if trigger_score == "mean":
-        return scored.groupBy("aggregator", "text_id").agg(
-            _mean_col("p", use_geo_mean).alias("score")
-        )
-    occ = occurrence_scores(scored, use_geo_mean)
-    return occ.groupBy("aggregator", "text_id").agg(
-        _mean_col(f"{trigger_score}_score", use_geo_mean).alias("score")
-    )
-
-
-def word_level_outliers(
-    df: DataFrame,
-    groups: list[str],
-    text_id: str,
-    text_col: str,
-    trigger_method: str = "stdev",
-    trigger_sensitivity: float = 1.0,
-    trigger_on: str = "low",
-    trigger_score: str = "center",
-    window: int = 2,
-    max_voc_size: int = 6000,
-    min_voc_occurrence: int = 1,
-    use_geo_mean: bool = False,
-) -> DataFrame:
-    """trigger_focus='word' (ref word2vec.py:369-376): the decision frontier
-    is computed PER WORD over that word's occurrence scores across the
-    aggregator; flagged occurrences mark their (text_id, pos, word)."""
-    if trigger_score == "mean":
-        raise ValueError("trigger_focus=word is incompatible with "
-                         "trigger_score=mean (ref word2vec.py:117-118)")
-    scored = _scored_pairs(df, groups, text_id, text_col, window,
-                           max_voc_size, min_voc_occurrence)
-    occ = occurrence_scores(scored, use_geo_mean).withColumn(
-        "score", F.col(f"{trigger_score}_score")
-    ).where(F.col("score").isNotNull())
-    flagged = flag_outliers(
-        occ, ["aggregator", "word"], "score",
-        trigger_method, trigger_sensitivity, trigger_on,
-    )
-    return flagged.where("is_outlier")
 
 
 def text_scores(

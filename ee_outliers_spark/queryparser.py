@@ -1081,7 +1081,14 @@ def dsl_to_ast(d: dict):
     Supported: bool (must/should/must_not/filter), term, terms, range
     (gt/gte/lt/lte), exists, query_string, match_all, prefix, wildcard,
     fuzzy, match_phrase (with slop). Compiles through the same three
-    backends as the query_string grammar."""
+    backends as the query_string grammar. Bool clauses nest at most
+    ``MAX_NESTING`` levels deep; deeper input raises ValueError."""
+    return _dsl_node(d, 0)
+
+
+def _dsl_node(d: dict, depth: int):
+    if depth >= MAX_NESTING:
+        raise ValueError(f"DSL query nests deeper than {MAX_NESTING} levels")
     if not isinstance(d, dict) or len(d) != 1:
         raise ValueError(f"expected a single-key DSL dict, got {d!r}")
     kind, body = next(iter(d.items()))
@@ -1163,7 +1170,7 @@ def dsl_to_ast(d: dict):
         for key in ("must", "filter"):
             clauses = body.get(key, [])
             clauses = clauses if isinstance(clauses, list) else [clauses]
-            parts.extend(dsl_to_ast(c) for c in clauses)
+            parts.extend(_dsl_node(c, depth + 1) for c in clauses)
         should = body.get("should", [])
         should = should if isinstance(should, list) else [should]
         # ES minimum_should_match default: 1 when the bool has should clauses
@@ -1172,7 +1179,7 @@ def dsl_to_ast(d: dict):
         # matching in filter context.
         msm = int(body.get("minimum_should_match", 1 if not parts else 0))
         if should and msm >= 1:
-            clauses = [dsl_to_ast(c) for c in should]
+            clauses = [_dsl_node(c, depth + 1) for c in should]
             if msm == 1:
                 parts.append(Or(clauses))
             elif msm == len(clauses):
@@ -1201,7 +1208,7 @@ def dsl_to_ast(d: dict):
                                  for cb in combinations(clauses, msm)]))
         must_not = body.get("must_not", [])
         must_not = must_not if isinstance(must_not, list) else [must_not]
-        parts.extend(Not(dsl_to_ast(c)) for c in must_not)
+        parts.extend(Not(_dsl_node(c, depth + 1)) for c in must_not)
         if not parts:
             return MatchAll()
         return parts[0] if len(parts) == 1 else And(parts)

@@ -16,11 +16,6 @@ runtime jars, so the same semantics run on parquet: anti-join new against
 existing, append the difference (idempotent batch write — re-running a model
 never duplicates rows). Wipe-model (es.py:358-386 update_by_query) becomes a
 filtered overwrite.
-
-Enriched views (the ES read-side equivalent): ``with_outlier_tags`` joins the
-events table with its outliers, reproducing the `tags`/`outliers.*` shape
-that downstream filters use (e.g. simplequery's must_not on
-``outliers.model_name.keyword`` — ref F4/F5).
 """
 
 from __future__ import annotations
@@ -105,22 +100,3 @@ class OutlierStore:
             "doc_key", "left_anti",
         ))
 
-
-def with_outlier_tags(events: DataFrame, outliers: DataFrame,
-                      key_col: str) -> DataFrame:
-    """Read-side enrichment view: events + tags array + outlier model names
-    (the shape the reference's term filters query — ref F4
-    `{"term": {"tags": "outlier"}}` / `outliers.model_name.keyword`)."""
-    agg = outliers.groupBy(F.col("doc_key")).agg(
-        F.sort_array(F.collect_set("model_name")).alias("outlier_model_names")
-    )
-    joined = events.join(
-        agg, events[key_col].cast("string") == agg["doc_key"], "left"
-    ).drop("doc_key")
-    tags = F.when(
-        F.col("outlier_model_names").isNotNull(), F.array(F.lit("outlier"))
-    ).otherwise(F.array().cast("array<string>"))
-    return joined.withColumn("tags", tags).withColumn(
-        "outlier_model_names",
-        F.coalesce(F.col("outlier_model_names"), F.array().cast("array<string>")),
-    )

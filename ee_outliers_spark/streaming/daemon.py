@@ -11,12 +11,14 @@ streaming). The Spark-native equivalents:
                             segments stay exactly correct as avgdl drifts.
                             Periodic ``merge_segments`` keeps segment counts
                             logarithmic (the LSM part).
-- ``stream_index_updates``— Structured Streaming over a parquet directory
-                            with ``Trigger.AvailableNow``: each micro-batch
-                            feeds append_segments via foreachBatch; the
-                            checkpoint gives exactly-once file processing —
-                            the scalable replacement for "re-scan everything
-                            daily" (ST1/ST2: incremental snapshot reads).
+- ``catch_up``            — bring an index level with its append-only
+                            table: the table's files that no manifest
+                            record lists go through append_segments, then
+                            the LSM merge policy runs (``compact_if_needed``).
+                            The CLI calls it at startup and before every
+                            daemon tick, so a filter never answers from an
+                            index that lacks rows the table holds (ST1/ST2:
+                            incremental snapshot reads).
 
 A reference-style tick has no function of its own: it is
 ``config.run_all`` over the rolling window, which plans every use case and
@@ -79,7 +81,8 @@ def append_segments(
         paths.segments).where(F.col("seg_id").isin(new_ids))
     sidecar = collect_sidecar_rows(new_segs)
     write_manifest(spark, paths, new_ids,
-                   {"kind": "incremental_append", "base_seg": base_seg}, wall,
+                   {"kind": "incremental_append", "base_seg": base_seg,
+                    "input_files": sorted(new_docs.inputFiles())}, wall,
                    sidecar_rows=sidecar)
     # stats (n_docs, avgdl) + termstats refresh — old segments stay valid
     # under avgdl drift because block metadata is avgdl-independent.
@@ -95,163 +98,37 @@ def append_segments(
     return sorted(s for s in new_ids if s in done)
 
 
-def stream_index_updates(
+def catch_up(
     spark: SparkSession,
-    input_dir: str,
+    table: DataFrame,
     paths: IndexPaths,
-    checkpoint_dir: str,
-    schema: str = "doc_id long, text string",
-    num_segments: int = 4,
-    max_live_segments: int = 64,
-    merge_fanin: int = 4,
-    settings=None,
-) -> None:
-    """Process all unseen parquet files under input_dir into new segments
-    (Trigger.AvailableNow + checkpoint = exactly-once incremental ingestion),
-    then return. After each micro-batch the LSM merge POLICY runs
-    (``compact_if_needed``): whenever the live segment count exceeds
-    ``max_live_segments``, the ``merge_fanin`` smallest segments fold into
-    one behind the crash-safe commit flip — a long-running ingest keeps a
-    bounded, queryable segment count without operator intervention (Lucene
-    merges on a policy, not by hand). ``max_live_segments=0`` disables.
+    doc_col: str = "doc_id",
+    text_col: str = "text",
+) -> list[int]:
+    """Index the rows of ``table``'s files that the index has not recorded,
+    then run the merge policy with its defaults. Returns the new seg_ids
+    ([] when every file is recorded; that case runs no Spark job).
 
-    ``settings`` (config.GeneralSettings, from an outliers.conf ``[index]``
-    section) overrides the policy knobs — per-batch segment count,
-    max_live_segments, merge_fanin; positions/analyzed_fields always follow
-    the index's own commit point (append_segments inherits them)."""
+    ``table`` is read from an append-only parquet table with unique keys
+    (the ``append_segments`` contract). A file counts as indexed
+    when a manifest record's lineage lists it: ``build_segments`` and
+    ``append_segments`` record ``inputFiles()``, a driver-side listing. The
+    new files are read on their own, so a column that exists only as a
+    partition directory of the table reads as null here.
+
+    Raises ``ValueError`` for an index whose manifest lists no source file:
+    which of the table's rows it lacks cannot be told."""
     from ..index.merge import compact_if_needed
 
-    if settings is not None:
-        # only override knobs the conf file actually set (None = absent) —
-        # an explicit caller argument must not lose to a missing [index] key
-        num_segments = settings.num_segments or num_segments
-        if settings.max_live_segments is not None:
-            max_live_segments = settings.max_live_segments
-        if settings.merge_fanin is not None:
-            merge_fanin = settings.merge_fanin
-
-    stream = (
-        spark.readStream.schema(schema).parquet(input_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        append_segments(spark, batch_df, paths, num_segments=num_segments)
-        if max_live_segments:
-            compact_if_needed(spark, paths, max_live=max_live_segments,
-                              fanin=merge_fanin)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_window_counts(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_len: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> None:
-    """Watermarked tumbling-window counts over a growing parquet directory —
-    the Structured Streaming twin of the batch terms-over-time aggregation
-    (the reference's daemon re-aggregates the full rolling window every
-    tick; this keeps windowed state in the checkpoint and touches only new
-    files per trigger).
-
-    Semantics under ``withWatermark``: a window [s, s+len) is finalized and
-    APPENDED to the parquet sink exactly once, when the watermark
-    (max event time − ``watermark``) passes s+len; events later than the
-    watermark are dropped (never mutate an emitted window), while
-    in-watermark stragglers still update their open window. State and the
-    watermark survive restarts via the checkpoint, so repeated
-    Trigger.AvailableNow runs over an appended directory behave like one
-    continuous stream."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_len).alias("w"),
-                 F.col(key_col))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"), key_col, "n")
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def streaming_first_seen(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    agg_col: str = "aggregator",
-    target_col: str = "target",
-    ts_col: str = "ts",
-) -> None:
-    """Streaming first-occurrence detection — the reference's
-    sudden_appearance (A4/W1, app/analyzers/sudden_appearance.py) as a TRUE
-    stateful streaming operator instead of a per-tick re-aggregation: the
-    set of targets already seen per aggregator lives in Spark's keyed state
-    store (``applyInPandasWithState``), survives restarts via the
-    checkpoint, and each micro-batch emits exactly the (aggregator, target)
-    pairs appearing for the first time ever, with their first event time.
-    State is O(distinct targets) per aggregator key and partitions by the
-    group key like any keyed stream."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def first_seen(key, pdfs, state):
-        seen = set(state.get[0]) if state.exists else set()
-        rows: dict[str, object] = {}
-        for pdf in pdfs:
-            for tgt, ts in zip(pdf[target_col], pdf[ts_col]):
-                if tgt in seen:
-                    continue
-                if tgt not in rows or ts < rows[tgt]:
-                    rows[tgt] = ts
-        if rows:
-            seen.update(rows)
-            state.update((sorted(seen),))
-            yield pd.DataFrame({
-                agg_col: [key[0]] * len(rows),
-                target_col: list(rows.keys()),
-                "first_ts": list(rows.values()),
-            })
-
-    out = (
-        stream.groupBy(agg_col).applyInPandasWithState(
-            first_seen,
-            outputStructType=(f"{agg_col} string, {target_col} string, "
-                              f"first_ts timestamp"),
-            stateStructType="seen array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    recorded = {f for r in read_manifest(paths)
+                for f in r["lineage"].get("input_files", ())}
+    if not recorded:
+        raise ValueError(f"index {paths.root} records no source file; "
+                         f"rebuild it to index its table's new rows")
+    new = sorted(set(table.inputFiles()) - recorded)
+    if not new:
+        return []
+    new_docs = spark.read.schema(table.schema).parquet(*new)
+    new_ids = append_segments(spark, new_docs, paths, doc_col, text_col)
+    compact_if_needed(spark, paths)
+    return new_ids

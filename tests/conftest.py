@@ -16,6 +16,14 @@ os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "0")
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    # PySpark warns on every call of an applyInPandas function whose type
+    # hints cover only some of its parameters; annotate all or none
+    config.addinivalue_line(
+        "filterwarnings",
+        "error:Cannot infer the eval type from type hints:UserWarning")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from ee_outliers_spark.session import get_spark

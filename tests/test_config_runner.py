@@ -7,8 +7,7 @@ import re
 import textwrap
 
 from ee_outliers_spark.config import (
-    AnalyzerSpec, GeneralSettings, load_settings, load_use_cases,
-    parse_duration, run_all, run_analyzer,
+    AnalyzerSpec, load_use_cases, parse_duration, run_all, run_analyzer,
 )
 from ee_outliers_spark.sources.results import OutlierStore
 
@@ -68,54 +67,6 @@ def _events(spark):
         (4, "svc beacon", "hostB", "rare.exe"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string, host string, proc string")
-
-
-def test_load_settings_general_daemon_index(tmp_path):
-    """outliers.conf [general]/[daemon] parity (ref defaults/outliers.conf:
-    1-103) + the engine [index] section (LSM compaction policy, per-field
-    analyzed columns) — unknown keys ignored like the reference."""
-    conf = tmp_path / "outliers.conf"
-    conf.write_text(textwrap.dedent("""
-        [general]
-        es_url=http://unused:9200
-        history_window_days=3
-        history_window_hours=12
-        es_save_results=0
-        es_wipe_all_existing_outliers=1
-        es_wipe_all_whitelisted_outliers=0
-        run_models=1
-        test_models=1
-        timestamp_field=@timestamp
-
-        [daemon]
-        schedule=30 2 * * *
-
-        [index]
-        num_segments=16
-        positions=1
-        analyzed_fields=title, Body
-        max_live_segments=32
-        merge_fanin=8
-    """))
-    s = load_settings(str(conf))
-    assert s.history_window == dt.timedelta(days=3, hours=12)
-    assert s.save_results is False
-    assert s.wipe_all_existing_outliers is True
-    assert s.wipe_all_whitelisted_outliers is False
-    assert s.test_models is True
-    assert s.timestamp_field == "@timestamp"
-    assert s.schedule == "30 2 * * *"
-    assert s.num_segments == 16
-    assert s.positions is True
-    assert s.analyzed_fields == ["title", "Body"]
-    assert s.max_live_segments == 32
-    assert s.merge_fanin == 8
-    # empty file → all defaults (num_segments None = auto budget)
-    empty = tmp_path / "empty.conf"
-    empty.write_text("")
-    d = load_settings(str(empty))
-    assert d == GeneralSettings()
-    assert d.num_segments is None
 
 
 def test_run_analyzer_simplequery_render(spark):

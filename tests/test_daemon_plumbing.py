@@ -1,12 +1,9 @@
-"""Daemon-mode plumbing (ST1/ST4): cron schedule math + loop with injected
-clock, config file watcher, notifier dedup. No Spark needed."""
+"""Daemon-mode plumbing (ST1): cron schedule math + loop with injected
+clock. No Spark needed."""
 
 import datetime as dt
 
 from ee_outliers_spark.streaming.cron import CronSchedule, daemon_loop
-from ee_outliers_spark.streaming.watchers import (
-    FileModificationWatcher, Notifier,
-)
 
 
 def test_cron_daily_midnight():
@@ -51,27 +48,3 @@ def test_daemon_loop_injected_clock():
     assert fires == [dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 3),
                      dt.datetime(2024, 1, 4)]
 
-
-def test_file_watcher(tmp_path):
-    p = tmp_path / "cases.conf"
-    p.write_text("[simplequery_x]\n")
-    w = FileModificationWatcher([str(p)])
-    assert w.changed() == []
-    import os
-    os.utime(p, (1, 1))
-    assert w.changed() == [str(p)]
-    assert w.changed() == []
-    missing = tmp_path / "gone.conf"
-    w2 = FileModificationWatcher([str(missing)])
-    missing.write_text("x")
-    assert w2.changed() == [str(missing)]
-
-
-def test_notifier_dedups_by_summary():
-    n = Notifier()
-    assert n.notify_outlier("rare process foo", "detail1")
-    assert not n.notify_outlier("rare process foo", "detail2")
-    assert n.notify_outlier("rare process bar")
-    assert [s for s, _ in n.sent] == [
-        "ee-outliers: rare process foo", "ee-outliers: rare process bar",
-    ]

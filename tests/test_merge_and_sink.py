@@ -8,7 +8,7 @@ from ee_outliers_spark.index.build import build_segments
 from ee_outliers_spark.index.merge import merge_segments
 from ee_outliers_spark.index.query import bm25_topk_wand
 from ee_outliers_spark.oracle import OracleIndex
-from ee_outliers_spark.sources.results import OutlierStore, with_outlier_tags
+from ee_outliers_spark.sources.results import OutlierStore
 
 
 def test_merge_preserves_rank_identity(spark, documents, docs_dict, tmp_path_factory):
@@ -43,14 +43,6 @@ def test_outlier_store_merge(spark, tmp_path_factory):
     df2 = spark.createDataFrame(rows2, df.schema)
     assert store.upsert(df2) == 1
     assert store.read().count() == 3
-
-    events = spark.createDataFrame(
-        [(k,) for k in ["d1", "d2", "d3"]], "doc_id string")
-    enr = {r["doc_id"]: (list(r["tags"]), list(r["outlier_model_names"]))
-           for r in with_outlier_tags(events, store.read(), "doc_id").collect()}
-    assert enr["d1"] == (["outlier"], ["m1"])
-    assert enr["d2"] == (["outlier"], ["m1", "m2"])
-    assert enr["d3"] == ([], [])
 
     store.wipe_model("m1")
     assert store.read().count() == 1

@@ -5,8 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ee_outliers_spark.operators.multimodal import (
-    FEATURE_DIM, frame_features, image_features, media_table, resize_plan,
-    sample_frames,
+    FEATURE_DIM, image_features, media_table, sample_frames,
 )
 
 
@@ -48,19 +47,3 @@ def test_sample_frames_counts(media):
         n = metas[r["media_id"]]
         assert r["count"] == (n + 6) // 7
 
-
-def test_frame_features_differ_per_frame(media):
-    frames = sample_frames(media, every_n=7)
-    multi = frame_features(frames).groupBy("media_id").agg(
-        F.countDistinct("feature").alias("nf"), F.count("*").alias("n")
-    ).where("n >= 2").collect()
-    assert multi
-    for r in multi:
-        assert r["nf"] == r["n"]  # every sampled frame yields a distinct vec
-
-
-def test_resize_plan_scales(media):
-    out = resize_plan(media.where("kind = 'image'").limit(5), 224, 224)
-    for r in out.collect():
-        assert abs(r["scale_x"] * r["meta"]["width"] - 224) < 1e-9
-        assert abs(r["scale_y"] * r["meta"]["height"] - 224) < 1e-9

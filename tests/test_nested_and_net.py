@@ -1,11 +1,8 @@
-"""Nested-document access (X8/X9), multi-valued sentence expansion (X11),
-IP/CIDR matching (X15)."""
+"""Nested-document access (X8/X9), multi-valued sentence expansion (X11)."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from ee_outliers_spark.functions.nested import dig, flatten_df, flatten_schema_paths
-from ee_outliers_spark.functions.net import ip_in_cidrs, matching_cidrs_py
+from ee_outliers_spark.functions.nested import dig, flatten_schema_paths
 from ee_outliers_spark.operators.terms import expand_multivalued, terms_outliers
 from ee_outliers_spark.queryparser import (
     parse_query_string, to_python_predicate, to_spark_predicate,
@@ -30,14 +27,6 @@ def test_flatten_schema_paths(nested_df):
     assert flatten_schema_paths(nested_df.schema) == [
         "doc_id", "meta.user", "meta.conn.ip", "meta.conn.port",
     ]
-
-
-def test_flatten_df(nested_df):
-    flat = flatten_df(nested_df)
-    assert flat.columns == ["doc_id", "meta.user", "meta.conn.ip",
-                            "meta.conn.port"]
-    got = {r["doc_id"]: r["meta.conn.port"] for r in flat.collect()}
-    assert got == {1: 22, 2: 443, 3: 53}
 
 
 def test_nested_field_predicates(nested_df):
@@ -79,18 +68,3 @@ def test_terms_with_array_aggregator(spark):
     # h1/p1 count=3 > 2.5 -> docs 1,2,3 flagged (3 via its h1 sentence)
     assert sorted({r["doc_id"] for r in out.collect()}) == [1, 2, 3]
 
-
-def test_ip_in_cidrs(spark):
-    df = spark.createDataFrame(
-        [(1, "10.0.0.1"), (2, "192.168.1.9"), (3, "8.8.8.8"),
-         (4, "not-an-ip"), (5, None), (6, "999.1.1.1")],
-        "doc_id long, ip string",
-    )
-    cidrs = ["10.0.0.0/8", "192.168.0.0/16"]
-    got = sorted(
-        r["doc_id"] for r in
-        df.where(ip_in_cidrs("ip", cidrs)).collect()
-    )
-    assert got == [1, 2]
-    assert matching_cidrs_py("10.1.2.3", cidrs) == ["10.0.0.0/8"]
-    assert matching_cidrs_py("not-an-ip", cidrs) == []

@@ -1,17 +1,14 @@
-"""Placeholder rendering, summary wrap, derived fields, assets, metric
-scalar functions vs reference-spec oracles."""
+"""Placeholder rendering, summary wrap, metric scalar functions vs
+reference-spec oracles."""
 
 import math
 import textwrap
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from ee_outliers_spark.functions.metrics import metric_column
-from ee_outliers_spark.functions.render import (
-    derived_fields, extract_assets, render_template, wrap_summary,
-)
+from ee_outliers_spark.functions.render import render_template, wrap_summary
 
 
 @pytest.fixture(scope="module")
@@ -33,20 +30,6 @@ def test_wrap_summary(spark):
     df = spark.createDataFrame([(long.strip(),)], "s string")
     got = df.select(wrap_summary("s").alias("w")).collect()[0]["w"]
     assert got == textwrap.fill(long.strip(), width=150)
-
-
-def test_derived_fields(spark):
-    df = spark.createDataFrame(
-        [("user=alice action=login",), ("garbage",)], "msg string")
-    out = derived_fields(df, "msg", {"user": r"user=(\w+)"})
-    got = [r["user"] for r in out.collect()]
-    assert got == ["alice", None]
-
-
-def test_extract_assets(spark, docs):
-    col = extract_assets(docs, {"hostname": "host", "nope": "x"})
-    got = list(docs.select(col.alias("a")).collect()[0]["a"])
-    assert got == ["host: host-A"]
 
 
 # --- metric functions vs numpy/python oracles ---------------------------------
@@ -88,38 +71,3 @@ def test_entropy_matches_numpy(spark):
     for g, v in zip(got, vals):
         assert math.isclose(g, _entropy_oracle(v), rel_tol=1e-12)
 
-
-def test_grok_timestamp_pattern(spark):
-    """The reference's default derived-field pattern (defaults/
-    outliers.conf:150) works end-to-end through the grok expansion."""
-    from ee_outliers_spark.functions.render import derived_fields_grok
-
-    pat = ("%{YEAR:ts_year}-%{MONTHNUM:ts_month}-%{MONTHDAY:ts_day}"
-           "[T ]%{HOUR:ts_hour}:?%{MINUTE:ts_minute}"
-           "(?::?%{SECOND:ts_second})?%{ISO8601_TIMEZONE:ts_tz}?")
-    df = spark.createDataFrame(
-        [(1, "2024-03-07T08:15:59Z boot"), (2, "no timestamp here")],
-        "id long, line string",
-    )
-    out = {r["id"]: r for r in
-           derived_fields_grok(df, "line", pat).collect()}
-    assert (out[1]["ts_year"], out[1]["ts_month"], out[1]["ts_day"]) == (
-        "2024", "03", "07")
-    assert (out[1]["ts_hour"], out[1]["ts_minute"], out[1]["ts_second"],
-            out[1]["ts_tz"]) == ("08", "15", "59", "Z")
-    assert out[2]["ts_year"] is None
-
-
-def test_grok_ip_and_unknown():
-    import re as _re
-
-    import pytest as _pytest
-
-    from ee_outliers_spark.functions.render import grok_to_regex
-
-    rx, fields = grok_to_regex("src=%{IP:src_ip} user=%{USERNAME:user}")
-    assert fields == {"src_ip": 1, "user": 2}
-    m = _re.search(rx, "src=10.1.2.3 user=alice_1")
-    assert m.group(1) == "10.1.2.3" and m.group(2) == "alice_1"
-    with _pytest.raises(ValueError):
-        grok_to_regex("%{NOPE:x}")

@@ -5,7 +5,8 @@ inputs behave, and top-k handles k ≫ corpus and duplicate query terms."""
 import pytest
 
 from ee_outliers_spark.queryparser import (
-    parse_query_string, to_duckdb_sql, to_python_predicate, to_spark_predicate,
+    dsl_to_ast, parse_query_string, to_duckdb_sql, to_python_predicate,
+    to_spark_predicate,
 )
 
 MALFORMED = [
@@ -111,3 +112,18 @@ def test_moderate_nesting_parses_and_compiles():
         node = parse_query_string(q)
         to_duckdb_sql(node, "text", cols)
         to_python_predicate(node, "text", cols)
+
+
+@pytest.mark.parametrize("key", ["must", "must_not"])
+def test_dsl_nesting_is_bounded(key):
+    """ES-DSL bool clauses share the query_string bound: 5,000 nested
+    levels raise ValueError, not RecursionError; 50 levels parse."""
+    def nested(depth):
+        d = {"term": {"lang": "en"}}
+        for _ in range(depth):
+            d = {"bool": {key: [d]}}
+        return d
+
+    with pytest.raises(ValueError, match="nests deeper"):
+        dsl_to_ast(nested(5_000))
+    to_duckdb_sql(dsl_to_ast(nested(50)), "text", ["doc_id", "text", "lang"])

@@ -1,6 +1,6 @@
 """Incremental index maintenance: append_segments keeps rank-identity as the
-corpus (and avgdl) drifts; Structured Streaming AvailableNow ingestion is
-exactly-once across restarts."""
+corpus (and avgdl) drifts; catch_up indexes exactly the table files the
+index has not recorded, so the CLI never answers from a stale index."""
 
 import math
 import os
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ee_outliers_spark.index.build import build_segments
 from ee_outliers_spark.index.query import bm25_topk_wand
 from ee_outliers_spark.oracle import OracleIndex
-from ee_outliers_spark.streaming.daemon import append_segments, stream_index_updates
+from ee_outliers_spark.streaming.daemon import append_segments, catch_up
 
 
 def _check(spark, paths, docs_dict, terms, mode="or", k=15):
@@ -36,21 +36,25 @@ def test_append_preserves_rank_identity(spark, documents, tmp_path_factory):
     _check(spark, paths, full, ["the", "vector"], "and")
 
 
-def test_stream_availablenow_exactly_once(spark, documents, tmp_path_factory):
-    root = tmp_path_factory.mktemp("stream")
-    in_dir = str(root / "incoming")
-    ckpt = str(root / "ckpt")
-    out = str(root / "index")
-    os.makedirs(in_dir)
-
+def test_catch_up_indexes_each_table_file_once(spark, documents,
+                                              tmp_path_factory):
+    """catch_up appends the table's unrecorded files; a second call with no
+    new file appends no segment and writes no manifest line."""
+    root = tmp_path_factory.mktemp("catch_up")
+    table = str(root / "documents.parquet")
     first = documents.where(F.col("doc_id") < 250)
     second = documents.where(F.col("doc_id") >= 250)
-    paths = build_segments(spark, first, "doc_id", "text", out, num_segments=4)
+    first.coalesce(1).write.parquet(table)
+    paths = build_segments(spark, spark.read.parquet(table), "doc_id", "text",
+                           str(root / "index"), num_segments=4)
+    second.coalesce(1).write.mode("append").parquet(table)
 
-    second.select("doc_id", "text").coalesce(1).write.mode("append").parquet(in_dir)
-    stream_index_updates(spark, in_dir, paths, ckpt, num_segments=2)
-    # replay with no new files: checkpoint must prevent re-indexing
-    stream_index_updates(spark, in_dir, paths, ckpt, num_segments=2)
+    assert catch_up(spark, spark.read.parquet(table), paths)
+    manifest = open(paths.manifest).read()
+    seg_dirs = os.listdir(paths.segments)
+    assert catch_up(spark, spark.read.parquet(table), paths) == []
+    assert open(paths.manifest).read() == manifest
+    assert os.listdir(paths.segments) == seg_dirs
 
     full = {int(r["doc_id"]): r["text"]
             for r in documents.select("doc_id", "text").collect()}
@@ -63,22 +67,32 @@ def test_stream_availablenow_exactly_once(spark, documents, tmp_path_factory):
     assert n == len(full)
 
 
+def test_catch_up_refuses_an_index_without_lineage(spark, documents,
+                                                   tmp_path_factory):
+    """An index built from an in-memory frame records no source file, so
+    catch_up cannot tell which table rows it lacks and says so."""
+    root = tmp_path_factory.mktemp("no_lineage")
+    rows = [(int(r["doc_id"]), r["text"]) for r in
+            documents.select("doc_id", "text").limit(20).collect()]
+    paths = build_segments(
+        spark, spark.createDataFrame(rows, "doc_id long, text string"),
+        "doc_id", "text", str(root / "index"), num_segments=2)
+    with pytest.raises(ValueError, match="records no source file"):
+        catch_up(spark, documents, paths)
+
+
 def test_stream_ingest_auto_compacts_to_policy_bound(
         spark, documents, tmp_path_factory):
-    """Long-running ingest with the merge POLICY on (round-3 verdict: nothing
-    called merge_tier automatically): N appended batches end with ≤
-    max_live_segments live segments, queries stay rank-identical to the
-    oracle over the full corpus, and non-tier segment files are
+    """Long-running ingest with the merge POLICY on: N appended batches end
+    with ≤ max_live_segments live segments, queries stay rank-identical to
+    the oracle over the full corpus, and non-tier segment files are
     byte-identical across the compaction (only tiers were rewritten)."""
     import os as _os
 
     from ee_outliers_spark.index.build import load_stats
+    from ee_outliers_spark.index.merge import compact_if_needed
 
-    root = tmp_path_factory.mktemp("stream_compact")
-    in_dir = str(root / "incoming")
-    ckpt = str(root / "ckpt")
-    out = str(root / "index")
-    _os.makedirs(in_dir)
+    out = str(tmp_path_factory.mktemp("stream_compact") / "index")
 
     parts = [documents.where((F.col("doc_id") % 5) == i) for i in range(5)]
     paths = build_segments(spark, parts[0], "doc_id", "text", out,
@@ -98,10 +112,8 @@ def test_stream_ingest_auto_compacts_to_policy_bound(
 
     snaps = []
     for i, batch in enumerate(parts[1:]):
-        batch.select("doc_id", "text").coalesce(1).write.mode(
-            "append").parquet(in_dir)
-        stream_index_updates(spark, in_dir, paths, ckpt, num_segments=4,
-                             max_live_segments=max_live, merge_fanin=4)
+        append_segments(spark, batch, paths, num_segments=4)
+        compact_if_needed(spark, paths, max_live=max_live, fanin=4)
         live = load_stats(paths)["live_segments"]
         assert len(live) <= max_live, (i, live)
         snaps.append(seg_snapshot())
@@ -124,145 +136,89 @@ def test_stream_ingest_auto_compacts_to_policy_bound(
     assert n == len(full)
 
 
-def test_daemon_tick_sees_streamed_appends_through_index(
+_CASES = """
+[simplequery_customer]
+es_query_filter=customer
+
+[simplequery_not_customer]
+es_query_filter=NOT customer
+"""
+
+
+def _per_model(summary):
+    return {m["model"]: m["total_outliers"]
+            for m in summary["most_time_consuming_use_cases_top10"]}
+
+
+def _cli_table(documents, root):
+    """A documents.parquet dir holding docs < 250, the use-case file, and a
+    function that appends docs >= 250 as a new part file."""
+    data = root / "data"
+    table = str(data / "documents.parquet")
+    documents.where(F.col("doc_id") < 250).coalesce(1).write.parquet(table)
+    cases = root / "cases.conf"
+    cases.write_text(_CASES)
+
+    def append_rest():
+        documents.where(F.col("doc_id") >= 250).coalesce(1).write.mode(
+            "append").parquet(table)
+
+    return ["--use-cases", str(cases), "--data", str(data)], append_rest
+
+
+def test_cli_interactive_index_sees_appended_files(
         spark, documents, tmp_path_factory):
-    """The live-pipeline composition (reference daemon over a growing ES
-    corpus, app/outliers.py:103-198): tick 1 runs an indexed analyzer over
-    the initial corpus; new docs land in the incoming dir and
-    stream_index_updates ingests them as fresh segments (AvailableNow,
-    exactly-once); tick 2 re-runs the SAME AnalyzerSpec against the SAME
-    IndexPaths and flags the new matching docs — the index was appended to,
-    never rebuilt, and the filter runs off its posting lists."""
-    from ee_outliers_spark.config import AnalyzerSpec, run_analyzer
+    """Two `interactive` runs with the same --index over a growing table
+    (the reference daemon reads a growing ES corpus, app/outliers.py:
+    103-198): after a part file lands between the runs, the second run
+    flags exactly what the no-index path flags — text atoms match the new
+    rows, and NOT filters no longer match them for lacking markers."""
+    from ee_outliers_spark.__main__ import main
 
-    root = tmp_path_factory.mktemp("live")
-    corpus_dir = str(root / "corpus")
-    in_dir = str(root / "incoming")
-    ckpt = str(root / "ckpt")
-    idx = str(root / "index")
-    os.makedirs(in_dir)
-
-    first = documents.where(F.col("doc_id") < 250)
-    first.write.mode("overwrite").parquet(corpus_dir)
-    paths = build_segments(spark, first, "doc_id", "text", idx,
-                           num_segments=4, positions=True)
-    manifest_lines_t1 = sum(1 for _ in open(paths.manifest))
-
-    spec = AnalyzerSpec(name="live", model_type="simplequery",
-                        es_query_filter="customer AND window")
-
-    def tick():
-        df = spark.read.parquet(corpus_dir)
-        return {int(r["doc_id"]) for r in run_analyzer(
-            df, spec, index=paths).select("doc_id").collect()}
-
-    flagged_t1 = tick()
-
-    # new docs arrive: appended to the corpus snapshot AND the incoming dir
-    second = documents.where(F.col("doc_id") >= 250)
-    second.write.mode("append").parquet(corpus_dir)
-    second.select("doc_id", "text").coalesce(1).write.mode(
-        "append").parquet(in_dir)
-    stream_index_updates(spark, in_dir, paths, ckpt, num_segments=2)
-
-    flagged_t2 = tick()
-
-    want = {int(r["doc_id"]) for r in documents.where(
-        F.lower("text").rlike("(^|[^a-z0-9])customer($|[^a-z0-9])")
-        & F.lower("text").rlike("(^|[^a-z0-9])window($|[^a-z0-9])")
-    ).select("doc_id").collect()}
-    assert flagged_t2 == want
-    assert flagged_t1 == {d for d in want if d < 250}
-    new_hits = {d for d in want if d >= 250}
-    assert new_hits and new_hits <= flagged_t2 - flagged_t1
-    # appended, not rebuilt: the tick-1 manifest lines are a strict prefix
-    manifest_lines_t2 = sum(1 for _ in open(paths.manifest))
-    assert manifest_lines_t2 > manifest_lines_t1
+    root = tmp_path_factory.mktemp("cli_interactive")
+    common, append_rest = _cli_table(documents, root)
+    index = ["--index", str(root / "index")]
+    first = _per_model(main(["interactive", *common, *index], spark=spark))
+    append_rest()
+    second = _per_model(main(["interactive", *common, *index], spark=spark))
+    want = _per_model(main(["interactive", *common], spark=spark))
+    assert second == want
+    assert want["simplequery_customer"] > first["simplequery_customer"]
 
 
-def test_streaming_window_counts_watermark_and_late_data(
-        spark, tmp_path_factory):
-    """Watermarked windowed aggregation across restarts: finalized windows
-    append exactly once; an event later than the watermark is DROPPED
-    (emitted windows never mutate) while an in-watermark straggler still
-    counts into its open window; state survives the restart through the
-    checkpoint."""
-    import datetime as dt
+def test_cli_daemon_index_sees_files_appended_between_ticks(
+        spark, documents, tmp_path_factory, monkeypatch):
+    """`daemon --max-ticks 2` over a table that grows before the second
+    tick: the index catches up before the tick, so the results store ends
+    with the no-index path's outliers."""
+    import threading
+    import time
 
-    from ee_outliers_spark.streaming.daemon import streaming_window_counts
+    from ee_outliers_spark.__main__ import main
+    from ee_outliers_spark.sources.results import OutlierStore
 
-    root = tmp_path_factory.mktemp("wm")
-    in_dir, out_dir, ckpt = (str(root / d) for d in ("in", "out", "ck"))
-    os.makedirs(in_dir)
-    schema = "ts timestamp, event_type string"
-    T = dt.datetime(2024, 1, 1)
+    root = tmp_path_factory.mktemp("cli_daemon")
+    common, append_rest = _cli_table(documents, root)
+    real_sleep, waits = time.sleep, []
 
-    def h(hh, mm):  # event at hh:mm
-        return (T + dt.timedelta(hours=hh, minutes=mm), "click")
+    def sleep(secs):
+        if threading.current_thread() is not threading.main_thread():
+            return real_sleep(secs)
+        waits.append(secs)
+        if len(waits) == 2:  # the daemon's wait before its second tick
+            append_rest()
 
-    # batch 1: fills 10:00 and 11:00 windows; 12:10 advances the
-    # watermark to 11:40 → only the 10:00-11:00 window finalizes
-    spark.createDataFrame(
-        [h(10, 5), h(10, 20), h(11, 15), h(12, 10)], schema
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_window_counts(spark, in_dir, out_dir, ckpt, schema,
-                            watermark="30 minutes")
-    first = {(r["window_start"].hour, r["n"])
-             for r in spark.read.parquet(out_dir).collect()}
-    assert first == {(10, 2)}
-
-    # batch 2 (restart, same checkpoint): 10:30 is behind the watermark →
-    # dropped; 11:45 is an in-watermark straggler → counts into 11:00;
-    # 14:00 advances the watermark past both open windows
-    spark.createDataFrame(
-        [h(10, 30), h(11, 45), h(14, 0)], schema
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_window_counts(spark, in_dir, out_dir, ckpt, schema,
-                            watermark="30 minutes")
-    rows = {(r["window_start"].hour, r["n"])
-            for r in spark.read.parquet(out_dir).collect()}
-    assert rows == {(10, 2), (11, 2), (12, 1)}
-
-
-def test_streaming_first_seen_stateful_across_restarts(
-        spark, tmp_path_factory):
-    """applyInPandasWithState sudden-appearance: batch 1 flags every
-    (aggregator, target) once with its earliest ts; after a restart the
-    keyed state store still knows the seen set, so batch 2 flags ONLY the
-    genuinely new pairs — the same target under a different aggregator is
-    its own first appearance."""
-    import datetime as dt
-
-    from ee_outliers_spark.streaming.daemon import streaming_first_seen
-
-    root = tmp_path_factory.mktemp("fs")
-    in_dir, out_dir, ckpt = (str(root / d) for d in ("in", "out", "ck"))
-    os.makedirs(in_dir)
-    schema = "ts timestamp, aggregator string, target string"
-    T = dt.datetime(2024, 1, 1)
-
-    def e(mins, agg, tgt):
-        return (T + dt.timedelta(minutes=mins), agg, tgt)
-
-    spark.createDataFrame(
-        [e(5, "hostA", "proc1"), e(3, "hostA", "proc1"),
-         e(7, "hostA", "proc2"), e(9, "hostB", "proc1")], schema
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_first_seen(spark, in_dir, out_dir, ckpt, schema)
-    got = {(r["aggregator"], r["target"], r["first_ts"].minute)
-           for r in spark.read.parquet(out_dir).collect()}
-    assert got == {("hostA", "proc1", 3), ("hostA", "proc2", 7),
-                   ("hostB", "proc1", 9)}
-
-    # restart: old pairs are remembered, only the new ones emit
-    spark.createDataFrame(
-        [e(20, "hostA", "proc1"), e(22, "hostA", "proc3"),
-         e(25, "hostB", "proc2")], schema
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_first_seen(spark, in_dir, out_dir, ckpt, schema)
-    got2 = {(r["aggregator"], r["target"], r["first_ts"].minute)
-            for r in spark.read.parquet(out_dir).collect()}
-    assert got2 == got | {("hostA", "proc3", 22), ("hostB", "proc2", 25)}
+    monkeypatch.setattr(time, "sleep", sleep)
+    store = str(root / "store")
+    main(["daemon", *common, "--index", str(root / "index"),
+          "--results", store, "--schedule", "* * * * *", "--max-ticks", "2"],
+         spark=spark)
+    monkeypatch.setattr(time, "sleep", real_sleep)
+    assert len(waits) == 2
+    got = {r["model_name"]: r["count"] for r in
+           OutlierStore(spark, store).read().groupBy("model_name").count()
+           .collect()}
+    assert got == _per_model(main(["interactive", *common], spark=spark))
 
 
 @pytest.mark.parametrize("driver_merge", [True, False])

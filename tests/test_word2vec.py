@@ -60,85 +60,6 @@ def test_text_scores_match_oracle(spark, texts_df):
     assert all(0.0 < want[i] <= 1.0 for i in want)
 
 
-def test_trigger_score_variants_match_oracle(spark, texts_df):
-    """A13 variants: center/context/total/mean per-text scores (arithmetic
-    means for a transparent oracle)."""
-    from collections import defaultdict
-
-    from ee_outliers_spark.operators.word2vec import word2vec_scores
-
-    toks = {i: tokenize_py(t) for i, t in TEXTS.items()}
-    raw = []  # (text, i, j, center, ctx)
-    for i, ts in toks.items():
-        for a in range(len(ts)):
-            for b in range(len(ts)):
-                if a != b and abs(a - b) <= WINDOW:
-                    raw.append((i, a, b, ts[a], ts[b]))
-    cnt_pair = Counter((c, x) for _, _, _, c, x in raw)
-    cnt_center = Counter(c for _, _, _, c, _ in raw)
-    p = {k: cnt_pair[k] / cnt_center[k[0]] for k in cnt_pair}
-
-    def occ_scores(text):
-        cen, ctx = defaultdict(list), defaultdict(list)
-        for i, a, b, c, x in raw:
-            if i != text:
-                continue
-            cen[a].append(p[(c, x)])
-            ctx[b].append(p[(c, x)])
-        out = {}
-        for pos in set(cen) | set(ctx):
-            cs = sum(cen[pos]) / len(cen[pos]) if cen[pos] else None
-            xs = sum(ctx[pos]) / len(ctx[pos]) if ctx[pos] else None
-            tot = ((cs + xs) / 2 if cs is not None and xs is not None
-                   else (cs if xs is None else xs))
-            out[pos] = (cs, xs, tot)
-        return out
-
-    for variant, pick in (("center", 0), ("context", 1), ("total", 2)):
-        got = {
-            r["text_id"]: r["score"]
-            for r in word2vec_scores(
-                texts_df, ["grp"], "tid", "text", window=WINDOW,
-                trigger_score=variant, use_geo_mean=False,
-            ).collect()
-        }
-        for t in TEXTS:
-            vals = [v[pick] for v in occ_scores(t).values() if v[pick] is not None]
-            want = sum(vals) / len(vals)
-            assert math.isclose(got[t], want, rel_tol=1e-9), (variant, t)
-
-    got_mean = {
-        r["text_id"]: r["score"]
-        for r in word2vec_scores(
-            texts_df, ["grp"], "tid", "text", window=WINDOW,
-            trigger_score="mean", use_geo_mean=False,
-        ).collect()
-    }
-    for t in TEXTS:
-        vals = [p[(c, x)] for i, _, _, c, x in raw if i == t]
-        assert math.isclose(got_mean[t], sum(vals) / len(vals), rel_tol=1e-9)
-
-
-def test_word_focus_outliers(spark, texts_df):
-    from ee_outliers_spark.operators.word2vec import word_level_outliers
-
-    out = word_level_outliers(
-        texts_df, ["grp"], "tid", "text",
-        trigger_method="pct_of_avg_value", trigger_sensitivity=99.0,
-        trigger_on="low",
-    )
-    rows = out.collect()
-    # flagged occurrences are word-level: carry (text_id, pos, word, score)
-    assert {"text_id", "pos", "word", "score"} <= set(out.columns)
-    assert rows
-    for r in rows:
-        assert r["score"] < r["decision_frontier"]
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        word_level_outliers(texts_df, ["grp"], "tid", "text",
-                            trigger_score="mean")
-
-
 def test_skipgram_pairs_linear_on_long_doc(spark):
     """Skip-gram generation is offset-explode (2w rows per token joined on
     position), not a len² self-join: on a 2000-token document the pair count
