@@ -97,8 +97,10 @@ def segment_frame(seg_id: int, doc_ids_sorted: np.ndarray, dls_sorted: np.ndarra
                   tf: pd.DataFrame, elapsed: float,
                   field_sidecars: dict | None = None) -> pd.DataFrame:
     """Assemble one segment's output rows from docID-sorted doc lengths and a
-    (term, doc_id, tf) frame sorted by (term, doc_id). Shared by the build
-    kernel and the LSM merge.
+    (term, doc_id, tf) frame sorted by (term, doc_id): the encoder of the
+    plain-Python inversion that the kernel oracle tests compare the build
+    kernel and the LSM merge against (both call ``_assemble_segment`` on
+    flat arrays directly).
 
     ``field_sidecars`` maps a per-field sidecar term (``"title:"`` — the
     empty-token form no real dictionary entry can take, tokens being
@@ -624,6 +626,44 @@ def run_segment_kernel(spark: SparkSession, paths: IndexPaths, stats: dict,
                        ).mapInPandas(segment_kernel, schema)
 
 
+#: the bookkeeping columns of the sidecar rows (doclen: term NULL; per-field
+#: norms: term "field:") — manifest, stats totals and per-field stats
+SIDECAR_COLUMNS = ("term", "n_docs", "sum_dl", "n_postings", "df_local",
+                   "build_secs")
+
+
+def read_segment_rows(paths: IndexPaths, seg_ids: list[int],
+                      sidecars: bool = True):
+    """Rows of the ``seg_id=K/`` directories ``seg_ids`` as one Arrow table
+    with a leading ``seg_id`` column, read on the driver with pyarrow and
+    ``segment_arrow_schema()`` (the reader of ``run_segment_kernel``), so
+    no Spark job runs. ``sidecars`` selects the sidecar rows with
+    ``SIDECAR_COLUMNS``; otherwise the dictionary's (term, df_local) rows.
+    An id without a directory (a batch whose modulo left it empty) has no
+    rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    term = ds.field("term")
+    side = term.is_null() | pc.ends_with(term, ":")
+    flt, cols = ((side, list(SIDECAR_COLUMNS)) if sidecars
+                 else (~side, ["term", "df_local"]))
+    schema = segment_arrow_schema()
+    tables = []
+    for s in seg_ids:
+        seg_dir = os.path.join(paths.segments, f"seg_id={int(s)}")
+        if os.path.isdir(seg_dir):
+            t = ds.dataset(seg_dir, schema=schema, format="parquet").to_table(
+                columns=cols, filter=flt)
+            tables.append(t.add_column(
+                0, "seg_id", pa.array([int(s)] * len(t), pa.int32())))
+    if not tables:
+        return pa.schema([("seg_id", pa.int32())]
+                         + [schema.field(c) for c in cols]).empty_table()
+    return pa.concat_tables(tables)
+
+
 def refresh_stats_and_termstats(spark: SparkSession, paths: IndexPaths,
                                 num_segments: int | None = None,
                                 segs: DataFrame | None = None,
@@ -711,58 +751,38 @@ def refresh_stats_and_termstats(spark: SparkSession, paths: IndexPaths,
 
 
 def collect_sidecar_rows(segs: DataFrame) -> list:
-    """ONE job collecting every per-segment bookkeeping row (the doclen
-    sidecar: term NULL; the per-field norm sidecars: term "field:"). The
-    manifest, stats.json totals and per-field stats are all derived from
-    these num_segments × (1 + n_fields) rows driver-side, instead of one
-    scan-job each over the (cached, blob-carrying) segment frame — 3 small
-    post-kernel jobs → 1 on the build critical path (guide §5: the driver
-    should schedule almost nothing per build beyond the kernel itself)."""
+    """ONE job collecting the sidecar rows (``SIDECAR_COLUMNS``) of the
+    build's persisted segment frame. The manifest, stats.json totals and
+    per-field stats are all derived from these num_segments ×
+    (1 + n_fields) rows driver-side, instead of one scan-job each over the
+    (cached, blob-carrying) frame. Appends and merges, whose segments are
+    only on disk, read the same rows with ``read_segment_rows`` instead
+    (no job)."""
     return (
         segs.where(F.col("term").isNull() | F.col("term").endswith(":"))
-        .select("seg_id", "term", "n_docs", "sum_dl", "n_postings",
-                "df_local", "build_secs")
+        .select("seg_id", *SIDECAR_COLUMNS)
         .collect()
     )
 
 
-def write_manifest(spark: SparkSession, paths: IndexPaths, seg_ids: list[int],
-                   lineage: dict, wall: float,
-                   segs: DataFrame | None = None,
-                   sidecar_rows: list | None = None) -> None:
-    if sidecar_rows is not None:
-        ids = {int(s) for s in seg_ids}
-        seg_stats = [
-            {"seg_id": r["seg_id"], "postings": r["n_postings"],
-             "terms": r["df_local"], "build_secs": r["build_secs"]}
-            for r in sidecar_rows
-            if r["term"] is None and int(r["seg_id"]) in ids
-        ]
-    else:
-        if segs is None:
-            segs = spark.read.schema(SEGMENT_SCHEMA).parquet(paths.segments)
-        # sidecar rows carry the per-segment totals (emitted by the kernel):
-        # 1 row per segment, columnar-pruned scan — no full-table aggregation
-        seg_stats = (
-            segs
-            .where(F.col("seg_id").isin(seg_ids) & F.col("term").isNull())
-            .select(
-                "seg_id",
-                F.col("n_postings").alias("postings"),
-                F.col("df_local").alias("terms"),
-                "build_secs",
-            )
-            .collect()
-        )
+def write_manifest(paths: IndexPaths, lineage: dict, wall: float,
+                   sidecar_rows: list) -> None:
+    """Append one manifest line per segment of one batch, from the batch's
+    doclen sidecar rows (term NULL: the segment's postings and terms
+    totals). The batch's ``input_files`` go on its first line only, so a
+    build of S segments over F files writes each path once, not S times."""
+    rest = {k: v for k, v in lineage.items() if k != "input_files"}
+    rows = [r for r in sidecar_rows if r["term"] is None]
     with open(paths.manifest, "a") as fh:
-        for r in seg_stats:
+        for i, r in enumerate(rows):
             fh.write(json.dumps({
                 "seg_id": int(r["seg_id"]),
-                "postings": int(r["postings"]),
-                "terms": int(r["terms"]),
+                "postings": int(r["n_postings"]),
+                "terms": int(r["df_local"]),
                 "build_secs": float(r["build_secs"]),
-                "postings_per_sec": float(r["postings"]) / max(r["build_secs"], 1e-9),
-                "lineage": lineage,
+                "postings_per_sec": (float(r["n_postings"])
+                                     / max(r["build_secs"], 1e-9)),
+                "lineage": lineage if i == 0 else rest,
                 "wall_secs_batch": wall,
             }) + "\n")
 
@@ -777,19 +797,18 @@ DRIVER_MERGE_MAX_BYTES = 32 * 1024 * 1024
 
 def incremental_append_refresh(spark: SparkSession, paths: IndexPaths,
                                new_ids: list[int],
-                               sidecar_rows: list | None = None) -> bool:
+                               sidecar_rows: list) -> bool:
     """Append-only commit-point refresh: fold ONE new batch's segment
     totals and term dfs into the previous stats.json / termstats.parquet
     instead of re-aggregating every live segment — O(batch + vocabulary)
-    per append, not O(index). The previous full refresh re-scanned ALL live
-    segments' term rows per append batch (the round-7 "Not yet optimized"
-    item); with the exact integer totals now stored in stats.json
-    ("sum_dl", per-field too), the fold is value-identical to the full
-    recompute (integer sums are associative; per-term df sums over
-    old-termstats ∪ new-batch rows equal the all-segments sums). The new
-    termstats is written to a sibling tmp dir and swapped in with two
-    renames, so a crash never leaves a truncated table — stats.json (the
-    commit point) flips atomically afterwards, as always.
+    per append, not O(index). With the exact integer totals stored in
+    stats.json ("sum_dl", per-field too), the fold is value-identical to
+    the full recompute (integer sums are associative; per-term df sums over
+    old-termstats ∪ new-batch rows equal the all-segments sums).
+    ``sidecar_rows`` are the batch's sidecar rows (``read_segment_rows``).
+    The new termstats is written to a sibling tmp dir and swapped in with
+    two renames, so a crash never leaves a truncated table — stats.json
+    (the commit point) flips atomically afterwards, as always.
 
     Returns False (no writes) when the previous commit predates the stored
     totals or termstats is missing — callers fall back to the full
@@ -800,10 +819,6 @@ def incremental_append_refresh(spark: SparkSession, paths: IndexPaths,
     fs_prev = prev.get("field_stats") or {}
     if any("sum_dl" not in v for v in fs_prev.values()):
         return False
-    new_segs = spark.read.schema(SEGMENT_SCHEMA).parquet(
-        paths.segments).where(F.col("seg_id").isin([int(s) for s in new_ids]))
-    if sidecar_rows is None:
-        sidecar_rows = collect_sidecar_rows(new_segs)
     n_new = sum(int(r["n_docs"]) for r in sidecar_rows if r["term"] is None)
     s_new = sum(int(r["sum_dl"]) for r in sidecar_rows if r["term"] is None)
     stats = dict(prev)
@@ -831,22 +846,18 @@ def incremental_append_refresh(spark: SparkSession, paths: IndexPaths,
         stats["live_segments"] = sorted(
             {int(s) for s in live} | {int(s) for s in new_ids})
     # termstats merge. The batch's dictionary row count is known from the
-    # already-collected sidecars (Σ df_local over the new segments' doclen
-    # rows), so a SMALL batch against a SMALL dictionary folds entirely
-    # driver-side: one pruned collect of the new (term, df) rows + a
-    # pyarrow read-merge-write — no distributed aggregation job, no
-    # Spark parquet-write job, the right cost for streaming many tiny
-    # batches (a Lucene-style in-process small-segment merge). A big batch
-    # or a big dictionary keeps the distributed union-aggregate.
+    # sidecars (Σ df_local over the new segments' doclen rows), so a SMALL
+    # batch against a SMALL dictionary folds entirely on the driver: a
+    # pyarrow read of the new (term, df) rows (``read_segment_rows``) and a
+    # read-merge-write of termstats — no Spark job, the right cost for
+    # streaming many tiny batches (a Lucene-style in-process small-segment
+    # merge). A big batch or a big dictionary keeps the distributed
+    # union-aggregate.
     n_term_rows = sum(int(r["df_local"]) for r in sidecar_rows
-                     if r["term"] is None)
+                      if r["term"] is None)
     ts_bytes = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _, fs in os.walk(paths.termstats) for f in fs)
-    new_ts = (
-        new_segs.where(F.col("term").isNotNull()
-                       & ~F.col("term").endswith(":"))
-        .select("term", F.col("df_local").cast("long").alias("df")))
     tmp = paths.termstats + ".tmp"
     old = paths.termstats + ".old"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -855,25 +866,26 @@ def incremental_append_refresh(spark: SparkSession, paths: IndexPaths,
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        adds: dict[str, int] = {}
-        for r in new_ts.collect():
-            adds[r["term"]] = adds.get(r["term"], 0) + int(r["df"])
-        files = termstats_files(paths)
-        olddf = (pd.concat([pq.read_table(f).to_pandas() for f in files],
-                           ignore_index=True)
-                 if files else pd.DataFrame({"term": [], "df": []}))
-        dfs = dict(zip(olddf["term"], olddf["df"].astype("int64")))
-        for t, d in adds.items():
-            dfs[t] = int(dfs.get(t, 0)) + d
-        out = pd.DataFrame({"term": list(dfs), "df": list(dfs.values())})
-        out["df"] = out["df"].astype("int64")
+        ts_schema = pa.schema([("term", pa.string()), ("df", pa.int64())])
+        new_ts = read_segment_rows(paths, new_ids, sidecars=False)
+        parts = [pq.read_table(f).select(["term", "df"]).cast(ts_schema)
+                 for f in termstats_files(paths)]
+        parts.append(pa.table([new_ts["term"], new_ts["df_local"]],
+                              schema=ts_schema))
+        merged = (pa.concat_tables(parts)
+                  .group_by("term", use_threads=False)
+                  .aggregate([("df", "sum")]))
         os.makedirs(tmp)
         pq.write_table(
-            pa.Table.from_pandas(out, preserve_index=False,
-                                 schema=pa.schema([("term", pa.string()),
-                                                   ("df", pa.int64())])),
+            pa.table([merged["term"], merged["df_sum"]], schema=ts_schema),
             os.path.join(tmp, "part-00000.parquet"))
     else:
+        new_ts = (
+            spark.read.schema(SEGMENT_SCHEMA).parquet(paths.segments)
+            .where(F.col("seg_id").isin([int(s) for s in new_ids])
+                   & F.col("term").isNotNull()
+                   & ~F.col("term").endswith(":"))
+            .select("term", F.col("df_local").cast("long").alias("df")))
         merged = (spark.read.schema(TERMSTATS_SCHEMA).parquet(paths.termstats)
                   .unionByName(new_ts)
                   .groupBy("term").agg(F.sum("df").cast("long").alias("df")))
@@ -993,13 +1005,12 @@ def build_segments(
         # can use it there)
         sidecar = collect_sidecar_rows(seg_df)
         write_manifest(
-            spark, paths, todo,
+            paths,
             {"source": df.schema.simpleString(), "doc_col": doc_col,
              "text_col": text_col, "num_segments": num_segments,
              "positions": positions, "analyzed_fields": analyzed_fields,
              "input_files": sorted(df.inputFiles())},
-            wall, segs=seg_df, sidecar_rows=sidecar,
-        )
+            wall, sidecar)
         if done:
             # resume: stats must also cover previously-completed segments
             refresh_stats_and_termstats(spark, paths, num_segments,

@@ -2,13 +2,16 @@
 physical execution named in SURVEY §4 / the north_star's "log-structured merge
 of partition-local segments into a global index").
 
-Segments are doc-disjoint, so merging ``fanin`` segments is, per term, a
-merge-sort of posting arrays followed by re-encoding (delta-gap varbyte +
-fresh block metadata, positions carried through), and a concat+sort of the
-doclen sidecars. One output segment is built inside one task via
-applyInPandas over the single segment table (term rows + sidecar rows travel
-together), so task memory = merged-segment size — the same bounded budget as
-the SPIMI build.
+Segments are doc-disjoint, so merging ``fanin`` segments is one sort of
+their postings by (term, doc) followed by re-encoding (delta-gap varbyte +
+fresh block metadata, positions carried through), and a sort of the doclen
+and per-field norm sidecars by doc. The kernel (``_merge_group``) is
+vectorized: each stream of the whole group decodes with one varbyte call,
+one segmented cumsum undoes the delta gaps, one lexsort orders the postings,
+and the build's encoder writes them — no per-term Python work. One output
+segment is built inside one task over the single segment table (term rows +
+sidecar rows travel together), so task memory = merged-segment size — the
+same bounded budget as the SPIMI build.
 
 Two policies:
 
@@ -19,13 +22,20 @@ Two policies:
                        directories. I/O per call = O(tier size), not
                        O(index) — at 10^12 docs this is the difference
                        between an LSM tree and rewriting the world on every
-                       compaction. Crash-safe: the new segment is written
-                       BEFORE the atomic commit flip; a crash on either side
-                       of the flip leaves a fully consistent index (readers
-                       read only live seg_ids — see
-                       build.run_segment_kernel).
+                       compaction.
 - ``merge_segments`` — full compaction (every ``fanin`` consecutive seg_ids
-                       → one), same commit-point protocol.
+                       → one), same commit-point protocol. A merge changes
+                       neither ``n_docs`` nor any df, so the flip touches
+                       only ``live_segments`` and termstats stay as they
+                       are.
+
+Crash safety: the new segment is written BEFORE the atomic commit flip, and
+readers read only live seg_ids (build.run_segment_kernel), so a crash on
+either side of the flip leaves a readable commit, the previous or the new
+one, plus directories that no reader opens. The new segment's manifest line
+is appended after the flip: a crash between the two leaves a live segment
+with no recorded size, which tier selection then counts as 0 postings (it
+is merged early, never lost).
 
 Why merge at all at scale: builds at 10^12 docs produce thousands of small
 segments (one per build partition / incremental batch); query cost has a
@@ -45,72 +55,79 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .build import (
-    SEGMENT_SCHEMA, IndexPaths, commit_stats, load_stats,
-    read_manifest, refresh_stats_and_termstats,
-    routed_segment_groupby, segment_dir_ids, segment_frame, write_manifest,
+    SEGMENT_SCHEMA, IndexPaths, _assemble_segment, commit_stats, load_stats,
+    read_manifest, read_segment_rows, routed_segment_groupby,
+    segment_dir_ids, write_manifest,
 )
-from .codec import decode_position_stream, varbyte_decode
+from .codec import varbyte_decode
+
+
+def _undo_gaps(blobs, counts: np.ndarray) -> np.ndarray:
+    """Absolute values of the concatenated varbyte ``blobs``, where blob i
+    holds ``counts[i]`` delta gaps whose first value is absolute (the doc
+    and position layouts): one decode and one segmented cumsum. The
+    arithmetic wraps in uint64, so the result is exact modulo 2^64, as a
+    per-blob cumsum is."""
+    cs = np.cumsum(varbyte_decode(b"".join(blobs)), dtype=np.uint64)
+    offsets = np.concatenate(([0], np.cumsum(counts, dtype=np.int64)))
+    base = np.concatenate((np.zeros(1, np.uint64), cs))[offsets[:-1]]
+    return (cs - np.repeat(base, counts)).astype(np.int64)
 
 
 def _merge_group(pdf: pd.DataFrame, new_seg: int) -> pd.DataFrame:
+    """One merged segment from the rows of doc-disjoint segments, with no
+    per-term Python loop: each stream (docs, tfs, positions) of all rows
+    decodes in one pass, one lexsort orders the postings by (term, doc),
+    and the build's encoder (``_assemble_segment``) re-encodes them.
+    Sidecar rows (doclen: term NULL; per-field norms: term "field:") merge
+    the same way, keyed by term."""
     t0 = time.monotonic()
-    dl_mask = pdf["term"].isna().to_numpy()
-    dl_rows = pdf[dl_mask]
-    notna = pdf[~dl_mask]
-    # per-field norm sidecars ("field:" rows) merge like the main doclen
-    # sidecar — doc-disjoint concat+sort — never like posting rows (they
-    # carry no positions/block metadata)
-    fmask = notna["term"].str.endswith(":")
-    field_sidecars = {}
-    for fterm, grp in notna[fmask].groupby("term", sort=True):
-        fdocs_parts, fdls_parts = [], []
-        for dblob, tblob in zip(grp["doc_blob"], grp["tf_blob"]):
-            fdocs_parts.append(
-                np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64))
-            fdls_parts.append(varbyte_decode(bytes(tblob)).astype(np.int64))
-        fdocs = np.concatenate(fdocs_parts)
-        fdls = np.concatenate(fdls_parts)
-        o = np.argsort(fdocs, kind="stable")
-        field_sidecars[fterm] = (fdocs[o], fdls[o])
-    term_rows = notna[~fmask]
-    # merged doclen sidecar (zip over columns — no per-row iterrows)
-    dl_docs_parts, dl_vals_parts = [], []
-    for dblob, tblob in zip(dl_rows["doc_blob"], dl_rows["tf_blob"]):
-        dl_docs_parts.append(
-            np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64))
-        dl_vals_parts.append(varbyte_decode(bytes(tblob)).astype(np.int64))
-    dl_docs = np.concatenate(dl_docs_parts) if dl_docs_parts else np.empty(0, np.int64)
-    dl_vals = np.concatenate(dl_vals_parts) if dl_vals_parts else np.empty(0, np.int64)
-    order = np.argsort(dl_docs, kind="stable")
-    dl_docs, dl_vals = dl_docs[order], dl_vals[order]
+    side = pdf["term"].str.endswith(":", na=True).to_numpy(bool)
 
-    # merged (term, doc_id, tf[, poss]) frame — doc-disjoint ⇒ concat+sort
-    positional = term_rows["pos_blob"].notna().any() if len(term_rows) else False
-    if positional and term_rows["pos_blob"].isna().any():
+    sc = pdf[side]
+    n_docs = sc["n_docs"].to_numpy(np.int64)
+    docs = _undo_gaps(sc["doc_blob"], n_docs)
+    vals = varbyte_decode(b"".join(sc["tf_blob"])).astype(np.int64)
+    keys, code = np.unique(sc["term"].fillna("").to_numpy(object),
+                           return_inverse=True)
+    code = np.repeat(code, n_docs)
+    o = np.lexsort((docs, code))
+    bounds = np.searchsorted(code[o], np.arange(len(keys) + 1))
+    sidecars = {k: (docs[o[lo:hi]], vals[o[lo:hi]])
+                for k, lo, hi in zip(keys, bounds[:-1], bounds[1:])}
+    empty = np.empty(0, np.int64)
+    dl_docs, dl_vals = sidecars.pop("", (empty, empty))
+
+    rows = pdf[~side]
+    has_pos = rows["pos_blob"].notna().to_numpy(bool)
+    positional = bool(has_pos.any())
+    if positional and not has_pos.all():
         # a merge group mixing positional and non-positional rows means the
         # index's stats 'positions' flag and segment contents diverged —
         # decoding None would TypeError mid-task; fail with the real cause
         raise ValueError(
             "merge group mixes positional and non-positional postings "
             "(corrupt index: segments disagree on positions)")
-    frames = []
-    for term, dblob, tblob, pblob in zip(
-            term_rows["term"], term_rows["doc_blob"],
-            term_rows["tf_blob"], term_rows["pos_blob"]):
-        docs = np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64)
-        tfs = varbyte_decode(bytes(tblob)).astype(np.int64)
-        cols = {"term": term, "doc_id": docs, "tf": tfs}
-        if positional:
-            flat, bounds = decode_position_stream(bytes(pblob), tfs)
-            cols["poss"] = np.split(flat, bounds[:-1])
-        frames.append(pd.DataFrame(cols))
-    base_cols = ["term", "doc_id", "tf"] + (["poss"] if positional else [])
-    tf = (
-        pd.concat(frames, ignore_index=True).sort_values(["term", "doc_id"])
-        if frames else pd.DataFrame({c: [] for c in base_cols})
-    )
-    return segment_frame(new_seg, dl_docs, dl_vals, tf, time.monotonic() - t0,
-                         field_sidecars=field_sidecars or None)
+    counts = rows["n_postings"].to_numpy(np.int64)
+    docs = _undo_gaps(rows["doc_blob"], counts)
+    tfs = varbyte_decode(b"".join(rows["tf_blob"])).astype(np.int64)
+    terms, code = np.unique(rows["term"].to_numpy(object),
+                            return_inverse=True)
+    code = np.repeat(code, counts)
+    o = np.lexsort((docs, code))  # doc-disjoint: (term, doc) is unique
+    tf_o = tfs[o]
+    flat_pos = None
+    if positional:
+        # each posting's positions restart absolute; move every posting's
+        # run to its place in the (term, doc) order
+        poss = _undo_gaps(rows["pos_blob"], tfs)
+        src = np.concatenate(([0], np.cumsum(tfs)[:-1]))[o]
+        dst = np.concatenate(([0], np.cumsum(tf_o)[:-1]))
+        flat_pos = poss[np.repeat(src - dst, tf_o)
+                        + np.arange(len(poss), dtype=np.int64)]
+    return _assemble_segment(new_seg, dl_docs, dl_vals, terms[code[o]],
+                             docs[o], tf_o, flat_pos, time.monotonic() - t0,
+                             field_sidecars=sidecars or None)
 
 
 def _gc_segments(paths: IndexPaths, dead: list[int]) -> None:
@@ -153,15 +170,15 @@ def merge_tier(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> int | 
     # tier → one segment: coalesce(1) so one task owns the whole merge group
     merged = segs.coalesce(1).mapInPandas(run, schema=SEGMENT_SCHEMA)
     merged.write.mode("append").partitionBy("seg_id").parquet(paths.segments)
+    sidecar = read_segment_rows(paths, [new_seg]).to_pylist()
 
     # atomic commit flip: new segment becomes visible at the same instant the
     # tier inputs retire — no reader ever sees duplicates or a gap
     new_live = sorted(set(live) - set(tier)) + [new_seg]
     stats["live_segments"] = sorted(new_live)
     commit_stats(paths, stats)
-    write_manifest(spark, paths, [new_seg],
-                   {"kind": "tier_merge", "merged": [int(s) for s in tier]},
-                   0.0)
+    write_manifest(paths, {"kind": "tier_merge",
+                           "merged": [int(s) for s in tier]}, 0.0, sidecar)
     _gc_segments(paths, tier)
     return new_seg
 
@@ -220,11 +237,10 @@ def merge_segments(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> No
         grouped, new_ids, col="new_seg").applyInPandas(
         run, schema=SEGMENT_SCHEMA)
     merged.write.mode("append").partitionBy("seg_id").parquet(paths.segments)
+    sidecar = read_segment_rows(paths, new_ids).to_pylist()
 
     stats["live_segments"] = new_ids
     commit_stats(paths, stats)
-    write_manifest(spark, paths, new_ids,
-                   {"kind": "full_merge", "merged": [int(s) for s in old_live]},
-                   0.0)
+    write_manifest(paths, {"kind": "full_merge",
+                           "merged": [int(s) for s in old_live]}, 0.0, sidecar)
     _gc_segments(paths, old_live)
-    refresh_stats_and_termstats(spark, paths)

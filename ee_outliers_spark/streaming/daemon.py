@@ -35,10 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.build import (
-    SEGMENT_SCHEMA, IndexPaths, collect_sidecar_rows,
-    incremental_append_refresh, load_stats, read_manifest,
-    refresh_stats_and_termstats, segment_dir_ids, segment_frames_df,
-    write_manifest,
+    IndexPaths, incremental_append_refresh, load_stats, read_manifest,
+    read_segment_rows, refresh_stats_and_termstats, segment_dir_ids,
+    segment_frames_df, write_manifest,
 )
 
 
@@ -61,9 +60,6 @@ def append_segments(
         F.col(text_col).alias("text"),
         *[F.col(f).cast("string").alias(f) for f in analyzed],
     )
-    if base.isEmpty():
-        return []
-
     positions = bool(stats.get("positions", False))  # match the base index
     base_seg = max(segment_dir_ids(paths), default=0) + 1
 
@@ -75,27 +71,25 @@ def append_segments(
     wall = time.monotonic() - t0
 
     new_ids = list(range(base_seg, base_seg + num_segments))
-    # ONE pruned job over the new batch's partition dirs feeds the manifest
-    # AND the incremental stats fold
-    new_segs = spark.read.schema(SEGMENT_SCHEMA).parquet(
-        paths.segments).where(F.col("seg_id").isin(new_ids))
-    sidecar = collect_sidecar_rows(new_segs)
-    write_manifest(spark, paths, new_ids,
-                   {"kind": "incremental_append", "base_seg": base_seg,
-                    "input_files": sorted(new_docs.inputFiles())}, wall,
-                   sidecar_rows=sidecar)
+    # the batch's sidecar rows, read on the driver, feed the manifest AND
+    # the incremental stats fold; an empty batch wrote no segment
+    # directory, so it has none and commits nothing
+    sidecar = read_segment_rows(paths, new_ids).to_pylist()
+    if not sidecar:
+        return []
+    write_manifest(paths, {"kind": "incremental_append", "base_seg": base_seg,
+                           "input_files": sorted(new_docs.inputFiles())},
+                   wall, sidecar)
     # stats (n_docs, avgdl) + termstats refresh — old segments stay valid
     # under avgdl drift because block metadata is avgdl-independent.
     # Incremental fold (O(batch + vocab), not O(index)); full recompute
     # only when the commit predates the stored integer totals.
-    if not incremental_append_refresh(spark, paths, new_ids,
-                                      sidecar_rows=sidecar):
+    if not incremental_append_refresh(spark, paths, new_ids, sidecar):
         live = stats.get("live_segments")
         new_live = (sorted(set(live) | set(new_ids))
                     if live is not None else None)
         refresh_stats_and_termstats(spark, paths, live=new_live)
-    done = {r["seg_id"] for r in read_manifest(paths)}
-    return sorted(s for s in new_ids if s in done)
+    return sorted(int(r["seg_id"]) for r in sidecar if r["term"] is None)
 
 
 def catch_up(

@@ -50,8 +50,8 @@ for r in range(reps):
     rec["parquet_write"] = round(time.monotonic() - t0, 3)
 
     t0 = time.monotonic()
-    B.write_manifest(spark, paths, list(range(num_segments)),
-                     {"probe": True}, 0.0, segs=seg_df)
+    B.write_manifest(paths, {"probe": True}, 0.0,
+                     B.collect_sidecar_rows(seg_df))
     rec["manifest"] = round(time.monotonic() - t0, 3)
 
     t0 = time.monotonic()

@@ -46,3 +46,24 @@ def documents(spark, sf_dir):
 def docs_dict(documents):
     rows = documents.select("doc_id", "text").collect()
     return {int(r["doc_id"]): r["text"] for r in rows}
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` calls ``fn()`` under a job group of its own and
+    returns ``(fn's result, the number of Spark jobs it ran)``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -601,68 +601,69 @@ def test_phrase_seg_match_vectorized_vs_perdoc(docs_dict):
     assert any_hits > 0
 
 
-def test_text_kernel_matches_python_oracle_segments(spark, documents):
-    """The build kernel (segment_frames_df → _text_segment_kernel) must
-    write the same segment bytes as a plain-Python inversion of the same
-    docs encoded by ``segment_frame`` — dictionary order, doc/tf/pos blobs,
-    block metadata and sidecars, every column but build_secs — for both
-    index shapes, with and without a per-field analyzed column. The oracle
-    shares only the encoder with the kernel (test_codec decodes that).
-    Zero-token docs (NULL, "", punctuation-only) ride along, and one
-    segment holds nothing else, so the kernel's no-token branch runs."""
+_N_SEG = 5
+
+
+def _oracle_docs(documents):
+    """(doc_id, text, title) rows over ``_N_SEG`` modulo segments, with
+    zero-token docs (NULL, "", punctuation-only) among real ones, and
+    segment ``_N_SEG - 1`` holding nothing else."""
+    docs = [(int(r["doc_id"]), r["text"], (r["text"] or "")[:40])
+            for r in documents.select("doc_id", "text").collect()
+            if int(r["doc_id"]) % _N_SEG != _N_SEG - 1]
+    top = max(d for d, _, _ in docs) + 1
+    top += _N_SEG - top % _N_SEG  # top ≡ 0 (mod _N_SEG)
+    empties = [None, "", " ,.;-- !! "]
+    # segment _N_SEG-1 holds only zero-token docs (text and title)
+    docs += [(top + _N_SEG * i + _N_SEG - 1, t, empties[(i + 1) % 3])
+             for i, t in enumerate(empties)]
+    # zero-token docs among real ones, one with a non-empty title
+    docs += [(top + _N_SEG * 10 + i, t, None) for i, t in enumerate(empties)]
+    docs.append((top + _N_SEG * 11, "", "Title Only, title!"))
+    return docs
+
+
+def _oracle_segment(seg_id, seg_docs, positional, fields):
+    """Segment ``seg_id`` of ``seg_docs`` by a plain-Python inversion,
+    encoded by ``segment_frame``."""
     import numpy as np
     import pandas as pd
 
-    from ee_outliers_spark.index.build import segment_frame, segment_frames_df
+    from ee_outliers_spark.index.build import segment_frame
     from ee_outliers_spark.tokenizer import tokenize_py
 
-    n_seg = 5
-    docs = [(int(r["doc_id"]), r["text"], (r["text"] or "")[:40])
-            for r in documents.select("doc_id", "text").collect()
-            if int(r["doc_id"]) % n_seg != n_seg - 1]
-    top = max(d for d, _, _ in docs) + 1
-    top += n_seg - top % n_seg  # top ≡ 0 (mod n_seg)
-    empties = [None, "", " ,.;-- !! "]
-    # segment n_seg-1 holds only zero-token docs (text and title)
-    docs += [(top + n_seg * i + n_seg - 1, t, empties[(i + 1) % 3])
-             for i, t in enumerate(empties)]
-    # zero-token docs among real ones, one with a non-empty title
-    docs += [(top + n_seg * 10 + i, t, None) for i, t in enumerate(empties)]
-    docs.append((top + n_seg * 11, "", "Title Only, title!"))
-    base = spark.createDataFrame(docs, "doc_id long, text string, title string")
+    seg_docs = sorted(seg_docs, key=lambda d: d[0])
+    doc_ids = np.array([d[0] for d in seg_docs], np.int64)
+    dls = np.array([len(tokenize_py(d[1])) for d in seg_docs], np.int64)
+    poss: dict = {}
+    sidecars = {}
+    for col, prefix in [(1, "")] + [(2, f + ":") for f in fields]:
+        flen = []
+        for d in seg_docs:
+            toks = tokenize_py(d[col])
+            flen.append(len(toks))
+            for i, t in enumerate(toks):
+                poss.setdefault((prefix + t, d[0]), []).append(i)
+        if prefix:
+            flen = np.array(flen, np.int64)
+            if flen.any():
+                sidecars[prefix] = (doc_ids[flen > 0], flen[flen > 0])
+    keys = sorted(poss)
+    tf = pd.DataFrame({
+        "term": pd.Series([k[0] for k in keys], dtype=object),
+        "doc_id": np.array([k[1] for k in keys], np.int64),
+        "tf": np.array([len(poss[k]) for k in keys], np.int64),
+    })
+    if positional:
+        tf["poss"] = pd.Series(
+            [np.array(poss[k], np.int64) for k in keys], dtype=object)
+    return segment_frame(seg_id, doc_ids, dls, tf, 0.0,
+                         field_sidecars=sidecars or None)
 
-    def oracle(positional, fields):
-        out = []
-        for seg in range(n_seg):
-            seg_docs = sorted(d for d in docs if d[0] % n_seg == seg)
-            doc_ids = np.array([d[0] for d in seg_docs], np.int64)
-            dls = np.array([len(tokenize_py(d[1])) for d in seg_docs],
-                           np.int64)
-            poss: dict = {}
-            sidecars = {}
-            for col, prefix in [(1, "")] + [(2, f + ":") for f in fields]:
-                flen = []
-                for d in seg_docs:
-                    toks = tokenize_py(d[col])
-                    flen.append(len(toks))
-                    for i, t in enumerate(toks):
-                        poss.setdefault((prefix + t, d[0]), []).append(i)
-                if prefix:
-                    flen = np.array(flen, np.int64)
-                    if flen.any():
-                        sidecars[prefix] = (doc_ids[flen > 0], flen[flen > 0])
-            keys = sorted(poss)
-            tf = pd.DataFrame({
-                "term": pd.Series([k[0] for k in keys], dtype=object),
-                "doc_id": np.array([k[1] for k in keys], np.int64),
-                "tf": np.array([len(poss[k]) for k in keys], np.int64),
-            })
-            if positional:
-                tf["poss"] = pd.Series(
-                    [np.array(poss[k], np.int64) for k in keys], dtype=object)
-            out.append(segment_frame(seg, doc_ids, dls, tf, 0.0,
-                                     field_sidecars=sidecars or None))
-        return pd.concat(out, ignore_index=True)
+
+def _key_rows(pdf):
+    """(seg_id, term) → every column but build_secs, in comparable form."""
+    import numpy as np
 
     def norm(v):
         if isinstance(v, (bytes, bytearray)):
@@ -673,22 +674,84 @@ def test_text_kernel_matches_python_oracle_segments(spark, documents):
             return None
         return int(v) if isinstance(v, (float, np.integer)) else v
 
-    def key_rows(pdf):
-        cols = [c for c in pdf.columns if c != "build_secs"]
-        return {(int(r["seg_id"]), r["term"]): tuple(norm(r[c]) for c in cols)
-                for _, r in pdf.iterrows()}
+    cols = [c for c in pdf.columns if c != "build_secs"]
+    return {(int(r["seg_id"]), r["term"]): tuple(norm(r[c]) for c in cols)
+            for _, r in pdf.iterrows()}
 
+
+def test_text_kernel_matches_python_oracle_segments(spark, documents):
+    """The build kernel (segment_frames_df → _text_segment_kernel) must
+    write the same segment bytes as a plain-Python inversion of the same
+    docs encoded by ``segment_frame`` — dictionary order, doc/tf/pos blobs,
+    block metadata and sidecars, every column but build_secs — for both
+    index shapes, with and without a per-field analyzed column. The oracle
+    shares only the encoder with the kernel (test_codec decodes that).
+    Zero-token docs (NULL, "", punctuation-only) ride along, and one
+    segment holds nothing else, so the kernel's no-token branch runs."""
+    import pandas as pd
+
+    from ee_outliers_spark.index.build import segment_frames_df
+
+    docs = _oracle_docs(documents)
+    base = spark.createDataFrame(docs, "doc_id long, text string, title string")
     for positional in (True, False):
         for fields in ((), ("title",)):
-            got = key_rows(segment_frames_df(
-                base, n_seg, positional, analyzed_fields=fields).toPandas())
-            want = key_rows(oracle(positional, fields))
+            got = _key_rows(segment_frames_df(
+                base, _N_SEG, positional, analyzed_fields=fields).toPandas())
+            want = _key_rows(pd.concat(
+                [_oracle_segment(seg, [d for d in docs if d[0] % _N_SEG == seg],
+                                 positional, fields)
+                 for seg in range(_N_SEG)], ignore_index=True))
             assert set(got) == set(want), (positional, fields)
             for k in want:
                 assert got[k] == want[k], (positional, fields, k)
             # the zero-token segment: only its doclen sidecar row
-            assert [k for k in got if k[0] == n_seg - 1] == [
-                (n_seg - 1, None)]
+            assert [k for k in got if k[0] == _N_SEG - 1] == [
+                (_N_SEG - 1, None)]
+
+
+@pytest.mark.parametrize("positional", [True, False])
+@pytest.mark.parametrize("fields", [(), ("title",)])
+def test_merge_kernel_matches_python_oracle_segment(spark, documents,
+                                                    positional, fields):
+    """The LSM merge kernel (``_merge_group``) over segments the build
+    kernel wrote must equal the plain-Python inversion of the union of
+    their docs, encoded by ``segment_frame`` — every column but
+    build_secs. The groups merge two segments, the segment of zero-token
+    docs alone (its doclen row is all it has) and with another, and all."""
+    from ee_outliers_spark.index.build import segment_frames_df
+    from ee_outliers_spark.index.merge import _merge_group
+
+    docs = _oracle_docs(documents)
+    built = segment_frames_df(
+        spark.createDataFrame(docs, "doc_id long, text string, title string"),
+        _N_SEG, positional, analyzed_fields=fields).toPandas()
+    last = _N_SEG - 1
+    for group in ([0, 1], [last], [2, last], list(range(_N_SEG))):
+        got = _key_rows(_merge_group(
+            built[built["seg_id"].isin(group)].reset_index(drop=True), 99))
+        want = _key_rows(_oracle_segment(
+            99, [d for d in docs if d[0] % _N_SEG in group],
+            positional, fields))
+        assert set(got) == set(want), group
+        for k in want:
+            assert got[k] == want[k], (group, k)
+
+
+def test_merge_kernel_rejects_mixed_positions():
+    """A merge group whose segments disagree on positions is a corrupt
+    index: the kernel raises ``ValueError`` naming it, not a TypeError
+    mid-decode."""
+    import pandas as pd
+
+    from ee_outliers_spark.index.merge import _merge_group
+
+    group = pd.concat([
+        _oracle_segment(0, [(0, "red fox", None)], True, ()),
+        _oracle_segment(1, [(1, "red wolf", None)], False, ()),
+    ], ignore_index=True)
+    with pytest.raises(ValueError, match="positional and non-positional"):
+        _merge_group(group, 2)
 
 
 def test_segment_routing_is_one_task_per_segment(spark, documents):

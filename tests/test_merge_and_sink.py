@@ -4,7 +4,7 @@ import datetime as dt
 import math
 import os
 
-from ee_outliers_spark.index.build import build_segments
+from ee_outliers_spark.index.build import build_segments, load_stats
 from ee_outliers_spark.index.merge import merge_segments
 from ee_outliers_spark.index.query import bm25_topk_wand
 from ee_outliers_spark.oracle import OracleIndex
@@ -12,11 +12,25 @@ from ee_outliers_spark.sources.results import OutlierStore
 
 
 def test_merge_preserves_rank_identity(spark, documents, docs_dict, tmp_path_factory):
+    """Full compaction keeps BM25 ranks, and its commit changes only
+    ``live_segments``: a doc-disjoint merge moves neither ``n_docs`` nor any
+    df, so stats.json keeps every other value and termstats its bytes."""
     out = str(tmp_path_factory.mktemp("index_merge"))
     paths = build_segments(spark, documents, "doc_id", "text", out, num_segments=8)
+
+    def termstats():
+        return {os.path.relpath(os.path.join(d, f), paths.termstats):
+                open(os.path.join(d, f), "rb").read()
+                for d, _, fs in os.walk(paths.termstats) for f in fs}
+
+    stats0, ts0 = load_stats(paths), termstats()
     merge_segments(spark, paths, fanin=4)
     segs = spark.read.parquet(paths.segments)
     assert segs.select("seg_id").distinct().count() == 2
+    stats1 = load_stats(paths)
+    assert stats1.pop("live_segments") != stats0.pop("live_segments")
+    assert stats1 == stats0
+    assert termstats() == ts0
     oracle = OracleIndex(docs_dict)
     for terms, mode in [(["customer", "window"], "or"), (["the", "vector"], "and")]:
         got = bm25_topk_wand(spark, paths, terms, 15, mode).collect()

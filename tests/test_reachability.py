@@ -47,6 +47,8 @@ ORACLES = {
         "reference gap encoder for the codec round-trip tests",
     ("index.codec", "delta_decode"):
         "reference gap decoder for the codec round-trip tests",
+    ("index.build", "segment_frame"):
+        "plain-Python inversion encoder for the kernel oracle tests",
     ("index.codec", "encode_position_stream"):
         "reference position encoder for the positional codec tests",
     ("index.query", "_wand_segment"):

@@ -2,6 +2,7 @@
 corpus (and avgdl) drifts; catch_up indexes exactly the table files the
 index has not recorded, so the CLI never answers from a stale index."""
 
+import json
 import math
 import os
 
@@ -39,7 +40,8 @@ def test_append_preserves_rank_identity(spark, documents, tmp_path_factory):
 def test_catch_up_indexes_each_table_file_once(spark, documents,
                                               tmp_path_factory):
     """catch_up appends the table's unrecorded files; a second call with no
-    new file appends no segment and writes no manifest line."""
+    new file appends no segment and writes no manifest line. The manifest
+    lists each file once, although the 4-segment build wrote 4 lines."""
     root = tmp_path_factory.mktemp("catch_up")
     table = str(root / "documents.parquet")
     first = documents.where(F.col("doc_id") < 250)
@@ -51,6 +53,11 @@ def test_catch_up_indexes_each_table_file_once(spark, documents,
 
     assert catch_up(spark, spark.read.parquet(table), paths)
     manifest = open(paths.manifest).read()
+    # each batch records its files once, not once per segment line
+    files = spark.read.parquet(table).inputFiles()
+    assert len(files) == 2
+    for f in files:
+        assert manifest.count(json.dumps(f)) == 1, f
     seg_dirs = os.listdir(paths.segments)
     assert catch_up(spark, spark.read.parquet(table), paths) == []
     assert open(paths.manifest).read() == manifest
@@ -65,6 +72,50 @@ def test_catch_up_indexes_each_table_file_once(spark, documents,
     segs = spark.read.parquet(paths.segments)
     n = segs.where(F.col("term").isNull()).agg(F.sum("n_docs")).collect()[0][0]
     assert n == len(full)
+
+
+def test_append_of_an_empty_batch_commits_nothing(spark, documents,
+                                                  tmp_path_factory):
+    """An empty batch writes no segment directory, so append_segments
+    returns [] with the manifest, stats.json and termstats untouched."""
+    root = tmp_path_factory.mktemp("empty_append")
+    paths = build_segments(spark, documents.where(F.col("doc_id") < 250),
+                           "doc_id", "text", str(root / "index"),
+                           num_segments=2)
+    before = [open(p, "rb").read() for p in (paths.manifest, paths.stats)]
+    seg_dirs = sorted(os.listdir(paths.segments))
+    ts = sorted(os.listdir(paths.termstats))
+    assert append_segments(spark, documents.where(F.lit(False)), paths) == []
+    assert [open(p, "rb").read() for p in (paths.manifest, paths.stats)] \
+        == before
+    assert sorted(os.listdir(paths.segments)) == seg_dirs
+    assert sorted(os.listdir(paths.termstats)) == ts
+
+
+def test_append_and_tier_merge_read_their_bookkeeping_on_the_driver(
+        spark, documents, tmp_path_factory, count_jobs):
+    """The write path of a daemon tick: appending a one-segment batch runs
+    only the segment write's jobs (2), and a tier merge only the merge
+    write's (1); the manifest, stats and termstats bookkeeping read the new
+    segment directories with pyarrow on the driver."""
+    from ee_outliers_spark.index.build import load_stats, read_manifest
+    from ee_outliers_spark.index.merge import merge_tier
+
+    root = tmp_path_factory.mktemp("append_jobs")
+    paths = build_segments(spark, documents.where(F.col("doc_id") < 250),
+                           "doc_id", "text", str(root / "index"),
+                           num_segments=2)
+    batch = documents.where(F.col("doc_id") >= 250)
+    new_ids, jobs = count_jobs(
+        lambda: append_segments(spark, batch, paths, num_segments=1))
+    assert jobs == 2
+    assert load_stats(paths)["live_segments"] == [0, 1] + new_ids
+    new_seg, jobs = count_jobs(lambda: merge_tier(spark, paths, fanin=2))
+    assert jobs == 1
+    assert read_manifest(paths)[-1]["seg_id"] == new_seg
+    full = {int(r["doc_id"]): r["text"]
+            for r in documents.select("doc_id", "text").collect()}
+    _check(spark, paths, full, ["customer", "window"], "or")
 
 
 def test_catch_up_refuses_an_index_without_lineage(spark, documents,
